@@ -123,6 +123,7 @@ object EtlBench {
       FdrSource.load(spark, landing.toString).drop("raw")))
     val nClassified = classified.count()
     val t1 = System.nanoTime()
+    val cachePartitions = classified.rdd.getNumPartitions
     val routeSec = OcsfSink.fanOutTimed(classified, out.toString,
       "us-east-1", "123456789012", filesPerDay = filesPerDay)
     val t2 = System.nanoTime()
@@ -138,7 +139,7 @@ object EtlBench {
     val routes = routeSec.toSeq.sortBy(-_._2)
       .map { case (r, s) => s""""${OcsfSink.tableName(r)}":${jnum(s)}""" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"etl_events_per_sec","value":${jnum(nClassified / sec)},"events":$nClassified,"seconds":${jnum(sec)},"classify_sec":${jnum((t1 - t0) / 1e9)},"fanout_sec":${jnum((t2 - t1) / 1e9)},"routes":$routes,"codec":"${spark.conf.get("spark.sql.parquet.compression.codec", "snappy")}","files_per_day":$filesPerDay,"files":$nFiles}""")
+    println(s"""{"metric":"etl_events_per_sec","value":${jnum(nClassified / sec)},"events":$nClassified,"seconds":${jnum(sec)},"classify_sec":${jnum((t1 - t0) / 1e9)},"fanout_sec":${jnum((t2 - t1) / 1e9)},"cache_partitions":$cachePartitions,"routes":$routes,"codec":"${spark.conf.get("spark.sql.parquet.compression.codec", "snappy")}","files_per_day":$filesPerDay,"files":$nFiles}""")
     spark.stop()
   }
 }

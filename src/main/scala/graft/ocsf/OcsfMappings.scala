@@ -1,6 +1,6 @@
 package graft.ocsf
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The FDR-event → OCSF base-event mapping dimension.
@@ -8,9 +8,12 @@ import org.apache.spark.sql.functions._
   * Re-expresses the semantics of the reference's two mapping JSONs
   * (/root/reference/src/json/QFDR_OCSF_Mapping.json — 122 events;
   * /root/reference/src/json/mapped_qfdr_events_to_class.json — 12
-  * classes) as an in-code dimension table. In Spark this is a broadcast
-  * join against the event stream, not a per-row dict lookup
-  * (qopcfdr_stream_loader.py:150-214) or a 122-branch CASE.
+  * classes) as in-code data. Classify looks each event up in one
+  * literal map column ([[baseEventOf]]), the reference's per-row dict
+  * lookup (qopcfdr_stream_loader.py:150-214) kept inside the plan; a
+  * join against the [[dimension]] table would make Catalyst estimate
+  * the classified batch as the product of both sides, and the fan-out
+  * cache is sized from that estimate.
   *
   * Notes vs the reference data:
   *  - Event_ExternalApiEvent maps to HTTP Activity (4002) in the JSON
@@ -171,11 +174,21 @@ object OcsfMappings {
 
   val mappedEventNames: Set[String] = baseEvents.map(_.eventName).toSet
 
-  /** The mapping as a broadcast-ready dimension DataFrame. */
+  /** [[routeFor]] as a column expression. */
+  def routeOf(eventName: Column, className: Column): Column =
+    when(eventName === "Event_ExternalApiEvent", lit(ExtApiRoute)).otherwise(className)
+
+  /** The [[BaseEvent]] struct of an event name, null for an unmapped
+    * one: a lookup into a 122-entry literal map. It is a projection,
+    * so the plan's size estimate stays that of its input. */
+  def baseEventOf(eventName: Column): Column =
+    typedLit(baseEvents.map(e => e.eventName -> e).toMap).getItem(eventName)
+
+  /** The mapping as a DataFrame, one row per event with its route:
+    * the reference's mapping table, and the column contract of the
+    * classified relation (minus `eventName`). */
   def dimension(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    baseEvents.toDF()
-      .withColumn("route", when(col("eventName") === "Event_ExternalApiEvent",
-        lit(ExtApiRoute)).otherwise(col("className")))
+    baseEvents.toDF().withColumn("route", routeOf(col("eventName"), col("className")))
   }
 }

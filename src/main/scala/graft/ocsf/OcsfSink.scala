@@ -113,51 +113,64 @@ object OcsfSink {
   }
 
   /** Route-clustered layout for the fan-out cache: repartitions the
-    * classified relation on (route, salt) so each cached partition —
-    * and so each columnar cache batch — holds (nearly) one route.
-    * Every route write then filters `route === r` against the cache,
-    * and `InMemoryTableScan` prunes whole batches via its per-batch
-    * min/max stats: a 13-way fan-out decompresses ~1× the data instead
-    * of 13×. Measured (EtlAb, 1M events, median-of-3 interleaved
-    * arms): fan-out 19.6 s plain → 10.2 s clustered, total 22.5 →
-    * 13.4 s; the no-shuffle alternative (`sortWithinPartitions` +
-    * small cache batches) recovered only ~2.6 s of that.
+    * classified relation on (route, salt), then sorts each partition by
+    * route (local, no exchange), so each columnar cache batch holds
+    * (nearly) one route. Every route write then filters `route === r`
+    * against the cache, and `InMemoryTableScan` prunes whole batches
+    * via its per-batch min/max stats: a 13-way fan-out decompresses ~1×
+    * the data instead of 13×. Measured at 1M events, median-of-3
+    * interleaved arms (BASELINE.md r9): fan-out 19.6 s plain → 10.2 s
+    * clustered, total 22.5 → 13.4 s; the no-shuffle alternative
+    * (`sortWithinPartitions` + small cache batches) recovered only
+    * ~2.6 s of that.
     *
-    * `tasksPerRoute` salts the clustering so each route spans that
-    * many partitions (scan/normalize parallelism per route while the
-    * 13 route jobs run concurrently). The salt hashes the event id
-    * (falling back to the extapi timestamp key); rows where both are
-    * absent degrade to one partition for that route, never lost. One
-    * extra shuffle of the batch, repaid ~3× by the pruned rescans —
-    * at streaming cadence the batch is small and the shuffle is
-    * sub-second.
+    * The batch is spread over P partitions with salt range ⌈P / 13⌉.
+    * The salt hashes the event id (falling back to the extapi
+    * timestamp key); rows where both are absent degrade to one
+    * partition for that route, never lost. `InMemoryTableScan` prunes
+    * batches inside a task, never tasks, so every route job still
+    * launches one task per cache partition: P sets the fan-out's task
+    * count (13 × P scan tasks), and P must follow the batch's size.
     *
-    * The default (0) AUTO-SIZES tasksPerRoute from the input's plan
-    * stats, because what must stay bounded at scale is PARTITION SIZE,
-    * not partition count: a fixed 13×2 layout means each 4× corpus
-    * growth quadruples the rows per cached partition, and the
-    * cache-unroll of those fat serialized blocks is exactly where a
-    * 16M-event backfill blew the default heap (BASELINE.md r12 —
-    * stage-52 OOM at 615k rows/partition; the same corpus passes at
-    * 123k). ~8 MB of source bytes per task keeps a 1M-event batch at
-    * the measured-optimal 2 tasks/route and scales a backfill linearly,
-    * clamped to [2, 64] so a streaming micro-batch never shrinks below
-    * today's layout and a huge backfill never explodes the task
-    * count. */
+    * `tasksPerRoute` > 0 pins P = 13 × tasksPerRoute. The default (0)
+    * sizes P from the classified plan's size estimate
+    * ([[clusterPartitions]]): P = clamp(⌈estimate / 7.5 MB⌉, 1,
+    * 13 × 64). The estimate tracks the input: the classify is a map
+    * lookup, and the estimate is ~7.4× the landed gz bytes on
+    * EtlBench's corpus. What must stay bounded at scale is partition
+    * SIZE: the cache-unroll of fat serialized blocks is where a
+    * 16M-event backfill on a fixed 13 × 2 layout blew the default heap
+    * (BASELINE.md r12 — OOM at 615k rows/partition; the same corpus
+    * passes at 123k). EtlBench's 1M-event corpus (26 MB gz, ~192 MB
+    * estimated) lands at 26 partitions of ~38k rows, the 13 × 2 layout
+    * of the r9 A/B above; the rows per partition stay near that as the
+    * batch grows, up to the cap at ~32M events. A micro-batch of a few
+    * hundred lines estimates ~100 KB and caches as ONE partition: 13
+    * scan tasks per trigger. On a 4-vCPU VM (fdrbench
+    * `stream_catchup`, 64 objects per trigger) that halved the trigger
+    * time against the ~124 partitions a join-inflated estimate gave. */
   def routeClustered(classified: DataFrame, tasksPerRoute: Int = 0): DataFrame = {
-    require(tasksPerRoute >= 0, "tasksPerRoute must be >= 1 (0 = auto)")
-    val tpr =
-      if (tasksPerRoute > 0) tasksPerRoute
-      else {
-        val bytes = classified.queryExecution.optimizedPlan.stats.sizeInBytes
-        val perTask = BigInt(8L << 20) * OcsfMappings.routes.size
-        ((bytes / perTask) + 1).min(64).max(2).toInt
-      }
+    require(tasksPerRoute >= 0, "tasksPerRoute must be >= 0 (0 = auto)")
+    val nRoutes = OcsfMappings.routes.size
+    val partitions =
+      if (tasksPerRoute > 0) nRoutes * tasksPerRoute
+      else clusterPartitions(classified.queryExecution.optimizedPlan.stats.sizeInBytes, nRoutes)
     val salt = pmod(xxhash64(coalesce(col("fields").getItem("id"),
-      col("fields").getItem("UTCTimestamp"), lit(""))), lit(tpr))
-    classified.repartition(OcsfMappings.routes.size * tpr,
-      col("route"), salt)
+      col("fields").getItem("UTCTimestamp"), lit(""))),
+      lit((partitions + nRoutes - 1) / nRoutes))
+    classified.repartition(partitions, col("route"), salt)
+      .sortWithinPartitions(col("route"))
   }
+
+  /** Estimated classified bytes per fan-out cache partition. */
+  private val ClusterPartitionBytes: Long = 7500000L
+
+  /** The pure sizing behind [[routeClustered]]'s default (separated,
+    * like [[admittedRoutes]], so the policy is spec-pinnable): total
+    * cache partitions P = clamp(⌈estimate / 7.5 MB⌉, 1, routes × 64). */
+  private[ocsf] def clusterPartitions(estimate: BigInt, nRoutes: Int): Int =
+    ((estimate + ClusterPartitionBytes - 1) / ClusterPartitionBytes)
+      .min(BigInt(nRoutes) * 64).max(BigInt(1)).toInt
 
   /** Heap-proof persist for the fan-out cache: MEMORY_AND_DISK_SER,
     * never the `.cache()` default (MEMORY_AND_DISK, deserialized).

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{MapType, StringType}
 import graft.ocsf.OcsfMappings
@@ -47,14 +47,33 @@ object FdrSource {
       .filter(col("event_name").isNotNull)
 
   /** A3+A4 — keep only the 122 mapped event types and attach the OCSF
-    * base-event mapping + sink route via a broadcast join (the
-    * reference's mappedEvents filter + class routing,
-    * qopcfdr_stream_loader.py:129-214). Unmapped events are dropped
-    * (the reference logs-and-skips them). */
-  def mappedWithClass(spark: SparkSession, df: DataFrame): DataFrame =
-    df.join(broadcast(OcsfMappings.dimension(spark)),
-            col("event_name") === col("eventName"))
-      .drop("eventName")
+    * base-event columns + sink route (the reference's mappedEvents
+    * filter + class routing, qopcfdr_stream_loader.py:129-214), by one
+    * [[OcsfMappings.baseEventOf]] lookup per row. Unmapped events are
+    * dropped (the reference logs-and-skips them).
+    *
+    * A lookup, not a join against [[OcsfMappings.dimension]]: Catalyst
+    * estimates an inner join as the product of its sides, which made
+    * a 10 KB gz batch plan as ~600 MB and sized the fan-out cache to
+    * match. A filter and a projection keep the estimate that of the
+    * parsed input, and the batch has no exchange. Output: `df`'s
+    * columns, then the dimension's minus `eventName`, with the same
+    * types and nullability. */
+  def mappedWithClass(df: DataFrame): DataFrame = {
+    val base = "__graft_base_event"
+    val classCols = baseEventFields.map(f => col(base).getField(f).as(f)) :+
+      OcsfMappings.routeOf(col("event_name"), col(base).getField("className")).as("route")
+    df.withColumn(base, OcsfMappings.baseEventOf(col("event_name")))
+      .filter(col(base).isNotNull)
+      // never null past the filter; the unreachable fallback types the
+      // struct NOT NULL, so the dimension's NOT NULL ints stay NOT NULL
+      // (and the lookup, no longer cheap to repeat, runs once a row)
+      .withColumn(base, coalesce(col(base), typedLit(OcsfMappings.baseEvents.head)))
+      .select(df.columns.map(col).toSeq ++ classCols: _*)
+  }
+
+  private val baseEventFields: Seq[String] =
+    Encoders.product[OcsfMappings.BaseEvent].schema.fieldNames.toSeq.filterNot(_ == "eventName")
 
   /** Classified events plus the quarantine relation. The reference
     * logs-and-skips bad lines (py:113-135); at 100 TB a silent drop is
@@ -66,19 +85,17 @@ object FdrSource {
   final case class Loaded(classified: DataFrame, quarantined: DataFrame)
 
   def loadWithQuarantine(spark: SparkSession, path: String): Loaded =
-    splitQuarantine(spark,
+    splitQuarantine(
       readJsonLines(spark, path).withColumn("event_name", eventName(col("fields"))))
 
   /** Shared batch/streaming split: `named` is the parsed relation with
-    * (raw, fields, event_name). The dimension side is a broadcast
-    * static table, so in streaming this is a stream-static join —
-    * fully supported, no state store. */
-  def splitQuarantine(spark: SparkSession, named: DataFrame): Loaded = {
-    val mappedNames = OcsfMappings.dimension(spark).select(col("eventName"))
-    val good = mappedWithClass(spark, named.filter(col("event_name").isNotNull))
+    * (raw, fields, event_name). Map-only on both sides, so in
+    * streaming it needs no state store and no static relation. */
+  def splitQuarantine(named: DataFrame): Loaded = {
+    val good = mappedWithClass(named.filter(col("event_name").isNotNull))
     val quarantined = named
-      .join(broadcast(mappedNames), col("event_name") === col("eventName"), "left")
-      .filter(col("fields").isNull || col("event_name").isNull || col("eventName").isNull)
+      .filter(col("fields").isNull || col("event_name").isNull ||
+        OcsfMappings.baseEventOf(col("event_name")).isNull)
       .select(col("raw"),
         when(col("fields").isNull, "unparseable_json")
           .when(col("event_name").isNull, "missing_event_key")
@@ -88,5 +105,5 @@ object FdrSource {
 
   /** Full front-end: raw gz json-lines path → classified events. */
   def load(spark: SparkSession, path: String): DataFrame =
-    mappedWithClass(spark, withEventName(readJsonLines(spark, path)))
+    mappedWithClass(withEventName(readJsonLines(spark, path)))
 }

@@ -72,7 +72,7 @@ object EventStream {
     * classified events. */
   def readClassified(spark: SparkSession, landingDir: String,
                      discovery: Discovery = Listing): DataFrame =
-    FdrSource.mappedWithClass(spark,
+    FdrSource.mappedWithClass(
       readNamed(spark, landingDir, discovery).filter(col("event_name").isNotNull))
 
   /** Streaming equivalent of FdrSource.loadWithQuarantine: classified
@@ -82,7 +82,7 @@ object EventStream {
     * dropped — the reference merely logs them from the Lambda. */
   def readWithQuarantine(spark: SparkSession, landingDir: String,
                          discovery: Discovery = Listing): FdrSource.Loaded =
-    FdrSource.splitQuarantine(spark, readNamed(spark, landingDir, discovery))
+    FdrSource.splitQuarantine(readNamed(spark, landingDir, discovery))
 
   /** Lands the quarantine stream as parquet with its own checkpoint. */
   def startQuarantineSink(quarantined: DataFrame, dir: String,
@@ -189,7 +189,11 @@ object EventStream {
         // every byte of `fields`) and route-cluster the batch cache so
         // each route's rescan prunes to its own columnar batches
         // (OcsfSink.routeClustered) — the 13 filters below otherwise
-        // decompress the whole batch each time
+        // decompress the whole batch each time. The cache's partition
+        // count follows the batch's estimated size: every route job
+        // runs one task per cache partition, so a 64-object trigger of
+        // FDR-sized lines caches as ONE partition (13 fan-out scan
+        // tasks), and a backlog batch grows ~1 partition per MB of gz.
         // serialized + disk-spilling (cacheForFanOut): a backfill batch
         // that blows past maxFilesPerTrigger degrades linearly instead
         // of thrashing the storage pool

@@ -89,7 +89,7 @@ class IdempotentSinkSpec extends SparkSpec {
       ("""{"event_simpleName":"DnsRequest","name":"DnsRequestV4","aid":"a1","cid":"c1","id":"e1","timestamp":"1700000000000","event_platform":"Lin","DomainName":"one.example.com"}""", ""),
       ("""{"event_simpleName":"ProcessRollup2","name":"ProcessRollup2V19","aid":"a2","cid":"c2","id":"e2","timestamp":"1700000000123","event_platform":"Win","ImageFileName":"C:\\x\\cmd.exe","RawProcessId":"42"}""", ""))
       .toDF("raw", "unused").select(col("raw"))
-    val loaded = graft.sources.FdrSource.mappedWithClass(spark,
+    val loaded = graft.sources.FdrSource.mappedWithClass(
       graft.sources.FdrSource.withEventName(
         classified.withColumn("fields",
           from_json(col("raw"), org.apache.spark.sql.types.MapType(

@@ -212,6 +212,82 @@ class OcsfPipelineSpec extends SparkSpec {
     assert(back.count() == 1)
   }
 
+  test("A3-A4: map-lookup classify keeps the dimension join's column contract") {
+    import org.apache.spark.sql.types._
+    // the columns the join against OcsfMappings.dimension produced:
+    // the parsed relation's, then the dimension's minus its key
+    val expected = StructType(Seq(
+      StructField("raw", StringType),
+      StructField("fields", MapType(StringType, StringType)),
+      StructField("event_name", StringType)) ++
+      OcsfMappings.dimension(spark).drop("eventName").schema.fields)
+    assert(classified.schema == expected, classified.schema.treeString)
+    // same values as the dimension row of each event
+    val dim = OcsfMappings.dimension(spark).withColumnRenamed("eventName", "event_name")
+    val viaDim = classified.select("event_name").join(dim, "event_name")
+      .select(classified.columns.filterNot(Set("raw", "fields")).map(col).toSeq: _*)
+    assert(classified.drop("raw", "fields").exceptAll(viaDim).isEmpty)
+    assert(viaDim.exceptAll(classified.drop("raw", "fields")).isEmpty)
+  }
+
+  test("A3-A4: quarantine by reason on the fixture is unchanged by the lookup") {
+    val q = FdrSource.loadWithQuarantine(spark, tmpDir.toString)
+    assert(q.classified.count() == classified.count())
+    val reasons = q.quarantined.groupBy("reason").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(reasons == Map("unmapped_event" -> 1L, "missing_event_key" -> 1L), reasons)
+  }
+
+  test("A23: the classified plan's size estimate tracks the parsed input") {
+    classified // lands the fixture
+    def est(df: org.apache.spark.sql.DataFrame): BigInt =
+      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val parsed = est(FdrSource.readJsonLines(spark, tmpDir.toString))
+    val batch = est(FdrSource.load(spark, tmpDir.toString).drop("raw"))
+    assert(batch <= parsed * 8, s"classified $batch vs parsed $parsed")
+    // the streaming fan-out sizes its cache inside foreachBatch, where
+    // the batch carries the planned micro-batch's estimate
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(BigInt, Int, Long)]()
+    val ckpt = Files.createTempDirectory("ocsf-est-ckpt")
+    graft.streaming.EventStream.readClassified(spark, tmpDir.toString).writeStream
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val clustered = OcsfSink.routeClustered(b.drop("raw"))
+        seen.add((est(b.drop("raw")), clustered.rdd.getNumPartitions, clustered.count()))
+        ()
+      }
+      .start().awaitTermination()
+    assert(seen.size == 1)
+    val (streamEst, parts, rows) = seen.peek()
+    assert(streamEst <= parsed * 8, s"foreachBatch $streamEst vs parsed $parsed")
+    assert(parts == 1 && rows == classified.count())
+  }
+
+  test("A23: cache partition sizing — tiny → 1, capped, monotone, 26 at 1M events") {
+    val routes = OcsfMappings.routes.size
+    def p(est: BigInt) = OcsfSink.clusterPartitions(est, routes)
+    assert(p(0) == 1 && p(32L << 10) == 1)
+    assert(p(BigInt(1) << 50) == routes * 64)
+    val ests = (0 to 40).map(i => BigInt(1) << i) ++ (1 to 200).map(i => BigInt(i) * 5000000)
+    val ps = ests.sorted.map(p)
+    assert(ps.zip(ps.tail).forall { case (a, b) => a <= b }, "not monotone")
+    assert(ps.forall(n => n >= 1 && n <= routes * 64))
+    // EtlBench's 1M-event corpus estimates ~192 MB classified
+    assert(p(191899760L) == 26)
+  }
+
+  test("A23: routeClustered auto-sizes the fixture to one partition, loses nothing") {
+    val clustered = OcsfSink.routeClustered(classified)
+    assert(clustered.rdd.getNumPartitions == 1)
+    assert(clustered.count() == classified.count())
+    assert(clustered.select("raw").exceptAll(classified.select("raw")).isEmpty)
+    // one partition holds every route, sorted by route so each cache
+    // batch stays one route
+    val routes = clustered.select("route").collect().map(_.getString(0)).toSeq
+    assert(routes == routes.sorted)
+  }
+
   test("A22: rows land time-sorted within each file (row-group pruning stats)") {
     import spark.implicits._
     val outDir = Files.createTempDirectory("ocsf-sorted")

@@ -28,6 +28,27 @@ class PlanSpec extends SparkSpec {
     assert(readSchema.contains("l_extendedprice"), readSchema)
   }
 
+  test("A3-A4: FDR classify is a map lookup — no join, no broadcast exchange") {
+    import java.nio.file.Files
+    import graft.sources.FdrSource
+    val dir = Files.createTempDirectory("fdr-plan")
+    val w = new java.io.PrintWriter(new java.util.zip.GZIPOutputStream(
+      Files.newOutputStream(dir.resolve("a.gz"))))
+    w.println("""{"event_simpleName":"DnsRequest","id":"p-1","timestamp":"1700000001000"}""")
+    w.close()
+    val loaded = FdrSource.loadWithQuarantine(spark, dir.toString)
+    Seq("load" -> FdrSource.load(spark, dir.toString),
+        "classified" -> loaded.classified,
+        "quarantined" -> loaded.quarantined).foreach { case (name, df) =>
+      val joins = df.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+      assert(joins.isEmpty, s"$name joins:\n${df.queryExecution.optimizedPlan}")
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("BroadcastExchange") && !p.contains("Join"), s"$name:\n$p")
+    }
+    assert(FdrSource.load(spark, dir.toString).count() == 1)
+  }
+
   test("B3: dimension sides of the star joins broadcast") {
     assert(plan("q3_join_agg").contains("BroadcastHashJoin"))
     assert(plan("q5_multijoin").contains("BroadcastHashJoin"))
