@@ -17,6 +17,10 @@ import graft.sources.FdrSource
   *
   * Usage: runMain graft.EtlBench [nEvents] [nFiles] [codec] [filesPerDay]
   *
+  * `*_compiles` are the classes Spark's codegen compiled in each
+  * phase ([[GraftSession.codegenCompiles]]): after the warm-up the
+  * timed phases should compile next to nothing.
+  *
   * `codec` overrides `spark.sql.parquet.compression.codec` for the
   * fan-out write. Measured warm at 1M events on this box: snappy
   * 53.0k ev/s, lz4 53.8k, zstd 48.1k — the codec is NOT the lever on
@@ -101,6 +105,7 @@ object EtlBench {
     val wl = Files.createTempDirectory("etl-bench-warm")
     val wo = Files.createTempDirectory("etl-bench-warmout")
     writeCorpus(wl, 1300, 4)
+    val c0 = GraftSession.codegenCompiles
     // same shape as the timed run (raw dropped, route-clustered,
     // explicit filesPerDay) so the warm-up JITs exactly the plans the
     // measurement executes
@@ -111,6 +116,7 @@ object EtlBench {
       filesPerDay = filesPerDay)
     warm.unpersist()
 
+    val cWarm = GraftSession.codegenCompiles
     val t0 = System.nanoTime()
     // drop the raw line before caching: every route job re-scans this
     // cache, and no normalizer reads `raw` (extapi parses its k/v
@@ -123,10 +129,12 @@ object EtlBench {
       FdrSource.load(spark, landing.toString).drop("raw")))
     val nClassified = classified.count()
     val t1 = System.nanoTime()
+    val cClassify = GraftSession.codegenCompiles
     val cachePartitions = classified.rdd.getNumPartitions
     val routeSec = OcsfSink.fanOutTimed(classified, out.toString,
       "us-east-1", "123456789012", filesPerDay = filesPerDay)
     val t2 = System.nanoTime()
+    val cFanout = GraftSession.codegenCompiles
     val sec = (t2 - t0) / 1e9
     classified.unpersist()
 
@@ -139,7 +147,7 @@ object EtlBench {
     val routes = routeSec.toSeq.sortBy(-_._2)
       .map { case (r, s) => s""""${OcsfSink.tableName(r)}":${jnum(s)}""" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"etl_events_per_sec","value":${jnum(nClassified / sec)},"events":$nClassified,"seconds":${jnum(sec)},"classify_sec":${jnum((t1 - t0) / 1e9)},"fanout_sec":${jnum((t2 - t1) / 1e9)},"cache_partitions":$cachePartitions,"routes":$routes,"codec":"${spark.conf.get("spark.sql.parquet.compression.codec", "snappy")}","files_per_day":$filesPerDay,"files":$nFiles}""")
+    println(s"""{"metric":"etl_events_per_sec","value":${jnum(nClassified / sec)},"events":$nClassified,"seconds":${jnum(sec)},"classify_sec":${jnum((t1 - t0) / 1e9)},"fanout_sec":${jnum((t2 - t1) / 1e9)},"warmup_compiles":${cWarm - c0},"classify_compiles":${cClassify - cWarm},"fanout_compiles":${cFanout - cClassify},"cache_partitions":$cachePartitions,"routes":$routes,"codec":"${spark.conf.get("spark.sql.parquet.compression.codec", "snappy")}","files_per_day":$filesPerDay,"files":$nFiles}""")
     spark.stop()
   }
 }

@@ -33,6 +33,11 @@ import graft.streaming.{EventStream, StreamMetrics}
   * same build measured 54k vs 73k warm ev/s at the 1M rung purely on
   * JIT/page-cache state.
   *
+  * `*_compiles` are the classes Spark's codegen compiled in the
+  * warm-up stream, the measured stream and the batch calibration
+  * ([[GraftSession.codegenCompiles]]); the measured stream repeats
+  * the warm-up's plans, so it should compile next to nothing.
+  *
   * Usage: runMain graft.StreamBench [nEvents] [nFiles] [filesPerDay] [discovery]
   *   nFiles controls triggers: ceil(nFiles / 64) micro-batches.
   *   filesPerDay defaults to 0 = auto (one file per route-day at
@@ -84,6 +89,7 @@ object StreamBench {
     val wo = Files.createTempDirectory("stream-bench-warmout")
     val wc = Files.createTempDirectory("stream-bench-warmckpt")
     EtlBench.writeCorpus(wl, 1300, 4)
+    val c0 = GraftSession.codegenCompiles
     if (discovery == EventStream.Manifest) announceAll(spark, wl)
     EventStream.start(spark, wl.toString, wo.toString, wc.toString,
       "us-east-1", "123456789012", trigger = Trigger.AvailableNow(),
@@ -93,6 +99,7 @@ object StreamBench {
     val metrics = new StreamMetrics(capacity = 4096,
       queryName = Some("ocsf-fanout")).attach(spark)
 
+    val cWarm = GraftSession.codegenCompiles
     val t0 = System.nanoTime()
     val q = EventStream.start(spark, landing.toString, out.toString,
       ckpt.toString, "us-east-1", "123456789012",
@@ -100,6 +107,7 @@ object StreamBench {
       discovery = discovery)
     q.awaitTermination()
     val sec = (System.nanoTime() - t0) / 1e9
+    val cStream = GraftSession.codegenCompiles
 
     val m = metrics.metrics(spark)
       .select(col("batchId"), col("numInputRows"), col("triggerMs"))
@@ -177,9 +185,10 @@ object StreamBench {
         }
       }
     }
+    val cCal = GraftSession.codegenCompiles
     val warmRate = if (warmSec > 0) warmRows / warmSec else Double.NaN
 
-    println(s"""{"metric":"stream_events_per_sec","value":${jnum(rows / sec)},"warm_events_per_sec":${jnum(warmRate)},"events":$rows,"seconds":${jnum(sec)},"triggers":${m.length},"trigger_ms_mean":${jnum(if (m.nonEmpty) trigMs.sum.toDouble / m.length else Double.NaN)},"trigger_ms_max":${trigMs.maxOption.getOrElse(-1L)},"first_trigger_ms":${trigMs.headOption.getOrElse(-1L)},"batch_calibration_events_per_sec":${jnum(batchRate)},"stream_over_batch_ratio":${jnum(warmRate / batchRate)},"stream_over_batch_ratio_fanout_clock":${jnum(warmRate / batchRateFanout)},"files":$nFiles,"files_per_day":$filesPerDay,"discovery":"$discoveryName"}""")
+    println(s"""{"metric":"stream_events_per_sec","value":${jnum(rows / sec)},"warm_events_per_sec":${jnum(warmRate)},"events":$rows,"seconds":${jnum(sec)},"triggers":${m.length},"trigger_ms_mean":${jnum(if (m.nonEmpty) trigMs.sum.toDouble / m.length else Double.NaN)},"trigger_ms_max":${trigMs.maxOption.getOrElse(-1L)},"first_trigger_ms":${trigMs.headOption.getOrElse(-1L)},"batch_calibration_events_per_sec":${jnum(batchRate)},"stream_over_batch_ratio":${jnum(warmRate / batchRate)},"stream_over_batch_ratio_fanout_clock":${jnum(warmRate / batchRateFanout)},"warmup_compiles":${cWarm - c0},"stream_compiles":${cStream - cWarm},"calibration_compiles":${cCal - cStream},"files":$nFiles,"files_per_day":$filesPerDay,"discovery":"$discoveryName"}""")
     spark.stop()
   }
 }

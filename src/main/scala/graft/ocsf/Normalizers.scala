@@ -3,6 +3,7 @@ package graft.ocsf
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ListMap
 
 /** OCSF v1.2.0 normalizers (SURVEY.md §2 A5–A21).
   *
@@ -78,17 +79,22 @@ object Normalizers {
     Seq("name", "aid", "cid", "timestamp", "id", "aip",
         "ConfigBuild", "event_platform")
 
-  /** Adds the common-field columns. `timestamp` defaults to the
-    * reference's 1998-04-24 sentinel (py:259). */
-  def withCommon(df: DataFrame): DataFrame =
-    df.withColumn("c_name", f("name"))
-      .withColumn("c_aid", f("aid"))
-      .withColumn("c_cid", f("cid"))
-      .withColumn("c_ts", coalesce(f("timestamp"), lit("893383659000")))
-      .withColumn("c_id", f("id"))
-      .withColumn("c_aip", f("aip"))
-      .withColumn("config_build", f("ConfigBuild"))
-      .withColumn("platform", f("event_platform"))
+  /** Adds the common-field columns and a class's own `classCols` in
+    * ONE projection. `timestamp` defaults to the reference's 1998-04-24
+    * sentinel (py:259). Every column reads only the input's `fields`
+    * map, so one `withColumns` replaces a `withColumn` chain: each
+    * `withColumn` is a separate eager analysis over the growing plan,
+    * paid per route per trigger. */
+  def withCommon(df: DataFrame, classCols: (String, Column)*): DataFrame =
+    df.withColumns(ListMap(Seq(
+      "c_name" -> f("name"),
+      "c_aid" -> f("aid"),
+      "c_cid" -> f("cid"),
+      "c_ts" -> coalesce(f("timestamp"), lit("893383659000")),
+      "c_id" -> f("id"),
+      "c_aip" -> f("aip"),
+      "config_build" -> f("ConfigBuild"),
+      "platform" -> f("event_platform")) ++ classCols: _*))
 
   /** A6 — the `unmapped` remainder: the payload map minus common keys
     * and the class-specific consumed keys.
@@ -227,19 +233,19 @@ object Normalizers {
   // =========================================================== A11
   /** Process Activity (1007) — qopcfdr_stream_loader.py:650-917. */
   def processActivity(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("image", f("ImageFileName"))
-      .withColumn("sha256", f("SHA256HashData"))
-      .withColumn("md5h", f("MD5HashData"))
-      .withColumn("cmd", f("CommandLine"))
-      .withColumn("pid", f("RawProcessId"))
-      .withColumn("puid", f("SourceProcessId"))
-      .withColumn("parent_uid", f("ParentProcessId"))
+    val d = withCommon(df,
+      "image" -> f("ImageFileName"),
+      "sha256" -> f("SHA256HashData"),
+      "md5h" -> f("MD5HashData"),
+      "cmd" -> f("CommandLine"),
+      "pid" -> f("RawProcessId"),
+      "puid" -> f("SourceProcessId"),
+      "parent_uid" -> f("ParentProcessId"),
       // reference shape: `p = get(primary); if not p: p = get(fallback)`
       // — a truthiness test on the primary but the RAW fallback value
       // (an empty-string fallback stays an empty string)
-      .withColumn("parent_file", coalesce(fnb("ParentBaseFileName"), f("ParentImageFileName")))
-      .withColumn("parent_cmd", f("ParentCommandLine"))
+      "parent_file" -> coalesce(fnb("ParentBaseFileName"), f("ParentImageFileName")),
+      "parent_cmd" -> f("ParentCommandLine"))
     // ParentImageFileName is read as the parent-name fallback but is
     // NEVER consumed: the reference's only path that would delete it
     // (py:778 — a bare `del unmapped["ParentBaseFileName"]` with no
@@ -282,13 +288,13 @@ object Normalizers {
   // =========================================================== A12
   /** Network Activity (4001) — qopcfdr_stream_loader.py:918-1175. */
   def networkActivity(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("src_port", f("LocalPort").try_cast(IntegerType))
-      .withColumn("dst_port", f("RemotePort").try_cast(IntegerType))
-      .withColumn("dst_ip", coalesce(fnb("RemoteAddressIP4"), f("RemoteAddressIP6")))
-      .withColumn("local_ip", coalesce(fnb("LocalAddressIP4"), f("LocalAddressIP6")))
-      .withColumn("mac", f("PhysicalAddress"))
-      .withColumn("conn_dir", f("ConnectionDirection"))
+    val d = withCommon(df,
+      "src_port" -> f("LocalPort").try_cast(IntegerType),
+      "dst_port" -> f("RemotePort").try_cast(IntegerType),
+      "dst_ip" -> coalesce(fnb("RemoteAddressIP4"), f("RemoteAddressIP6")),
+      "local_ip" -> coalesce(fnb("LocalAddressIP4"), f("LocalAddressIP6")),
+      "mac" -> f("PhysicalAddress"),
+      "conn_dir" -> f("ConnectionDirection"))
     val consumed = Seq("LocalPort", "RemotePort", "RemoteAddressIP4",
       "LocalAddressIP4", "PhysicalAddress", "ConnectionDirection")
     val fallbacks = Seq("RemoteAddressIP4" -> "RemoteAddressIP6",
@@ -341,19 +347,19 @@ object Normalizers {
     * CrowdStrike HttpMethod decimal into the OCSF activity; HttpStatus
     * resolves the "Override" status sentinel. */
   def httpActivity(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("http_method_raw", f("HttpMethod"))
-      .withColumn("http_host", f("HttpHost"))
-      .withColumn("http_path", f("HttpPath"))
-      .withColumn("http_status", f("HttpStatus"))
-      .withColumn("dst_ip", coalesce(fnb("RemoteAddressIP4"), f("RemoteAddressIP6")))
-      .withColumn("dst_port", f("RemotePort").try_cast(IntegerType))
-      .withColumn("src_port", f("LocalPort").try_cast(IntegerType))
-      .withColumn("image", f("ImageFileName"))
-      .withColumn("cmd", f("CommandLine"))
-      .withColumn("ja3", fnb("Ja3Hash"))
-      .withColumn("tls_ver", f("TlsVersion"))
-      .withColumn("domain", f("DomainName"))
+    val d = withCommon(df,
+      "http_method_raw" -> f("HttpMethod"),
+      "http_host" -> f("HttpHost"),
+      "http_path" -> f("HttpPath"),
+      "http_status" -> f("HttpStatus"),
+      "dst_ip" -> coalesce(fnb("RemoteAddressIP4"), f("RemoteAddressIP6")),
+      "dst_port" -> f("RemotePort").try_cast(IntegerType),
+      "src_port" -> f("LocalPort").try_cast(IntegerType),
+      "image" -> f("ImageFileName"),
+      "cmd" -> f("CommandLine"),
+      "ja3" -> fnb("Ja3Hash"),
+      "tls_ver" -> f("TlsVersion"),
+      "domain" -> f("DomainName"))
     // HttpStatus is read for the status override but never removed
     // from unmapped (the reference has no del for it, py:1313).
     // HttpMethod/HttpHost/HttpPath are read ONLY inside the
@@ -432,12 +438,12 @@ object Normalizers {
   // =========================================================== A13
   /** File System Activity (1001) — qopcfdr_stream_loader.py:1541-1759. */
   def fileSystemActivity(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("file_name", coalesce(fnb("TargetFileName"), f("ScriptContentName")))
-      .withColumn("file_path", f("TargetDirectoryName"))
-      .withColumn("file_uid", f("FileIdentifier"))
-      .withColumn("creator", f("UserName"))
-      .withColumn("sha256", coalesce(fnb("SHA256HashData"), f("ContentSHA256HashData")))
+    val d = withCommon(df,
+      "file_name" -> coalesce(fnb("TargetFileName"), f("ScriptContentName")),
+      "file_path" -> f("TargetDirectoryName"),
+      "file_uid" -> f("FileIdentifier"),
+      "creator" -> f("UserName"),
+      "sha256" -> coalesce(fnb("SHA256HashData"), f("ContentSHA256HashData")))
     val consumed = Seq("TargetFileName", "TargetDirectoryName",
       "FileIdentifier", "UserName", "SHA256HashData")
     val fallbacks = Seq("TargetFileName" -> "ScriptContentName",
@@ -465,12 +471,12 @@ object Normalizers {
   // =========================================================== A14
   /** Module Activity (1005) — qopcfdr_stream_loader.py:1760-1994. */
   def moduleActivity(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("module_name", coalesce(fnb("BundleID"), f("IOServicePath")))
-      .withColumn("image", f("ImageFileName"))
-      .withColumn("sha256", f("SHA256HashData"))
-      .withColumn("sha1", f("SHA1HashData"))
-      .withColumn("md5h", f("MD5HashData"))
+    val d = withCommon(df,
+      "module_name" -> coalesce(fnb("BundleID"), f("IOServicePath")),
+      "image" -> f("ImageFileName"),
+      "sha256" -> f("SHA256HashData"),
+      "sha1" -> f("SHA1HashData"),
+      "md5h" -> f("MD5HashData"))
     // BundleID → IOServicePath is the same try-del-except-del fallback
     // as the file-name pairs: both present → only BundleID deleted
     val consumed = Seq("BundleID", "ImageFileName",
@@ -504,9 +510,9 @@ object Normalizers {
     * `unmapped` (as in the reference — its observable is literally
     * named "unmapped.ContextBaseFileName"). */
   def dnsActivity(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("domain", f("DomainName"))
-      .withColumn("ctx_file", f("ContextBaseFileName"))
+    val d = withCommon(df,
+      "domain" -> f("DomainName"),
+      "ctx_file" -> f("ContextBaseFileName"))
     val consumed = Seq("DomainName")
     val observables = observablesArr(Seq(
       obs("query.hostname", 1, "Hostname", col("domain")),
@@ -524,16 +530,16 @@ object Normalizers {
   // =========================================================== A16
   /** Authentication (3002) — qopcfdr_stream_loader.py:2156-2418. */
   def authentication(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("user_name", f("UserName"))
-      .withColumn("user_principal", f("UserPrincipal"))
-      .withColumn("user_sid", f("UserSid"))
-      .withColumn("auth_uid", f("AuthenticationId"))
-      .withColumn("auth_uuid", f("AuthenticationUuid"))
-      .withColumn("auth_mac", f("AuthenticationIdMac"))
-      .withColumn("logon_raw", f("LogonType"))
-      .withColumn("pid", f("RawProcessId"))
-      .withColumn("is_admin", f("UserIsAdmin"))
+    val d = withCommon(df,
+      "user_name" -> f("UserName"),
+      "user_principal" -> f("UserPrincipal"),
+      "user_sid" -> f("UserSid"),
+      "auth_uid" -> f("AuthenticationId"),
+      "auth_uuid" -> f("AuthenticationUuid"),
+      "auth_mac" -> f("AuthenticationIdMac"),
+      "logon_raw" -> f("LogonType"),
+      "pid" -> f("RawProcessId"),
+      "is_admin" -> f("UserIsAdmin"))
     // reference quirk (pinned by the parity differ): LogonType is read
     // via .get() but never deleted (py:2245), so it STAYS in unmapped —
     // unlike every other consumed key here
@@ -584,12 +590,12 @@ object Normalizers {
     * UpdateFlag drives both activity and status (the mapping's 777
     * Override sentinel). */
   def applicationLifecycle(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("flag", f("UpdateFlag"))
-      .withColumn("app_name", f("AppName"))
-      .withColumn("app_source", f("AppSource"))
-      .withColumn("app_vendor", f("AppVendor"))
-      .withColumn("app_version", f("AppVersion"))
+    val d = withCommon(df,
+      "flag" -> f("UpdateFlag"),
+      "app_name" -> f("AppName"),
+      "app_source" -> f("AppSource"),
+      "app_vendor" -> f("AppVendor"),
+      "app_version" -> f("AppVersion"))
     val consumed = Seq("UpdateFlag", "AppName", "AppSource", "AppVendor", "AppVersion")
     val fl = nullif(col("flag"), lit(""))
     val actId = when(fl.isNull, 0).when(fl === "2", 2).when(fl === "3", 1)
@@ -619,9 +625,9 @@ object Normalizers {
   /** Operating System Patch State (5004) —
     * qopcfdr_stream_loader.py:2615-2789. */
   def osPatchState(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("status_flag", f("Status"))
-      .withColumn("kbs_raw", f("InstalledUpdateIds"))
+    val d = withCommon(df,
+      "status_flag" -> f("Status"),
+      "kbs_raw" -> f("InstalledUpdateIds"))
     val consumed = Seq("Status", "InstalledUpdateIds")
     val sf = nullif(col("status_flag"), lit(""))
     val actId = when(sf.isNull, 0).when(sf === "0", 1).otherwise(99)
@@ -641,11 +647,11 @@ object Normalizers {
   // =========================================================== A19
   /** File Hosting Activity (6006) — qopcfdr_stream_loader.py:2790-3005. */
   def fileHostingActivity(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("file_name", coalesce(fnb("SourceFileName"), f("DownloadPath")))
-      .withColumn("sha256", coalesce(fnb("SHA256HashData"), f("ContentSHA256HashData")))
-      .withColumn("dl_server", f("DownloadServer"))
-      .withColumn("dl_port", f("DownloadPort").try_cast(IntegerType))
+    val d = withCommon(df,
+      "file_name" -> coalesce(fnb("SourceFileName"), f("DownloadPath")),
+      "sha256" -> coalesce(fnb("SHA256HashData"), f("ContentSHA256HashData")),
+      "dl_server" -> f("DownloadServer"),
+      "dl_port" -> f("DownloadPort").try_cast(IntegerType))
     val consumed = Seq("SourceFileName", "SHA256HashData",
       "DownloadServer", "DownloadPort")
     val fallbacks = Seq("SourceFileName" -> "DownloadPath",
@@ -671,14 +677,14 @@ object Normalizers {
     * The parent process cmd_line is always null (the reference re-gets
     * the already-consumed CommandLine key, py:3099). */
   def detectionFinding(df: DataFrame): DataFrame = {
-    val d = withCommon(df)
-      .withColumn("image", f("ImageFileName"))
-      .withColumn("cmd", f("CommandLine"))
-      .withColumn("sha256", f("ContentSHA256HashData"))
-      .withColumn("ctx_uid", f("ContextProcessId"))
-      .withColumn("parent_file", f("ParentImageFileName"))
-      .withColumn("gp_file", f("GrandparentImageFileName"))
-      .withColumn("gp_cmd", f("GrandparentCommandLine"))
+    val d = withCommon(df,
+      "image" -> f("ImageFileName"),
+      "cmd" -> f("CommandLine"),
+      "sha256" -> f("ContentSHA256HashData"),
+      "ctx_uid" -> f("ContextProcessId"),
+      "parent_file" -> f("ParentImageFileName"),
+      "gp_file" -> f("GrandparentImageFileName"),
+      "gp_cmd" -> f("GrandparentCommandLine"))
     val consumed = Seq("ImageFileName", "CommandLine", "ContentSHA256HashData",
       "ContextProcessId", "ParentImageFileName", "GrandparentImageFileName",
       "GrandparentCommandLine")
@@ -733,27 +739,29 @@ object Normalizers {
     // straight out of the map — no reference back to the `raw` line,
     // letting batch callers cache the classified relation without the
     // duplicate full-line string (it halves the cached bytes the
-    // 13-route fan-out rescans)
+    // 13-route fan-out rescans). The other columns read `akv`, so it
+    // is a projection of its own and they land in one `withColumns`.
     val d = df
       .withColumn("akv", from_json(col("fields").getItem("AuditKeyValues"), akvType))
-      .withColumn("method_raw", kv("request_method"))
-      .withColumn("status_code", kv("status_code").try_cast(IntegerType))
-      .withColumn("user_agent", kv("user_agent"))
-      .withColumn("req_len", kv("request_uri_length").try_cast(IntegerType))
-      .withColumn("trace_id", kv("trace_id"))
-      .withColumn("req_path", kv("request_path"))
-      .withColumn("accept_hdr", kv("request_accept"))
-      .withColumn("content_type", kv("request_content_type"))
-      .withColumn("api_client_id", kv("APIClientID"))
-      // the reference maps falsy values to None here (ternaries,
-      // py:342-346), so empty strings become nulls in value positions
-      .withColumn("user_ip", fnb("UserIp"))
-      .withColumn("x_aid", fnb("AgentIdString"))
-      .withColumn("x_cid", fnb("cid"))
-      .withColumn("user_id", fnb("UserId"))
-      .withColumn("customer_id", fnb("CustomerIdString"))
-      .withColumn("ext_type", f("ExternalApiType"))
-      .withColumn("utc_ts", f("UTCTimestamp"))
+      .withColumns(ListMap(
+        "method_raw" -> kv("request_method"),
+        "status_code" -> kv("status_code").try_cast(IntegerType),
+        "user_agent" -> kv("user_agent"),
+        "req_len" -> kv("request_uri_length").try_cast(IntegerType),
+        "trace_id" -> kv("trace_id"),
+        "req_path" -> kv("request_path"),
+        "accept_hdr" -> kv("request_accept"),
+        "content_type" -> kv("request_content_type"),
+        "api_client_id" -> kv("APIClientID"),
+        // the reference maps falsy values to None here (ternaries,
+        // py:342-346), so empty strings become nulls in value positions
+        "user_ip" -> fnb("UserIp"),
+        "x_aid" -> fnb("AgentIdString"),
+        "x_cid" -> fnb("cid"),
+        "user_id" -> fnb("UserId"),
+        "customer_id" -> fnb("CustomerIdString"),
+        "ext_type" -> f("ExternalApiType"),
+        "utc_ts" -> f("UTCTimestamp")))
     val actName = when(col("method_raw").isNull, "Unknown")
       .otherwise(initcap(lower(col("method_raw"))))
     val actId = when(col("method_raw").isNull, 0)

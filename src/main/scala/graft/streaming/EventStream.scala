@@ -161,7 +161,12 @@ object EventStream {
     * fanned out to every route's [[IdempotentSink.writeBatch]]. The
     * default 0 auto-sizes per batch from the materialized cache's
     * stats (ONE file per (route, day) at micro-batch scale — the
-    * file-hygiene optimum for a long-running table). Unlike the batch
+    * file-hygiene optimum for a long-running table). At one file per
+    * day each route's write is a single narrow stage: the route's
+    * cache scan, normalize, time sort and encode run in one task, with
+    * no shuffle (OcsfSink.partitionedFrame). Above 1 the route pays a
+    * salted repartition: a shuffle-map stage before its write stage.
+    * Unlike the batch
     * fan-out (OcsfSink.fanOutTimed's `cores/13 + 1` latency stance),
     * extra writers do NOT pay off on this path at micro-batch scale —
     * measured at 1M-event triggers: filesPerDay=3 ran ~25% SLOWER than

@@ -386,4 +386,83 @@ class OcsfPipelineSpec extends SparkSpec {
       nRoutes = 13)
     assert(width >= 1 && width <= 13)
   }
+
+  test("A23: a warm fan-out compiles nothing — the codegen cache holds every route") {
+    // one fan-out needs more distinct generated classes than Spark's
+    // default 100-entry cache holds; compiled in the same order every
+    // run, an undersized LRU evicts each class before its reuse
+    val clustered = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(classified.drop("raw")))
+    clustered.count()
+    val outDir = Files.createTempDirectory("ocsf-warm-fanout").toString
+    def compiles(runId: Long): Long = {
+      val before = graft.GraftSession.codegenCompiles
+      OcsfSink.fanOutIdempotent(clustered, outDir, "us-east-1", "123456789012", runId)
+      graft.GraftSession.codegenCompiles - before
+    }
+    try {
+      val cold = compiles(1L)
+      val warm = compiles(2L)
+      assert(warm <= 2, s"warm fan-out compiled $warm classes (cold run: $cold)")
+    } finally { clustered.unpersist(); () }
+  }
+
+  test("A22: a one-file-per-day route write adds no exchange; the salted one adds its own") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = Normalizers.processActivity(
+      OcsfSink.routeClustered(classified, tasksPerRoute = 2)
+        .filter(col("route") === "Process Activity"))
+    def shuffles(filesPerDay: Int): Int = {
+      val plan: SparkPlan = OcsfSink.partitionedFrame(df, "us-east-1",
+        "123456789012", filesPerDay).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      plan.collect { case e: ShuffleExchangeExec => e }.size
+    }
+    // the cache layout's own repartition is the one exchange below the
+    // route's filter; the write adds none at one file per day
+    assert(shuffles(1) == 1)
+    assert(shuffles(3) == 2)
+  }
+
+  test("A22: at P > 1 cache partitions each route lands one time-sorted file per eventDay") {
+    // every route, three days, times scrambled within each day
+    val day0 = 1700006400L // 2023-11-15T00:00:00Z
+    val lines = (0L until 260L).map { i =>
+      val ts = (day0 + (i % 3) * 86400 + (i * 7919) % 86400) * 1000
+      graft.EtlBench.line(i)
+        .replace(s""""timestamp":"${1700000000000L + i}"""", s""""timestamp":"$ts"""")
+        .replace(s""""UTCTimestamp":"${(1700000000000L + i) / 1000}"""",
+          s""""UTCTimestamp":"${ts / 1000}"""")
+    }
+    val landing = Files.createTempDirectory("ocsf-multiday")
+    writeGz(landing, "part-0001.gz", lines)
+    val clustered = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
+      FdrSource.load(spark, landing.toString).drop("raw"), tasksPerRoute = 2))
+    val expected = clustered.groupBy("route").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(clustered.rdd.getNumPartitions == 26)
+    assert(expected.keySet == OcsfMappings.routes.toSet && expected.values.sum == 260)
+    val outDir = Files.createTempDirectory("ocsf-multiday-out").toString
+    try OcsfSink.fanOutIdempotent(clustered, outDir, "us-east-1", "123456789012", runId = 1L)
+    finally { clustered.unpersist(); () }
+    val conf = spark.sessionState.newHadoopConf()
+    OcsfMappings.routes.foreach { route =>
+      val table = new org.apache.hadoop.fs.Path(s"$outDir/${OcsfSink.tableName(route)}")
+      val files = IdempotentSink.committedFiles(table.getFileSystem(conf), table)
+      val byDay = files.groupBy(_.getParent.getName)
+      assert(byDay.keySet == Set("eventDay=20231115", "eventDay=20231116",
+        "eventDay=20231117"), s"$route: ${files.mkString(", ")}")
+      assert(byDay.values.forall(_.size == 1), s"$route: ${files.mkString(", ")}")
+      val rows = files.map { file =>
+        val times = spark.read.parquet(file.toString).select("time")
+          .collect().map(_.getTimestamp(0).getTime).toSeq
+        assert(times == times.sorted, s"$route: $file is not time-sorted")
+        times.size
+      }
+      assert(rows.sum == expected(route), s"$route lost rows")
+    }
+  }
 }
