@@ -3,12 +3,13 @@ package graft
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
-import graft.ocsf.{Normalizers, OcsfSink}
+import graft.ocsf.OcsfSink
 import graft.sources.FdrSource
 
 /** ETL throughput benchmark: synthetic FDR gz corpus → classify →
-  * all 13 normalizers → Security-Lake parquet fan-out, reported as
-  * events/second end-to-end (including the write).
+  * all 13 normalizers → Security-Lake parquet fan-out through the
+  * exactly-once sink ([[OcsfSink.fanOutIdempotent]]), reported as
+  * events/second end-to-end (including the write and its commit).
   *
   * The comparable reference number comes from
   * `tools/ref_etl_bench.py`, which times the reference loader's
@@ -112,8 +113,8 @@ object EtlBench {
     val warm = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
       FdrSource.load(spark, wl.toString).drop("raw")))
     warm.count()
-    OcsfSink.fanOutTimed(warm, wo.toString, "us-east-1", "123456789012",
-      filesPerDay = filesPerDay)
+    OcsfSink.fanOutIdempotent(warm, wo.toString, "us-east-1", "123456789012",
+      runId = 1L, filesPerDay = filesPerDay)
     warm.unpersist()
 
     val cWarm = GraftSession.codegenCompiles
@@ -131,8 +132,8 @@ object EtlBench {
     val t1 = System.nanoTime()
     val cClassify = GraftSession.codegenCompiles
     val cachePartitions = classified.rdd.getNumPartitions
-    val routeSec = OcsfSink.fanOutTimed(classified, out.toString,
-      "us-east-1", "123456789012", filesPerDay = filesPerDay)
+    val routeSec = OcsfSink.fanOutIdempotent(classified, out.toString,
+      "us-east-1", "123456789012", runId = 1L, filesPerDay = filesPerDay)
     val t2 = System.nanoTime()
     val cFanout = GraftSession.codegenCompiles
     val sec = (t2 - t0) / 1e9

@@ -14,10 +14,12 @@ object OcsfEtlDemo {
     // clustering lets each rescan prune to its own columnar batches
     val classified = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
       FdrSource.load(spark, landing).drop("raw")))
-    println(s"[demo] classified events: ${classified.count()}")
-    classified.groupBy("route").count().show(20, truncate = false)
-    OcsfSink.fanOut(classified, outDir, "us-east-1", "123456789012")
-    classified.unpersist()
+    try {
+      println(s"[demo] classified events: ${classified.count()}")
+      classified.groupBy("route").count().show(20, truncate = false)
+      // runId keys the exactly-once commit: a rerun skips landed routes
+      OcsfSink.fanOutIdempotent(classified, outDir, "us-east-1", "123456789012", runId = 1L)
+    } finally { classified.unpersist(); () }
     println(s"[demo] wrote OCSF tables under $outDir")
     // consumption surface: SQL over the normalized lake
     val views = graft.ocsf.OcsfTables.registerAll(spark, outDir)

@@ -132,9 +132,11 @@ object StreamBench {
     // recorded 149k — zero guest processes running, loadavg 20 from
     // CPU steal), so a streaming number is only interpretable NEXT TO
     // a batch number from the same minutes. The ratio
-    // warm-stream / batch is the box-independent figure: it prices
-    // exactly what streaming adds (triggers, checkpointing, the
-    // two-phase commit) over the identical classify+fan-out work.
+    // warm-stream / batch is the box-independent figure: both arms
+    // land through the same fan-out and two-phase commit
+    // (OcsfSink.fanOutIdempotent), so it prices exactly what streaming
+    // adds (triggers, checkpointing, per-trigger cache and stats reads)
+    // over the identical classify+fan-out work.
     // the calibration must never cost the already-measured streaming
     // numbers: any failure here reports a null ratio, not a dead run
     // r17 (ADVICE): the single batch clock was mildly asymmetric —
@@ -146,7 +148,7 @@ object StreamBench {
     // fan-out, slightly streaming-favorable) and a post-count clock
     // (fan-out only, batch-favorable) — the true streaming overhead
     // is bracketed between the two ratios. cal.unpersist() moved to a
-    // finally so a fanOutTimed failure can't leak the cache until
+    // finally so a fan-out failure can't leak the cache until
     // spark.stop.
     var batchRate = Double.NaN        // full clock
     var batchRateFanout = Double.NaN  // post-count clock
@@ -171,8 +173,8 @@ object StreamBench {
             cal.queryExecution.optimizedPlan.stats.sizeInBytes /
               math.max(1, m.length.toLong) /
               math.max(1, graft.ocsf.OcsfMappings.routes.size))
-        graft.ocsf.OcsfSink.fanOutTimed(cal, calOut.toString, "us-east-1",
-          "123456789012", filesPerDay = calFpd)
+        graft.ocsf.OcsfSink.fanOutIdempotent(cal, calOut.toString, "us-east-1",
+          "123456789012", runId = 1L, filesPerDay = calFpd)
         val calEnd = System.nanoTime()
         batchRate = rows / ((calEnd - calT0) / 1e9)
         batchRateFanout = rows / ((calEnd - calT1) / 1e9)

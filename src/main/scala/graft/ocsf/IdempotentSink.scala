@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Exactly-once per (route, batch) parquet landing (SURVEY.md §2 A24).
   *
@@ -201,14 +201,25 @@ object IdempotentSink {
     * namespace. */
   def writeBatch(df: DataFrame, baseDir: String, route: String,
                  region: String, accountId: String, batchId: Long,
-                 filesPerDay: Int = 0, writerId: String = ""): Unit = {
+                 filesPerDay: Int = 0, writerId: String = ""): Unit =
+    begin(df.sparkSession, baseDir, route, region, accountId, batchId,
+      filesPerDay, writerId)(df)
+
+  /** [[writeBatch]] split at its generation draw: registers the attempt
+    * now, superseding every earlier attempt for the same (route,
+    * writerId, batchId), and returns the body that lands the route's
+    * frame. [[OcsfSink.fanOutIdempotent]] begins every route on the
+    * calling thread before it queues the bodies on its pool, so
+    * attempts are ordered by call: a route write that a timed-out call
+    * queued but had not started cannot supersede the replay after it. */
+  private[ocsf] def begin(spark: SparkSession, baseDir: String, route: String,
+                          region: String, accountId: String, batchId: Long,
+                          filesPerDay: Int, writerId: String): DataFrame => Unit = {
     val tableDir = new Path(s"$baseDir/${OcsfSink.tableName(route)}")
-    val fs = tableDir.getFileSystem(
-      df.sparkSession.sessionState.newHadoopConf())
+    val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
     val pair = pairName(writerId, batchId)
     val gen = beginAttempt(fs, tableDir, pair)
-    runAttempt(df, fs, tableDir, route, region, accountId, pair,
-      filesPerDay, gen)
+    df => runAttempt(df, fs, tableDir, route, region, accountId, pair, filesPerDay, gen)
   }
 
   /** Registers a new attempt generation, superseding any in-flight
@@ -280,14 +291,10 @@ object IdempotentSink {
     }
     if (currentManifest().isEmpty) {
       val genDir = new Path(batchStaging, s"g$gen")
-      val tStage = System.nanoTime()
       OcsfSink.partitionedFrame(df, region, accountId, filesPerDay).write
         .mode("overwrite")
         .partitionBy("region", "accountId", "eventDay")
         .parquet(genDir.toString)
-      if (sys.env.contains("GRAFT_SINK_TIMING"))
-        System.err.println(s"[graft-timing] $route $pair stage " +
-          s"${(System.nanoTime() - tStage) / 1000000} ms")
       val entries = listRelative(fs, genDir)
         .map { case (rel, len) => (s"g$gen/$rel", len) }
       lockFor(key).synchronized {
@@ -307,15 +314,11 @@ object IdempotentSink {
       }
       val entries = currentManifest().getOrElse(throw new IllegalStateException(
         s"manifest unreadable after publish: $manifest (route=$route batch=$pair)"))
-      val tPromote = System.nanoTime()
       entries.foreach { case (rel, len) =>
         promoteOne(fs, batchStaging, tableDir, rel, len, route, pair)
       }
       writeAtomic(fs, committed, "")
       fs.delete(batchStaging, true)
-      if (sys.env.contains("GRAFT_SINK_TIMING"))
-        System.err.println(s"[graft-timing] $route $pair promote " +
-          s"${(System.nanoTime() - tPromote) / 1000000} ms (${entries.size} files)")
       evict(key)
     }
     ()

@@ -1,5 +1,10 @@
 package graft.ocsf
 
+import java.util.concurrent.TimeoutException
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -49,7 +54,7 @@ object OcsfSink {
     finally { pool.shutdown(); () }
   }
 
-  /** Auto-sizing for [[write]]'s `filesPerDay`: Catalyst's size
+  /** Auto-sizing for [[partitionedFrame]]'s `filesPerDay`: Catalyst's size
     * estimate for the plan divided by a target in-memory chunk per
     * writer (512 MB in-memory ≈ 100-200 MB parquet after encoding),
     * clamped to [1, 4096]. Tiny inputs still get exactly one file per
@@ -61,35 +66,24 @@ object OcsfSink {
     autoFilesPerDayFromBytes(
       df.queryExecution.optimizedPlan.stats.sizeInBytes, targetChunkBytes)
 
-  /** The same sizing from an already-known byte estimate — what the
-    * streaming fan-out uses: reading `optimizedPlan.stats` off each
+  /** The same sizing from an already-known byte estimate — what
+    * [[fanOutIdempotent]] uses: reading `optimizedPlan.stats` off each
     * route's NORMALIZED plan runs a full optimizer pass per route per
-    * micro-batch (measured ~5 s of driver time per 1M-event trigger
-    * across the 13 routes), while the materialized batch cache already
-    * knows its size. One stats read per batch, divided across routes. */
+    * batch (measured ~5 s of driver time per 1M-event trigger across
+    * the 13 routes), while the batch cache already knows its size. One
+    * stats read per batch, divided across routes. */
   def autoFilesPerDayFromBytes(est: BigInt,
                                targetChunkBytes: Long = 512L << 20): Int =
     (est / targetChunkBytes).min(BigInt(4096)).max(BigInt(1)).toInt
 
-  /** A22 — write one normalized class DataFrame in Security Lake
+  /** A22 — one normalized class DataFrame keyed for the Security Lake
+    * layout: the staging half of [[IdempotentSink.writeBatch]]'s
+    * two-phase commit, which must produce the exact final directory
     * layout. `time` must exist (all normalizers emit it).
     *
     * `filesPerDay` is the skew lever: how many writer tasks (and so
-    * files) share one (region, account, day) partition. At 1 the
-    * route writes from one task, no exchange; above 1 the salt only
-    * affects the repartition, never the directory layout. The default
-    * 0 means derive it from the input size ([[autoFilesPerDay]]). */
-  def write(df: DataFrame, baseDir: String, route: String,
-            region: String, accountId: String,
-            filesPerDay: Int = 0): Unit =
-    partitionedFrame(df, region, accountId, filesPerDay).write
-      .mode("append")
-      .partitionBy("region", "accountId", "eventDay")
-      .parquet(s"$baseDir/${tableName(route)}")
-
-  /** The partition-keyed frame behind [[write]] — also the staging
-    * half of [[IdempotentSink.writeBatch]]'s two-phase commit, which
-    * must produce the exact final directory layout.
+    * files) share one (region, account, day) partition. 0 derives it
+    * from the input size ([[autoFilesPerDay]]).
     *
     * At `filesPerDay` 1 the frame is `coalesce(1)` then ordered by
     * (region, accountId, eventDay, time): the single writer task sees
@@ -205,9 +199,9 @@ object OcsfSink {
   def cacheForFanOut(df: DataFrame): DataFrame =
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
 
-  /** Admission control for the fan-out (the `maxConcurrentRoutes = 0`
-    * auto-size): how many route WRITE JOBS may run at once before the
-    * next one queues on the bounded pool.
+  /** Admission control for [[fanOutIdempotent]]: how many route WRITE
+    * JOBS may run at once before the next one queues on the bounded
+    * pool, from the batch's size estimate `batchBytes`.
     *
     * Why it exists: every open parquet writer buffers up to a full row
     * group (`parquet.block.size`, default 128 MB) of UNTRACKED heap —
@@ -234,16 +228,15 @@ object OcsfSink {
     * A real cluster rarely needs this lever (each executor's writers
     * share that executor's heap only), but the same arithmetic holds
     * per-executor when `filesPerDay` is sized to the whole cluster. */
-  def autoConcurrentRoutes(classified: DataFrame, filesPerDay: Int,
-                           nRoutes: Int): Int = {
-    val sc = classified.sparkSession.sparkContext
+  def autoConcurrentRoutes(spark: SparkSession, batchBytes: BigInt,
+                           filesPerDay: Int, nRoutes: Int): Int = {
+    val sc = spark.sparkContext
     admittedRoutes(
       heapBytes = Runtime.getRuntime.maxMemory,
       storageUsedBytes = sc.getRDDStorageInfo.map(_.memSize).sum,
       rowGroupBytes = sc.hadoopConfiguration
         .getLong("parquet.block.size", 128L << 20),
-      batchBytes = classified.queryExecution.optimizedPlan.stats.sizeInBytes,
-      filesPerDay = filesPerDay, nRoutes = nRoutes)
+      batchBytes = batchBytes, filesPerDay = filesPerDay, nRoutes = nRoutes)
   }
 
   /** The pure admission arithmetic behind [[autoConcurrentRoutes]]
@@ -259,89 +252,65 @@ object OcsfSink {
     math.max(1L, math.min(nRoutes.toLong, budget / perRoute)).toInt
   }
 
-  /** A23 — 13-way fan-out: normalize every route off the same
-    * classified scan and write each to its own table. The 13 writes
-    * are independent Spark jobs and run CONCURRENTLY — sequential
-    * submission left the cluster idle between small jobs and made the
-    * fan-out latency the sum instead of the max. Cache `classified`
-    * first (as EtlBench/demos do) so the scan isn't re-run per route —
-    * ideally [[routeClustered]] first, so each route's rescan prunes
-    * to its own cache batches. */
-  def fanOut(classified: DataFrame, baseDir: String,
-             region: String, accountId: String): Unit = {
-    fanOutTimed(classified, baseDir, region, accountId)
-    ()
-  }
-
-  /** [[fanOut]] that also reports per-route wall seconds (measured
-    * inside each route's future, so contention between the concurrent
-    * writes is included — the number a capacity plan needs).
+  /** A23 — the 13-way fan-out, the one write path of batch and stream:
+    * normalize every route off the same classified relation and land
+    * each in its own table through [[IdempotentSink]]'s two-phase
+    * commit, keyed by `runId` (the streaming batch id, or e.g. a batch
+    * job's ingest day). Re-running a `runId` after a crash or timeout
+    * skips the routes that already committed and resumes or restages
+    * the rest. Cache `classified` first ([[routeClustered]],
+    * [[cacheForFanOut]], one `count()`): every route rescans it.
     *
-    * `filesPerDay` (default 0 = auto-size) is the write-parallelism
-    * lever fanned out to every route's [[write]]. The auto default
-    * optimizes for file hygiene: a small batch gets ONE file per
-    * (route, day) — which also means ONE parquet-encoding core per
-    * route, 13 busy cores on a 32-core box. When fan-out LATENCY
-    * matters more than file count (tight streaming triggers, bench),
-    * pass ~`cores / 13` so the concurrent route jobs can use the whole
-    * machine; the day's files stay `filesPerDay × routes`, bounded. */
-  /** `maxConcurrentRoutes` is the write-buffer admission lever
-    * (0 = auto via [[autoConcurrentRoutes]]): route jobs past the cap
-    * queue on the bounded pool instead of stacking parquet buffers. */
-  def fanOutTimed(classified: DataFrame, baseDir: String,
-                  region: String, accountId: String,
-                  filesPerDay: Int = 0,
-                  maxConcurrentRoutes: Int = 0): Map[String, Double] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val routed = Normalizers.normalizeAll(classified).toSeq
-    val width =
-      if (maxConcurrentRoutes > 0) math.min(routed.size, maxConcurrentRoutes)
-      else autoConcurrentRoutes(classified, filesPerDay, routed.size)
-    withFanOutPool(width, "graft-fanout") { implicit ec =>
-      val jobs = routed.map { case (route, df) =>
-        Future {
-          val t0 = System.nanoTime()
-          write(df, baseDir, route, region, accountId, filesPerDay)
-          route -> (System.nanoTime() - t0) / 1e9
-        }
-      }
-      Await.result(Future.sequence(jobs), Duration.Inf).toMap
-    }
-  }
-
-  /** [[fanOut]] with restart safety: each route lands through
-    * [[IdempotentSink.writeBatch]] keyed by a caller-chosen `runId`
-    * (e.g. the ingest day or the input manifest hash), so re-running a
-    * batch job that died mid-fan-out skips the routes that already
-    * committed instead of re-appending them. Same two-phase commit as
-    * the streaming path.
+    * The route jobs run concurrently (sequential submission made the
+    * latency the sum instead of the max) on a pool created per call,
+    * from the calling thread, so they inherit its Spark local
+    * properties (the streaming batch id, a job group). The batch's size
+    * estimate is read once: it sizes the writers per (route, day) when
+    * `filesPerDay` is 0 (ONE file per (route, day) below 512 MB a
+    * route) and the pool width ([[autoConcurrentRoutes]]).
     *
-    * `writerId` namespaces this job's commit log so it can run BESIDE
-    * a live streaming query on the same tables (the stream owns the
-    * default empty namespace): a backfill passes a stable unique id —
-    * e.g. `"backfill20260813"` — and its control pairs land as
-    * `w-<writerId>-<runId>`, disjoint from the stream's. See
-    * [[IdempotentSink]]'s concurrency contract; retire the finished
-    * backfill into compacted history with
-    * `compactCommits(foldWriters = Set(writerId))`. */
+    * `writerId` namespaces the commit log of a job running BESIDE the
+    * live stream, which owns the empty namespace (see
+    * [[IdempotentSink]]); retire a finished backfill with
+    * `compactCommits(foldWriters = Set(writerId))`.
+    *
+    * `timeout` bounds the wait: a wedged route write (a stuck remote
+    * upload) throws a `TimeoutException` naming the stuck routes
+    * instead of hanging the caller. The abandoned writes are fenced by
+    * the generation token once the `runId` is replayed.
+    *
+    * Returns each route's wall seconds, measured inside its future, so
+    * contention between the concurrent writes is included. */
   def fanOutIdempotent(classified: DataFrame, baseDir: String,
                        region: String, accountId: String,
                        runId: Long, writerId: String = "",
-                       maxConcurrentRoutes: Int = 0): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val routed = Normalizers.normalizeAll(classified).toSeq
-    val width =
-      if (maxConcurrentRoutes > 0) math.min(routed.size, maxConcurrentRoutes)
-      else autoConcurrentRoutes(classified, filesPerDay = 1, routed.size)
-    withFanOutPool(width, "graft-fanout-idem") { implicit ec =>
-      val jobs = routed.map { case (route, df) =>
-        Future(IdempotentSink.writeBatch(df, baseDir, route, region,
-          accountId, runId, writerId = writerId))
+                       filesPerDay: Int = 0,
+                       routes: Seq[String] = OcsfMappings.routes,
+                       timeout: Duration = Duration.Inf): Map[String, Double] = {
+    val est = classified.queryExecution.optimizedPlan.stats.sizeInBytes
+    val fpd =
+      if (filesPerDay > 0) filesPerDay
+      else autoFilesPerDayFromBytes(est / math.max(1, routes.size))
+    val width = autoConcurrentRoutes(classified.sparkSession, est, fpd, routes.size)
+    withFanOutPool(width, "graft-fanout") { implicit ec =>
+      val jobs = routes.map { route =>
+        // the attempt begins here, on the calling thread: a replay of
+        // this runId supersedes every write this call queued
+        val land = IdempotentSink.begin(classified.sparkSession, baseDir, route,
+          region, accountId, runId, fpd, writerId)
+        route -> Future {
+          val t0 = System.nanoTime()
+          land(Normalizers.byRoute(route)(classified.filter(col("route") === route)))
+          route -> (System.nanoTime() - t0) / 1e9
+        }
       }
-      Await.result(Future.sequence(jobs), Duration.Inf)
+      try Await.result(Future.sequence(jobs.map(_._2)), timeout).toMap
+      catch {
+        case _: TimeoutException =>
+          val stuck = jobs.collect { case (r, f) if !f.isCompleted => r }
+          throw new TimeoutException(s"fan-out batch $runId exceeded $timeout; " +
+            s"stuck routes: ${stuck.mkString(", ")}")
+      }
     }
-    ()
   }
 }

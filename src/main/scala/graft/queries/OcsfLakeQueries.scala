@@ -23,7 +23,7 @@ import graft.sources.FdrSource
   *
   * [[OcsfLake.ensure]] materializes a deterministic miniature lake at a
   * FIXED path ([[OcsfLake.Root]]) by running the full ETL (gz JSON-lines
-  * → classify → 13 normalizers → partitioned fan-out) over the
+  * → classify → 13 normalizers → exactly-once partitioned fan-out) over the
   * deterministic [[graft.EtlBench.line]] corpus. The path must be a
   * compile-time constant because [[oracleSql]] strings embed it — the
   * driver's DuckDB session only gets views of the star-schema tables,
@@ -35,8 +35,9 @@ object OcsfLake {
   /** Fixed lake location — embedded in the oracle SQL, so a constant. */
   val Root = "/tmp/graft_ocsf_lake"
 
-  /** Bump to invalidate lakes built by older generator versions. */
-  val Version = 1
+  /** Bump to invalidate lakes built by older generator versions
+    * (2: landed through the exactly-once sink, with a commit log). */
+  val Version = 2
 
   /** 10k events per route. */
   val NEvents = 130000L
@@ -64,8 +65,10 @@ object OcsfLake {
     if (Files.exists(rootPath)) deleteRecursively(rootPath)
     val classified = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
       FdrSource.load(spark, landing.toString).drop("raw")))
-    OcsfSink.fanOut(classified, Root, "us-east-1", "123456789012")
-    classified.unpersist()
+    try {
+      classified.count()
+      OcsfSink.fanOutIdempotent(classified, Root, "us-east-1", "123456789012", runId = 1L)
+    } finally { classified.unpersist(); () }
     deleteRecursively(landing)
     Files.createFile(marker)
     Root

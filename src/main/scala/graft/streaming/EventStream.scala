@@ -99,8 +99,9 @@ object EventStream {
 
   /** Single-pass 13-way fan-out: ONE streaming query reads the landing
     * prefix once per micro-batch and writes every route's partitioned
-    * parquet table from the cached batch — the streaming counterpart
-    * of [[graft.ocsf.OcsfSink.fanOut]].
+    * parquet table from the cached batch through
+    * [[graft.ocsf.OcsfSink.fanOutIdempotent]], the same fan-out a batch
+    * job calls with its own `runId`.
     *
     * One file-source stream per route would list and parse every
     * landing object 13 times (13× IO at 100 TB/day: reading 1.3 PB to
@@ -123,22 +124,16 @@ object EventStream {
     * one wedged write (a stuck remote upload) must FAIL the batch — so
     * the checkpoint retry machinery engages and the stuck route is
     * named — rather than hang the whole query forever. The timed-out
-    * futures are abandoned, not cancelled; if the query restarts in
+    * writes are abandoned, not cancelled; if the query restarts in
     * the SAME JVM, the replayed batch supersedes them via
     * IdempotentSink's per-(route, batch) generation token — a stale
     * attempt stages into its own generation dir and is fenced off
     * (SupersededAttemptException) at its first control step, so it can
     * never publish a manifest or promote files the replay owns.
     *
-    * The route writes run on a DEDICATED bounded pool (size = routes)
-    * created per batch and shut down when the batch ends — never the
-    * JVM-shared global pool, where two concurrent streams' blocking
-    * parquet writes would starve each other. An abandoned straggler
-    * finishes on its own (daemon) pool thread, then the pool dies.
-    *
     * `compactEvery` > 0 folds each route's per-batch manifest/marker
     * pairs into one via [[IdempotentSink.compactCommits]] every N
-    * batches (after the batch commits, same pool). At a 10 s trigger a
+    * batches (after the batch commits). At a 10 s trigger a
     * table otherwise accrues ~10⁵–10⁶ control files over months — an
     * S3 LIST/GET tax on every read. Compaction is safe concurrent with
     * readers (during its publish-then-delete window both the merged
@@ -157,21 +152,20 @@ object EventStream {
     * external job. Same failure contract as compaction: the index is
     * advisory, so a failed refresh is logged, never a batch failure.
     *
-    * `filesPerDay` is [[OcsfSink.write]]'s writer-parallelism lever
-    * fanned out to every route's [[IdempotentSink.writeBatch]]. The
-    * default 0 auto-sizes per batch from the materialized cache's
-    * stats (ONE file per (route, day) at micro-batch scale — the
+    * `filesPerDay` is the writer-parallelism lever (writer tasks per
+    * (route, day)) of every route's [[IdempotentSink.writeBatch]]. The
+    * default 0 auto-sizes per batch from the cache's size estimate
+    * (ONE file per (route, day) at micro-batch scale — the
     * file-hygiene optimum for a long-running table). At one file per
     * day each route's write is a single narrow stage: the route's
     * cache scan, normalize, time sort and encode run in one task, with
     * no shuffle (OcsfSink.partitionedFrame). Above 1 the route pays a
     * salted repartition: a shuffle-map stage before its write stage.
-    * Unlike the batch
-    * fan-out (OcsfSink.fanOutTimed's `cores/13 + 1` latency stance),
-    * extra writers do NOT pay off on this path at micro-batch scale —
-    * measured at 1M-event triggers: filesPerDay=3 ran ~25% SLOWER than
-    * 1 (3× staged files through the two-phase commit, 39 concurrent
-    * writers fork-storming the local-FS permission calls) — so only
+    * Unlike a one-shot batch (EtlBench's `cores/13 + 1` latency
+    * stance), extra writers do NOT pay off on this path at micro-batch
+    * scale — measured at 1M-event triggers: filesPerDay=3 ran ~25%
+    * SLOWER than 1 (3× staged files through the two-phase commit, 39
+    * concurrent writers fork-storming the local-FS permission calls) — so only
     * raise it for backfill-sized batches where a route's slice
     * genuinely outgrows one writer. */
   def start(spark: SparkSession, landingDir: String, baseDir: String,
@@ -183,7 +177,6 @@ object EventStream {
             statsCols: Seq[String] = Nil,
             discovery: Discovery = Listing,
             filesPerDay: Int = 0): StreamingQuery = {
-    import scala.concurrent.{Await, Future}
     import graft.ocsf.OcsfSink
     readClassified(spark, landingDir, discovery).writeStream
       .queryName("ocsf-fanout")
@@ -214,30 +207,10 @@ object EventStream {
         // batch path (EtlBench) has always made
         clustered.count()
         val tCached = System.nanoTime()
-        // auto writer sizing from the MATERIALIZED cache's stats, once
-        // per batch and divided across routes — never the per-route
-        // autoFilesPerDay, whose optimizer-stats pass over 13 normalized
-        // plans costs ~5 s of driver time per 1M-event trigger
-        val fpd =
-          if (filesPerDay > 0) filesPerDay
-          else OcsfSink.autoFilesPerDayFromBytes(
-            clustered.queryExecution.optimizedPlan.stats.sizeInBytes /
-              math.max(1, routes.size))
-        try OcsfSink.withFanOutPool(routes.size, "graft-stream-fanout") { implicit ec =>
-          val jobs = routes.map { route =>
-            route -> Future(IdempotentSink.writeBatch(
-              Normalizers.byRoute(route)(clustered.filter(col("route") === route)),
-              baseDir, route, region, accountId, batchId,
-              filesPerDay = fpd))
-          }
-          try Await.result(Future.sequence(jobs.map(_._2)), batchTimeout)
-          catch {
-            case _: concurrent.TimeoutException =>
-              val stuck = jobs.collect { case (r, f) if !f.isCompleted => r }
-              throw new java.util.concurrent.TimeoutException(
-                s"fan-out batch $batchId exceeded $batchTimeout; " +
-                  s"stuck routes: ${stuck.mkString(", ")}")
-          }
+        try {
+          OcsfSink.fanOutIdempotent(clustered, baseDir, region, accountId,
+            runId = batchId, filesPerDay = filesPerDay, routes = routes,
+            timeout = batchTimeout)
           // one line per trigger (bounded, StreamMetrics-style): the
           // cache/fan-out split is the first thing a latency
           // investigation needs and Spark's progress only reports the

@@ -32,7 +32,8 @@ class CatalogSpec extends graft.SparkSpec {
     writeGz(landing, "a.gz", Seq(dnsLine(1, 1700000000000L),
       dnsLine(2, 1700000000000L + 86400000L)))
     val classified = FdrSource.load(spark, landing.toString)
-    OcsfSink.fanOut(classified, lake.toString, "us-east-1", "123456789012")
+    OcsfSink.fanOutIdempotent(classified, lake.toString, "us-east-1", "123456789012",
+      runId = 1L)
 
     val db = "ocsf_cat_spec"
     val tables = OcsfTables.registerCatalog(spark, lake.toString, db)
@@ -61,8 +62,8 @@ class CatalogSpec extends graft.SparkSpec {
     // a NEW ingest day lands, re-register recovers the new partition
     val landing2 = Files.createTempDirectory("cat-landing2")
     writeGz(landing2, "b.gz", Seq(dnsLine(3, 1700000000000L + 2 * 86400000L)))
-    OcsfSink.fanOut(FdrSource.load(spark, landing2.toString),
-      lake.toString, "us-east-1", "123456789012")
+    OcsfSink.fanOutIdempotent(FdrSource.load(spark, landing2.toString),
+      lake.toString, "us-east-1", "123456789012", runId = 2L)
     OcsfTables.registerCatalog(spark, lake.toString, db)
     assert(spark.sql(s"SELECT count(*) FROM $db.dns_activity").head().getLong(0) == 3)
     assert(spark.sql(s"SELECT count(*) FROM $db.dns_activity " +

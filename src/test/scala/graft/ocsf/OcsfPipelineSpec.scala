@@ -176,7 +176,8 @@ class OcsfPipelineSpec extends SparkSpec {
 
   test("A22-A23: Security-Lake layout fan-out") {
     val outDir = Files.createTempDirectory("ocsf-out")
-    OcsfSink.fanOut(classified, outDir.toString, "us-east-1", "123456789012")
+    OcsfSink.fanOutIdempotent(classified, outDir.toString, "us-east-1", "123456789012",
+      runId = 1L)
     val process = outDir.resolve("process_activity")
       .resolve("region=us-east-1").resolve("accountId=123456789012")
       .resolve("eventDay=20231114")
@@ -207,7 +208,8 @@ class OcsfPipelineSpec extends SparkSpec {
     assert(spread <= 2, s"a route spans $spread partitions, expected <= 2")
     // fan-out from the clustered relation lands the same rows
     val outDir = Files.createTempDirectory("ocsf-out-clustered")
-    OcsfSink.fanOut(clustered, outDir.toString, "us-east-1", "123456789012")
+    OcsfSink.fanOutIdempotent(clustered, outDir.toString, "us-east-1", "123456789012",
+      runId = 1L)
     val back = spark.read.parquet(outDir.resolve("process_activity").toString)
     assert(back.count() == 1)
   }
@@ -297,8 +299,8 @@ class OcsfPipelineSpec extends SparkSpec {
     val df = times.zipWithIndex.toDF("t", "i")
       .select(struct(concat(lit("u"), col("i")).as("uid")).as("metadata"),
         to_timestamp(col("t")).as("time"))
-    OcsfSink.write(df, outDir.toString, "DNS Activity", "us-east-1",
-      "123456789012", filesPerDay = 1)
+    IdempotentSink.writeBatch(df, outDir.toString, "DNS Activity", "us-east-1",
+      "123456789012", batchId = 1L, filesPerDay = 1)
     val day = outDir.resolve("dns_activity")
       .resolve("region=us-east-1").resolve("accountId=123456789012")
       .resolve("eventDay=20231114")
@@ -321,10 +323,10 @@ class OcsfPipelineSpec extends SparkSpec {
 
   test("A22: salted write spreads a hot day across filesPerDay files") {
     val outDir = Files.createTempDirectory("ocsf-salted")
-    OcsfSink.write(
+    IdempotentSink.writeBatch(
       Normalizers.processActivity(classified.filter(col("route") === "Process Activity")),
       outDir.toString, "Process Activity", "us-east-1", "123456789012",
-      filesPerDay = 3)
+      batchId = 1L, filesPerDay = 3)
     val day = outDir.resolve("process_activity")
       .resolve("region=us-east-1").resolve("accountId=123456789012")
       .resolve("eventDay=20231114")
@@ -337,7 +339,8 @@ class OcsfPipelineSpec extends SparkSpec {
 
   test("lake read-back: OcsfTables registers views and SQL prunes partitions") {
     val outDir = Files.createTempDirectory("ocsf-lake")
-    OcsfSink.fanOut(classified, outDir.toString, "eu-west-1", "000011112222")
+    OcsfSink.fanOutIdempotent(classified, outDir.toString, "eu-west-1", "000011112222",
+      runId = 1L)
     val views = OcsfTables.registerAll(spark, outDir.toString)
     assert(views.contains("ocsf_dns_activity"), views.toString)
     val n = spark.sql(
@@ -382,7 +385,8 @@ class OcsfPipelineSpec extends SparkSpec {
     // and the cap never exceeds the route count
     assert(admit(512 * G, 0, 1 * M) == 13)
     // the live wrapper agrees with the pure arithmetic on a real frame
-    val width = OcsfSink.autoConcurrentRoutes(classified, filesPerDay = 3,
+    val width = OcsfSink.autoConcurrentRoutes(spark,
+      classified.queryExecution.optimizedPlan.stats.sizeInBytes, filesPerDay = 3,
       nRoutes = 13)
     assert(width >= 1 && width <= 13)
   }
@@ -427,18 +431,44 @@ class OcsfPipelineSpec extends SparkSpec {
     assert(shuffles(3) == 2)
   }
 
-  test("A22: at P > 1 cache partitions each route lands one time-sorted file per eventDay") {
-    // every route, three days, times scrambled within each day
+  /** 260 lines over every route and three days, times scrambled
+    * within each day. */
+  lazy val multiDayLines: Seq[String] = {
     val day0 = 1700006400L // 2023-11-15T00:00:00Z
-    val lines = (0L until 260L).map { i =>
+    (0L until 260L).map { i =>
       val ts = (day0 + (i % 3) * 86400 + (i * 7919) % 86400) * 1000
       graft.EtlBench.line(i)
         .replace(s""""timestamp":"${1700000000000L + i}"""", s""""timestamp":"$ts"""")
         .replace(s""""UTCTimestamp":"${(1700000000000L + i) / 1000}"""",
           s""""UTCTimestamp":"${ts / 1000}"""")
     }
+  }
+
+  /** Every route's committed rows under `outDir` by `metadata.uid`,
+    * after checking that each route holds exactly one time-sorted
+    * file per eventDay of [[multiDayLines]]. */
+  def committedMultiDayUids(outDir: String): Map[String, Seq[String]] = {
+    val conf = spark.sessionState.newHadoopConf()
+    OcsfMappings.routes.map { route =>
+      val table = new org.apache.hadoop.fs.Path(s"$outDir/${OcsfSink.tableName(route)}")
+      val files = IdempotentSink.committedFiles(table.getFileSystem(conf), table)
+      val byDay = files.groupBy(_.getParent.getName)
+      assert(byDay.keySet == Set("eventDay=20231115", "eventDay=20231116",
+        "eventDay=20231117"), s"$route: ${files.mkString(", ")}")
+      assert(byDay.values.forall(_.size == 1), s"$route: ${files.mkString(", ")}")
+      route -> files.flatMap { file =>
+        val rows = spark.read.parquet(file.toString).select("time", "metadata.uid")
+          .collect().toSeq
+        val times = rows.map(_.getTimestamp(0).getTime)
+        assert(times == times.sorted, s"$route: $file is not time-sorted")
+        rows.map(_.getString(1))
+      }
+    }.toMap
+  }
+
+  test("A22: at P > 1 cache partitions each route lands one time-sorted file per eventDay") {
     val landing = Files.createTempDirectory("ocsf-multiday")
-    writeGz(landing, "part-0001.gz", lines)
+    writeGz(landing, "part-0001.gz", multiDayLines)
     val clustered = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
       FdrSource.load(spark, landing.toString).drop("raw"), tasksPerRoute = 2))
     val expected = clustered.groupBy("route").count().collect()
@@ -448,21 +478,70 @@ class OcsfPipelineSpec extends SparkSpec {
     val outDir = Files.createTempDirectory("ocsf-multiday-out").toString
     try OcsfSink.fanOutIdempotent(clustered, outDir, "us-east-1", "123456789012", runId = 1L)
     finally { clustered.unpersist(); () }
-    val conf = spark.sessionState.newHadoopConf()
-    OcsfMappings.routes.foreach { route =>
-      val table = new org.apache.hadoop.fs.Path(s"$outDir/${OcsfSink.tableName(route)}")
-      val files = IdempotentSink.committedFiles(table.getFileSystem(conf), table)
-      val byDay = files.groupBy(_.getParent.getName)
-      assert(byDay.keySet == Set("eventDay=20231115", "eventDay=20231116",
-        "eventDay=20231117"), s"$route: ${files.mkString(", ")}")
-      assert(byDay.values.forall(_.size == 1), s"$route: ${files.mkString(", ")}")
-      val rows = files.map { file =>
-        val times = spark.read.parquet(file.toString).select("time")
-          .collect().map(_.getTimestamp(0).getTime).toSeq
-        assert(times == times.sorted, s"$route: $file is not time-sorted")
-        times.size
-      }
-      assert(rows.sum == expected(route), s"$route lost rows")
+    committedMultiDayUids(outDir).foreach { case (route, uids) =>
+      assert(uids.size == expected(route), s"$route lost rows")
     }
+  }
+
+  test("A24: stream and batch fan-outs land the same rows in the same layout") {
+    val landing = Files.createTempDirectory("ocsf-parity")
+    writeGz(landing, "part-0001.gz", multiDayLines)
+    val streamOut = Files.createTempDirectory("ocsf-parity-stream").toString
+    graft.streaming.EventStream.start(spark, landing.toString, streamOut,
+      Files.createTempDirectory("ocsf-parity-ckpt").toString, "us-east-1",
+      "123456789012", trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .awaitTermination()
+    val batchOut = Files.createTempDirectory("ocsf-parity-batch").toString
+    val cached = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
+      FdrSource.load(spark, landing.toString).drop("raw")))
+    try {
+      cached.count()
+      OcsfSink.fanOutIdempotent(cached, batchOut, "us-east-1", "123456789012", runId = 1L)
+    } finally { cached.unpersist(); () }
+    val viaStream = committedMultiDayUids(streamOut)
+    val viaBatch = committedMultiDayUids(batchOut)
+    assert(viaStream.values.map(_.size).sum == 260)
+    OcsfMappings.routes.foreach { route =>
+      assert(viaStream(route).toSet == viaBatch(route).toSet, route)
+      assert(viaStream(route).size == viaBatch(route).size, route)
+    }
+  }
+
+  test("A23: a timed-out fan-out names its stuck routes; a rerun of its runId lands each row once") {
+    import scala.concurrent.duration.DurationInt
+    val cached = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(classified.drop("raw")))
+    val outDir = Files.createTempDirectory("ocsf-timeout").toString
+    try {
+      val expected = cached.groupBy("route").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val ex = intercept[java.util.concurrent.TimeoutException] {
+        OcsfSink.fanOutIdempotent(cached, outDir, "us-east-1", "123456789012",
+          runId = 1L, timeout = 1.millis)
+      }
+      assert(ex.getMessage.contains("stuck routes: "), ex.getMessage)
+      val stuck = ex.getMessage.split("stuck routes: ")(1).split(", ").toSet
+      assert(stuck.nonEmpty && stuck.subsetOf(OcsfMappings.routes.toSet), ex.getMessage)
+      OcsfSink.fanOutIdempotent(cached, outDir, "us-east-1", "123456789012", runId = 1L)
+      val conf = spark.sessionState.newHadoopConf()
+      def landedExactlyOnce(): Unit = OcsfMappings.routes.foreach { route =>
+        val table = new org.apache.hadoop.fs.Path(s"$outDir/${OcsfSink.tableName(route)}")
+        val files = IdempotentSink.committedFiles(table.getFileSystem(conf), table)
+        val uids = files.flatMap(f => spark.read.parquet(f.toString)
+          .select("metadata.uid").collect().map(_.getString(0)))
+        assert(uids.size == expected.getOrElse(route, 0L), s"$route: $uids")
+        assert(uids.distinct.size == uids.size, s"$route: duplicate uids $uids")
+      }
+      landedExactlyOnce()
+      // the abandoned attempts finish on their own pool threads; each
+      // must have been fenced by the replay's generation token: nothing
+      // more lands, and no in-flight bookkeeping is left behind
+      def fanOutThreads = Thread.getAllStackTraces.keySet.toArray
+        .map(_.asInstanceOf[Thread]).filter(_.getName.startsWith("graft-fanout-"))
+      val deadline = System.nanoTime() + 180L * 1000000000L
+      while (fanOutThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      landedExactlyOnce()
+      assert(!IdempotentSink.bookkeepingKeys.exists(_.contains(outDir)),
+        IdempotentSink.bookkeepingKeys)
+    } finally { cached.unpersist(); () }
   }
 }
