@@ -49,8 +49,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     (and a straggler that races the eviction sees a freshly-zeroed
   *     generation counter, which can never equal its own generation).
   *
-  * Concurrent attempts for the same (table, batch) — the timed-out
-  * route future the streaming layer abandoned racing the replayed
+  * Concurrent attempts for the same (table, batch) — a timed-out
+  * route write whose cancellation has not landed yet racing the replayed
   * batch — are serialized at the CONTROL steps (manifest publish,
   * promote, commit run under one in-process lock per key) and the
   * stale attempt is rejected there with [[SupersededAttemptException]]

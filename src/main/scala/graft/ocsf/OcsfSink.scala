@@ -38,8 +38,9 @@ object OcsfSink {
     * fork-join pool (`ExecutionContext.global`) lets two concurrent
     * fan-outs in one JVM starve each other and everything else sharing
     * the global pool. Daemon threads; `shutdown()` is graceful, so a
-    * timed-out straggler the caller abandoned finishes on its own
-    * thread and the pool then dies — nothing leaks past the last task. */
+    * timed-out straggler (its Spark jobs cancelled by the caller)
+    * finishes on its own thread and the pool then dies — nothing leaks
+    * past the last task. */
   private[graft] def withFanOutPool[T](threads: Int, name: String)(
       body: scala.concurrent.ExecutionContext => T): T = {
     val seq = new java.util.concurrent.atomic.AtomicInteger(1)
@@ -276,8 +277,14 @@ object OcsfSink {
     *
     * `timeout` bounds the wait: a wedged route write (a stuck remote
     * upload) throws a `TimeoutException` naming the stuck routes
-    * instead of hanging the caller. The abandoned writes are fenced by
-    * the generation token once the `runId` is replayed.
+    * instead of hanging the caller. The call's route jobs carry one job
+    * tag (named in the message), and a timeout cancels them: running
+    * jobs are cancelled, a route body still queued never starts, and a
+    * job a body submits after the cancel is cancelled as it starts. A
+    * tag rather than a job group, so a streaming query's own group
+    * still cancels its batch. A cancelled write that already staged
+    * files is fenced by the generation token once the `runId` is
+    * replayed.
     *
     * Returns each route's wall seconds, measured inside its future, so
     * contention between the concurrent writes is included. */
@@ -292,25 +299,62 @@ object OcsfSink {
       if (filesPerDay > 0) filesPerDay
       else autoFilesPerDayFromBytes(est / math.max(1, routes.size))
     val width = autoConcurrentRoutes(classified.sparkSession, est, fpd, routes.size)
+    val sc = classified.sparkSession.sparkContext
+    val tag = s"graft-fanout-$runId-${java.util.UUID.randomUUID()}"
+    val cancelled = new java.util.concurrent.atomic.AtomicBoolean(false)
     withFanOutPool(width, "graft-fanout") { implicit ec =>
-      val jobs = routes.map { route =>
-        // the attempt begins here, on the calling thread: a replay of
-        // this runId supersedes every write this call queued
-        val land = IdempotentSink.begin(classified.sparkSession, baseDir, route,
-          region, accountId, runId, fpd, writerId)
-        route -> Future {
-          val t0 = System.nanoTime()
-          land(Normalizers.byRoute(route)(classified.filter(col("route") === route)))
-          route -> (System.nanoTime() - t0) / 1e9
-        }
-      }
+      // the pool threads are created while the futures are queued and
+      // inherit the calling thread's local properties, the tag included
+      sc.addJobTag(tag)
+      val jobs =
+        try routes.map { route =>
+          // the attempt begins here, on the calling thread: a replay of
+          // this runId supersedes every write this call queued
+          val land = IdempotentSink.begin(classified.sparkSession, baseDir, route,
+            region, accountId, runId, fpd, writerId)
+          route -> Future {
+            if (cancelled.get)
+              throw new java.util.concurrent.CancellationException(s"$tag timed out")
+            val t0 = System.nanoTime()
+            land(Normalizers.byRoute(route)(classified.filter(col("route") === route)))
+            route -> (System.nanoTime() - t0) / 1e9
+          }
+        } finally sc.removeJobTag(tag)
       try Await.result(Future.sequence(jobs.map(_._2)), timeout).toMap
       catch {
         case _: TimeoutException =>
+          cancelRouteJobs(sc, tag, cancelled, jobs.map(_._2))
           val stuck = jobs.collect { case (r, f) if !f.isCompleted => r }
-          throw new TimeoutException(s"fan-out batch $runId exceeded $timeout; " +
-            s"stuck routes: ${stuck.mkString(", ")}")
+          throw new TimeoutException(s"fan-out batch $runId (job tag $tag) " +
+            s"exceeded $timeout; stuck routes: ${stuck.mkString(", ")}")
       }
     }
+  }
+
+  /** Cancels a timed-out fan-out's route jobs: bodies not yet started
+    * see `cancelled` and never run, and every job tagged `tag` is
+    * cancelled. A body already past that check may still submit its
+    * write job (its planning runs inside the write call), and
+    * `cancelJobsWithTag` only reaches running jobs, so a listener
+    * cancels such a job as it starts until every body has finished.
+    * The listener is added before the tag is cancelled, so no job
+    * slips between the two. */
+  private def cancelRouteJobs(sc: org.apache.spark.SparkContext, tag: String,
+                              cancelled: java.util.concurrent.atomic.AtomicBoolean,
+                              bodies: Seq[Future[_]]): Unit = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    cancelled.set(true)
+    val late = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(',').contains(tag)))
+          sc.cancelJob(e.jobId, s"fan-out $tag timed out")
+    }
+    sc.addSparkListener(late)
+    sc.cancelJobsWithTag(tag, s"fan-out $tag timed out")
+    val left = new java.util.concurrent.atomic.AtomicInteger(bodies.size)
+    bodies.foreach(_.onComplete { _ =>
+      if (left.decrementAndGet() == 0) sc.removeSparkListener(late)
+    }(scala.concurrent.ExecutionContext.parasitic))
   }
 }

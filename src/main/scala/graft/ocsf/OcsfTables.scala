@@ -1,7 +1,15 @@
 package graft.ocsf
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Reader side of the lake (the reference's Athena consumption surface,
   * /root/reference/README.md:48): load any OCSF class table written by
@@ -36,10 +44,16 @@ object OcsfTables {
     * manifests in executors — and the guard is the opt-in maintenance
     * check (pass true from an audit job, or after suspecting an
     * out-of-band append). */
-  /** `mergeSchemas` crosses an ADDITIVE schema-evolution boundary
+  /** The default read costs ONE footer read on the driver: the schema
+    * Spark wrote into the first committed file's footer (see
+    * [[readFiles]]). A table whose files carry different schemas, read
+    * without `mergeSchemas`, therefore reads as one file's schema, as
+    * Spark's own non-merging inference does.
+    *
+    * `mergeSchemas` crosses an ADDITIVE schema-evolution boundary
     * ([[SchemaEvolution]]): batches written before a column was added
-    * serve null for it. It costs a footer read per file (Spark's
-    * parquet schema merge), so at scale prefer an explicit
+    * serve null for it. It keeps Spark's schema merge, a job that reads
+    * a footer per file, so at scale prefer an explicit
     * `spark.read.schema(evolvedSchema)` over the same file list — this
     * flag is the zero-setup path for occasional readers. */
   def load(spark: SparkSession, baseDir: String, route: String,
@@ -59,9 +73,7 @@ object OcsfTables {
           .map(r => new Path(new java.net.URI(r.getString(0)))).toSeq
         require(files.nonEmpty,
           s"$tableDir has a batch-commit log but no committed data files")
-        val reader = spark.read.option("basePath", tableDir.toString)
-        (if (mergeSchemas) reader.option("mergeSchema", "true") else reader)
-          .parquet(files.map(_.toString): _*)
+        readFiles(spark, fs, tableDir, files, mergeSchemas)
       } else loadCommitted(spark, fs, tableDir,
         IdempotentSink.readContract(fs, tableDir), verifyAppends,
         mergeSchemas)
@@ -118,10 +130,47 @@ object OcsfTables {
           s"named by any batch manifest and would be invisible to the " +
           s"manifest reader; first: ${strays.headOption.getOrElse("")}")
     }
+    readFiles(spark, fs, tableDir, files, mergeSchemas)
+  }
+
+  /** The one committed file-list read. Spark's schema inference
+    * (without merging) reads ONE file's footer and takes the schema it
+    * wrote there under [[SparkSchemaKey]] — but it does so in a
+    * one-task job. This reads that key from the first listed file's
+    * footer on the driver and hands Spark the schema, so resolving a
+    * table runs no job. The schema holds data columns only, so the
+    * partition columns stay path-inferred, exactly as before. Spark
+    * infers as before when the read merges schemas (`mergeSchemas`, or
+    * `spark.sql.parquet.mergeSchema` on the session) or when the footer
+    * has no parseable key (a file not written by Spark). */
+  private def readFiles(spark: SparkSession, fs: FileSystem, tableDir: Path,
+                        files: Seq[Path],
+                        mergeSchemas: Boolean = false): DataFrame = {
     val reader = spark.read.option("basePath", tableDir.toString)
-    (if (mergeSchemas) reader.option("mergeSchema", "true") else reader)
+    (if (mergeSchemas) reader.option("mergeSchema", "true")
+     else if (spark.sessionState.conf.isParquetSchemaMergingEnabled) reader
+     else footerSchema(fs.getConf, files.head).fold(reader)(s => reader.schema(s)))
       .parquet(files.map(_.toString): _*)
   }
+
+  /** The footer key Spark's parquet writer stores its row schema under
+    * (`ParquetReadSupport.SPARK_METADATA_KEY`). */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark schema `file`'s footer carries, read on the driver
+    * without touching a row group; None when the footer cannot be read
+    * or has no parseable schema key — the caller then lets Spark infer
+    * (and raise its own error for an unreadable file). */
+  private[ocsf] def footerSchema(conf: Configuration, file: Path): Option[StructType] =
+    try {
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+        HadoopReadOptions.builder(conf, file)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+      val json =
+        try reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
+        finally reader.close()
+      Option(json).map(DataType.fromJson).collect { case s: StructType => s }
+    } catch { case NonFatal(_) => None }
 
   /** Time travel: the table AS OF `asOfBatch` — exactly the rows the
     * batches with id <= `asOfBatch` committed. Backed by the commit
@@ -177,7 +226,8 @@ object OcsfTables {
     * always read). The exact predicate is re-applied to the surviving
     * rows, so the result equals `load(...).filter(cond)` whether or
     * not an index exists — the index only changes how many files are
-    * opened. The mixed-table stray guard is [[load]]'s
+    * opened ([[prunedFiles]] picks the driver or distributed prune by
+    * commit-log size). The mixed-table stray guard is [[load]]'s
     * misconfiguration detector, not repeated here (it would relist
     * every data file and defeat the point of skipping). */
   def loadWhere(spark: SparkSession, baseDir: String, route: String,
@@ -203,21 +253,30 @@ object OcsfTables {
   }
 
   /** The file list [[loadWhere]] would open — exposed for maintenance
-    * jobs and tests to observe skipping. Fully distributed end-to-end:
-    * the committed universe is [[IdempotentSink.committedFilesDF]]
-    * (manifests parsed in executors, O(control pairs) on the driver)
-    * and the stats prune is [[StatsIndex.pruneDF]]'s join, so the ONLY
-    * O(files)-shaped driver materialization is this method's return —
-    * the SURVIVORS. At a million-file table with a selective predicate
-    * that is the difference between a driver OOM-and-minutes listing
-    * and a one-job metadata pass. */
+    * jobs and tests to observe skipping. The same size rule as [[load]]
+    * picks the path. A commit log at or below
+    * [[distributedListingBytes]] is parsed on the driver
+    * ([[IdempotentSink.committedFiles]]) and pruned by
+    * [[StatsIndex.prune]]: one small join, no log-parsing stages. Above
+    * it the read is fully distributed end-to-end: the committed
+    * universe is [[IdempotentSink.committedFilesDF]] (manifests parsed
+    * in executors, O(control pairs) on the driver) and the stats prune
+    * is [[StatsIndex.pruneDF]]'s join, so the ONLY O(files)-shaped
+    * driver materialization is this method's return — the SURVIVORS.
+    * At a million-file table with a selective predicate that is the
+    * difference between a driver OOM-and-minutes listing and a one-job
+    * metadata pass. */
   def prunedFiles(spark: SparkSession, fs: FileSystem, tableDir: Path,
-                  cond: String): Seq[Path] = {
-    val universe = IdempotentSink.committedFilesDF(spark, tableDir)
-      .select("file")
-    StatsIndex.pruneDF(spark, fs, tableDir, universe, cond)
-      .collect().map(r => new Path(new java.net.URI(r.getString(0)))).toSeq
-  }
+                  cond: String): Seq[Path] =
+    if (manifestBytes(fs, tableDir) <= distributedListingBytes(spark))
+      StatsIndex.prune(spark, fs, tableDir,
+        IdempotentSink.committedFiles(fs, tableDir), cond)
+    else {
+      val universe = IdempotentSink.committedFilesDF(spark, tableDir)
+        .select("file")
+      StatsIndex.pruneDF(spark, fs, tableDir, universe, cond)
+        .collect().map(r => new Path(new java.net.URI(r.getString(0)))).toSeq
+    }
 
   private def tableFs(spark: SparkSession, baseDir: String,
                       route: String): (FileSystem, Path) = {
@@ -234,9 +293,7 @@ object OcsfTables {
     * rather than Spark's opaque cannot-infer-schema failure. */
   private def dfFor(spark: SparkSession, fs: FileSystem, tableDir: Path,
                     files: Seq[Path]): DataFrame =
-    if (files.nonEmpty)
-      spark.read.option("basePath", tableDir.toString)
-        .parquet(files.map(_.toString): _*)
+    if (files.nonEmpty) readFiles(spark, fs, tableDir, files)
     else {
       // schema-only: ONE committed file suffices (Spark infers from
       // the first footer absent mergeSchema anyway), so the empty
@@ -245,8 +302,8 @@ object OcsfTables {
         .select("file").limit(1).collect()
       require(one.nonEmpty,
         s"$tableDir has a batch-commit log but no committed data files")
-      spark.read.option("basePath", tableDir.toString)
-        .parquet(one.head.getString(0)).limit(0)
+      readFiles(spark, fs, tableDir,
+        Seq(new Path(new java.net.URI(one.head.getString(0))))).limit(0)
     }
 
   /** Qualified data files at FINAL paths — everything outside the

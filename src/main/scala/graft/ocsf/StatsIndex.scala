@@ -47,11 +47,16 @@ import org.apache.spark.sql.types._
   * delta is a left-anti join of the committed list against the index
   * (only the DELTA's names reach the driver), and [[prune]] is a join
   * whose driver materialization is the SURVIVOR list — O(pruned
-  * result), never O(indexed files). At a million-file table the only
-  * O(table) driver structure left is the committed manifest list
-  * itself, which compaction bounds. The swap-free append design means
-  * a crash anywhere leaves at worst a torn part-file, which readers
-  * skip: an index can lose acceleration, never rows.
+  * result), never O(indexed files). Its schema comes from one
+  * part-file's footer read on the driver, so opening the index runs
+  * no inference job. [[OcsfTables.prunedFiles]] hands [[prune]] the
+  * driver-parsed committed list while the commit log is small, and
+  * uses [[pruneDF]] over the executor-parsed list above
+  * `spark.graft.distributedListingBytes`: at a million-file table the
+  * committed list then never reaches the driver either. The swap-free
+  * append design means a crash anywhere leaves at worst a torn
+  * part-file, which readers skip: an index can lose acceleration,
+  * never rows.
   */
 object StatsIndex {
 
@@ -186,14 +191,21 @@ object StatsIndex {
 
   /** The index relation, or None when absent. Torn part-files from a
     * crashed append are skipped, not fatal — their files simply read
-    * as unindexed. */
+    * as unindexed. Every part-file has the schema of one [[build]]
+    * (a column-set change rebuilds from scratch), so the schema comes
+    * from one part-file's footer read on the driver instead of Spark's
+    * inference job; a torn or unreadable first part-file falls back to
+    * inference. */
   private def indexDf(spark: SparkSession, fs: FileSystem,
                       tableDir: Path): Option[DataFrame] = {
     val d = indexDir(tableDir)
     if (!fs.exists(d)) None
     else {
-      val df = spark.read.option("ignoreCorruptFiles", "true")
-        .parquet(d.toString)
+      val reader = spark.read.option("ignoreCorruptFiles", "true")
+      val part = fs.listStatus(d).iterator.map(_.getPath)
+        .find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+      val df = part.flatMap(OcsfTables.footerSchema(fs.getConf, _))
+        .fold(reader)(s => reader.schema(s)).parquet(d.toString)
       if (df.columns.contains("file")) Some(df) else None
     }
   }

@@ -125,18 +125,26 @@ object OcsfLakeQueries {
     ("Authentication", "authentication",
       Seq("user.name", "logon_type_id", "status")))
 
-  // B-series style registration: name -> (spark, sfDir) => DataFrame
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  // B-series style registration: name -> (spark, sfDir) => DataFrame,
+  // each shape over the memoized verification lake
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    shapes.map { case (name, q) =>
+      name -> ((s: SparkSession, _: String) => q(OcsfLake.table(s, _)))
+    }
+
+  /** The nine query shapes over any lake: each takes a resolver from
+    * sink route to table, so a spec can run them over its own lake. */
+  private[graft] def shapes: Map[String, (String => DataFrame) => DataFrame] = Map(
     // B34 — normalization completeness audit: per OCSF core leaf, how
     // many rows carry it (count(col) = non-null count in both
     // engines). ONE scan + ONE 1-row aggregate per table, field rows
     // exploded from a literal array — the funnel-report shape
-    "q_ocsf_lake_completeness" -> ((s, _) => {
+    "q_ocsf_lake_completeness" -> (t => {
       CompletenessFields.map { case (tbl, _, fields) =>
         val flat = fields.map(_.replace('.', '_'))
         val aggs = count(lit(1)).as("n_rows") +:
           fields.zip(flat).map { case (f, a) => count(col(f)).as(a) }
-        OcsfLake.table(s, tbl)
+        t(tbl)
           .agg(aggs.head, aggs.tail: _*)
           .select(explode(array(fields.zip(flat).map { case (f, a) =>
             struct(lit(tbl).as("table_name"), lit(f).as("field"),
@@ -151,8 +159,8 @@ object OcsfLakeQueries {
     // nested-leaf predicates (device.os.type, parent process name) +
     // group-by on the partition column; the filter prunes nothing on
     // this corpus (all Windows/explorer) but MUST push to the scan
-    "q_ocsf_lake_proc_days" -> ((s, _) =>
-      OcsfLake.table(s, "Process Activity")
+    "q_ocsf_lake_proc_days" -> (t =>
+      t("Process Activity")
         .filter(col("device.os.type") === "Windows" &&
           col("process.parent_process.file.name") === "explorer.exe")
         .groupBy(col("eventDay").cast("string").as("event_day"))
@@ -162,8 +170,8 @@ object OcsfLakeQueries {
 
     // selective nested filter (prefix LIKE on query.hostname) + nested
     // group-by — the "hunt one domain family" Athena query
-    "q_ocsf_lake_dns_family" -> ((s, _) =>
-      OcsfLake.table(s, "DNS Activity")
+    "q_ocsf_lake_dns_family" -> (t =>
+      t("DNS Activity")
         .filter(col("query.hostname").startsWith("host12"))
         .groupBy(col("query.hostname").as("hostname"),
           col("rcode").as("rcode"))
@@ -171,8 +179,8 @@ object OcsfLakeQueries {
           countDistinct(col("src_endpoint.uid")).as("n_devices"))),
 
     // flat predicate + two-deep nested group-by (url struct)
-    "q_ocsf_lake_http_errors" -> ((s, _) =>
-      OcsfLake.table(s, "HTTP Activity")
+    "q_ocsf_lake_http_errors" -> (t =>
+      t("HTTP Activity")
         .filter(col("status_code") === "404")
         .groupBy(col("http_request.url.hostname").as("hostname"),
           col("http_request.http_method").as("http_method"))
@@ -180,23 +188,23 @@ object OcsfLakeQueries {
 
     // per-user logon profile: nested user struct + distinct over a
     // nested leaf
-    "q_ocsf_lake_auth_users" -> ((s, _) =>
-      OcsfLake.table(s, "Authentication")
+    "q_ocsf_lake_auth_users" -> (t =>
+      t("Authentication")
         .groupBy(col("user.name").as("user_name"))
         .agg(count(lit(1)).as("n_logons"),
           countDistinct(col("logon_type_id")).as("n_logon_types"))),
 
     // connection rollup over two sibling structs
-    "q_ocsf_lake_net_direction" -> ((s, _) =>
-      OcsfLake.table(s, "Network Activity")
+    "q_ocsf_lake_net_direction" -> (t =>
+      t("Network Activity")
         .groupBy(col("connection_info.direction").as("direction"),
           col("dst_endpoint.port").as("dst_port"))
         .agg(count(lit(1)).as("n_conns"),
           countDistinct(col("dst_endpoint.ip")).as("n_dst_ips"))),
 
     // observables UNNEST — the reference's observables[*] consumption
-    "q_ocsf_lake_observables" -> ((s, _) =>
-      OcsfLake.table(s, "Process Activity")
+    "q_ocsf_lake_observables" -> (t =>
+      t("Process Activity")
         .select(explode(col("observables")).as("ob"))
         .groupBy(col("ob.type_id").as("type_id"),
           col("ob.type").as("obs_type"))
@@ -204,11 +212,11 @@ object OcsfLakeQueries {
           countDistinct(col("ob.value")).as("n_values"))),
 
     // partition pruning: one eventDay across five class tables
-    "q_ocsf_lake_day_classes" -> ((s, _) => {
+    "q_ocsf_lake_day_classes" -> (t => {
       val tables = Seq("Process Activity", "Network Activity",
         "DNS Activity", "Authentication", "HTTP Activity")
-      tables.map { t =>
-        OcsfLake.table(s, t)
+      tables.map { tbl =>
+        t(tbl)
           .filter(col("eventDay") === Day)
           .select(col("class_uid"), col("class_name"), col("category_name"))
       }.reduce(_ union _)
@@ -218,8 +226,8 @@ object OcsfLakeQueries {
 
     // the 13th route (extApi code-override): nested http_request +
     // owner account structs
-    "q_ocsf_lake_extapi" -> ((s, _) =>
-      OcsfLake.table(s, "extApi")
+    "q_ocsf_lake_extapi" -> (t =>
+      t("extApi")
         .groupBy(col("status").as("status"),
           col("http_request.http_method").as("http_method"),
           col("src_endpoint.owner.account.type").as("account_type"))

@@ -124,7 +124,9 @@ object EventStream {
     * one wedged write (a stuck remote upload) must FAIL the batch — so
     * the checkpoint retry machinery engages and the stuck route is
     * named — rather than hang the whole query forever. The timed-out
-    * writes are abandoned, not cancelled; if the query restarts in
+    * writes' Spark jobs are cancelled (see
+    * [[graft.ocsf.OcsfSink.fanOutIdempotent]]); a write that already
+    * staged files is fenced: if the query restarts in
     * the SAME JVM, the replayed batch supersedes them via
     * IdempotentSink's per-(route, batch) generation token — a stale
     * attempt stages into its own generation dir and is fenced off

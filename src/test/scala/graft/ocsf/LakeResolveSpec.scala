@@ -1,0 +1,161 @@
+package graft.ocsf
+
+import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
+import java.nio.file.Files
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.zip.GZIPOutputStream
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.{GraftSession, SparkSpec}
+import graft.queries.OcsfLakeQueries
+import graft.sources.FdrSource
+
+/** Resolving a committed lake table ([[OcsfTables.load]],
+  * [[OcsfTables.registerAll]]) takes the schema Spark wrote into the
+  * first committed file's footer, read on the driver: it runs no Spark
+  * job and serves exactly what Spark's own inference over the same
+  * files serves. A footer without Spark's schema key falls back to that
+  * inference. */
+class LakeResolveSpec extends SparkSpec {
+
+  /** Two batches of 260 lines over every route and two eventDays. */
+  private lazy val lake: String = {
+    val landing = Files.createTempDirectory("resolve-landing")
+    val out = Files.createTempDirectory("resolve-lake").toString
+    Seq(1L, 2L).foreach { runId =>
+      val dir = Files.createDirectories(landing.resolve(s"run$runId"))
+      val w = new BufferedWriter(new OutputStreamWriter(new GZIPOutputStream(
+        new FileOutputStream(dir.resolve("part-0001.gz").toFile)), "UTF-8"))
+      (runId * 260 until runId * 260 + 260).foreach { i =>
+        val ts = 1700006400000L + (i % 2) * 86400000L + i * 1000 // 2023-11-15/16
+        w.write(graft.EtlBench.line(i)
+          .replace(s""""timestamp":"${1700000000000L + i}"""", s""""timestamp":"$ts"""")
+          .replace(s""""UTCTimestamp":"${(1700000000000L + i) / 1000}"""",
+            s""""UTCTimestamp":"${ts / 1000}""""))
+        w.write("\n")
+      }
+      w.close()
+      val cached = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
+        FdrSource.load(spark, dir.toString).drop("raw")))
+      try {
+        cached.count()
+        OcsfSink.fanOutIdempotent(cached, out, "us-east-1", "123456789012", runId)
+      } finally { cached.unpersist(); () }
+    }
+    out
+  }
+
+  /** Ids of the Spark jobs `body` started. A sentinel job run after it
+    * flushes the listener bus: its start arrives after every earlier
+    * job's. */
+  private def jobsIn(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val ids = new ConcurrentLinkedQueue[Integer]()
+    val sentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.sentinel") != null))
+          sentinel.countDown()
+        else ids.add(e.jobId)
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.spec.sentinel", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.sentinel", null)
+      assert(sentinel.await(60, TimeUnit.SECONDS), "listener bus never delivered the sentinel")
+      ids.asScala.map(_.intValue).toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def tableDir(route: String): Path =
+    new Path(s"$lake/${OcsfSink.tableName(route)}")
+
+  /** Spark's own read of `route`'s committed files, schema inferred. */
+  private def plainRead(route: String): DataFrame = {
+    val dir = tableDir(route)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = IdempotentSink.committedFiles(fs, dir).map(_.toString)
+    spark.read.option("basePath", dir.toString).parquet(files: _*)
+  }
+
+  private def rows(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq.sorted
+
+  test("resolving a committed table runs no Spark job and matches Spark's inferred read") {
+    val base = lake // built before any job is counted
+    OcsfMappings.routes.foreach { route =>
+      var loaded: DataFrame = null
+      val jobs = jobsIn { loaded = OcsfTables.load(spark, base, route) }
+      assert(jobs.isEmpty, s"$route: load started jobs $jobs")
+      val plain = plainRead(route)
+      assert(loaded.schema == plain.schema, route)
+      assert(loaded.schema("accountId").dataType.typeName == "long" &&
+        loaded.schema("eventDay").dataType.typeName == "integer", loaded.schema)
+      val got = rows(loaded)
+      assert(got.size == 40, s"$route: ${got.size} rows")
+      assert(got == rows(plain), route)
+    }
+    var views: Seq[String] = Nil
+    val jobs = jobsIn { views = OcsfTables.registerAll(spark, base) }
+    assert(jobs.isEmpty, s"registerAll started jobs $jobs")
+    assert(views.size == OcsfMappings.routes.size, views)
+    assert(spark.table("ocsf_dns_activity").schema == plainRead("DNS Activity").schema)
+  }
+
+  test("a first file whose footer has no Spark schema key falls back to inference") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    import spark.implicits._
+    val base = "file:" + Files.createTempDirectory("resolve-nokey")
+    val route = "DNS Activity"
+    IdempotentSink.writeBatch(Seq(("h1", 3)).toDF("host", "severity")
+      .select(to_timestamp(lit("2023-11-14 12:00:00")).as("time"), col("host"),
+        col("severity")), base, route, "us-east-1", "123456789012", batchId = 0L,
+      filesPerDay = 1)
+    val dir = new Path(s"$base/${OcsfSink.tableName(route)}")
+    val conf = spark.sessionState.newHadoopConf()
+    val file = IdempotentSink.committedFiles(dir.getFileSystem(conf), dir).head
+    assert(OcsfTables.footerSchema(conf, file).exists(_.fieldNames.toSeq ==
+      Seq("time", "host", "severity")))
+    // the same columns, written by plain parquet-hadoop: no Spark key
+    val schema = MessageTypeParser.parseMessageType(
+      """message m { optional int64 time (TIMESTAMP(MICROS,true));
+        |  optional binary host (STRING); optional int32 severity; }""".stripMargin)
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf).withType(schema).withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("time", 1699963200000000L).append("host", "h9").append("severity", 9))
+    finally w.close()
+    assert(OcsfTables.footerSchema(conf, file).isEmpty)
+    val loaded = OcsfTables.load(spark, base, route)
+    val plain = spark.read.option("basePath", dir.toString).parquet(file.toString)
+    assert(loaded.schema == plain.schema)
+    assert(rows(loaded) == rows(plain))
+    assert(loaded.select("host", "severity").as[(String, Int)].collect().toSeq ==
+      Seq(("h9", 9)))
+  }
+
+  test("a warm round of the lake query shapes compiles nothing") {
+    val table = (route: String) => OcsfTables.load(spark, lake, route)
+    def round(): Long = {
+      val before = GraftSession.codegenCompiles
+      OcsfLakeQueries.shapes.toSeq.sortBy(_._1).foreach { case (_, q) => q(table).collect() }
+      GraftSession.codegenCompiles - before
+    }
+    assert(OcsfLakeQueries.shapes.size == 9)
+    val cold = round()
+    val warm = round()
+    assert(warm == 0, s"warm round compiled $warm classes (cold round: $cold)")
+  }
+}

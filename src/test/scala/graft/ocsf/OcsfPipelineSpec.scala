@@ -509,6 +509,9 @@ class OcsfPipelineSpec extends SparkSpec {
 
   test("A23: a timed-out fan-out names its stuck routes; a rerun of its runId lands each row once") {
     import scala.concurrent.duration.DurationInt
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
     val cached = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(classified.drop("raw")))
     val outDir = Files.createTempDirectory("ocsf-timeout").toString
     try {
@@ -532,7 +535,7 @@ class OcsfPipelineSpec extends SparkSpec {
         assert(uids.distinct.size == uids.size, s"$route: duplicate uids $uids")
       }
       landedExactlyOnce()
-      // the abandoned attempts finish on their own pool threads; each
+      // the timed-out attempts finish on their own pool threads; each
       // must have been fenced by the replay's generation token: nothing
       // more lands, and no in-flight bookkeeping is left behind
       def fanOutThreads = Thread.getAllStackTraces.keySet.toArray
@@ -541,6 +544,55 @@ class OcsfPipelineSpec extends SparkSpec {
       while (fanOutThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
       landedExactlyOnce()
       assert(!IdempotentSink.bookkeepingKeys.exists(_.contains(outDir)),
+        IdempotentSink.bookkeepingKeys)
+
+      // wedged writes: every row's filter holds its task for a minute
+      // unless the task is killed. The timeout cancels the call's tagged
+      // route jobs: each ends long before its minute, none succeeds, and
+      // no tagged job starts once the call's bodies have finished
+      val wedge = udf { (_: String) =>
+        val task = org.apache.spark.TaskContext.get()
+        val until = System.nanoTime() + 60L * 1000000000L
+        while (!task.isInterrupted() && System.nanoTime() < until) Thread.sleep(20)
+        true
+      }
+      val started = new java.util.concurrent.ConcurrentHashMap[Int, Set[String]]()
+      val ended = new java.util.concurrent.ConcurrentHashMap[Int, (Boolean, Long)]()
+      val jobs = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          started.put(e.jobId, Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .map(_.split(',').toSet).getOrElse(Set.empty))
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          ended.put(e.jobId, (e.jobResult == JobSucceeded, e.time))
+      }
+      val wedgedDir = Files.createTempDirectory("ocsf-timeout-wedged").toString
+      spark.sparkContext.addSparkListener(jobs)
+      try {
+        val wedged = intercept[java.util.concurrent.TimeoutException] {
+          OcsfSink.fanOutIdempotent(cached.filter(wedge(col("route"))), wedgedDir,
+            "us-east-1", "123456789012", runId = 1L, timeout = 1.millis)
+        }
+        val thrownAt = System.currentTimeMillis()
+        val tag = "job tag (\\S+)\\)".r.findFirstMatchIn(wedged.getMessage)
+          .map(_.group(1)).getOrElse(fail(s"no job tag in: ${wedged.getMessage}"))
+        def tagged = started.asScala.collect { case (id, tags) if tags(tag) => id }.toSet
+        val settle = System.nanoTime() + 40L * 1000000000L
+        while ((fanOutThreads.nonEmpty || !tagged.forall(ended.containsKey)) &&
+            System.nanoTime() < settle) Thread.sleep(50)
+        assert(fanOutThreads.isEmpty, "the timed-out call's bodies still run after 40 s")
+        val settled = tagged
+        assert(settled.nonEmpty && settled.forall(ended.containsKey),
+          s"tagged jobs $settled, ended ${ended.keySet}")
+        val slow = settled.filter(id => ended.get(id)._2 - thrownAt > 30000L)
+        assert(slow.isEmpty, s"tagged jobs ran on for over 30 s after the timeout: $slow")
+        assert(!settled.exists(id => ended.get(id)._1), "a cancelled route job succeeded")
+        Thread.sleep(1000)
+        assert(tagged == settled, "a tagged job started after the call settled")
+      } finally spark.sparkContext.removeSparkListener(jobs)
+      // the replay lands the wedged call's batch and leaves no bookkeeping
+      OcsfSink.fanOutIdempotent(cached, wedgedDir, "us-east-1", "123456789012", runId = 1L)
+      assert(!IdempotentSink.bookkeepingKeys.exists(_.contains(wedgedDir)),
         IdempotentSink.bookkeepingKeys)
     } finally { cached.unpersist(); () }
   }

@@ -74,6 +74,15 @@ class OcsfSchemaSpec extends SparkSpec {
       .collect().map(r => r.getString(0) ->
         (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
     assert(rows == Map("e0" -> None, "e1" -> None, "e2" -> Some(0.7)))
+    // the session-wide merge setting crosses the boundary the same way
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    val sessionMerged =
+      try OcsfTables.load(spark, base.toString, "DNS Activity")
+        .select(col("metadata.uid"), col("risk_score")).collect()
+        .map(r => r.getString(0) ->
+          (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+      finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    assert(sessionMerged == rows)
     // a non-additive v3 (retyping the evolved column) is refused at the
     // same gate — committed history would become unreadable
     intercept[IllegalStateException] {

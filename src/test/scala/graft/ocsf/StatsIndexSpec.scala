@@ -286,6 +286,30 @@ class StatsIndexSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.distributedListingBytes")
   }
 
+  test("prunedFiles: the driver prune and the distributed prune keep the same files") {
+    val base = mkBase()
+    writeBatches(base, 3)
+    assert(OcsfTables.buildStats(spark, base, route, Seq("severity", "host")) == 3)
+    val (fs, tableDir) = fsOf(base)
+    val conds = Seq("severity > 250", "severity >= 90 AND severity < 140",
+      "severity IN (5, 105)", "host LIKE 'h1%'", "severity < 50 OR severity > 250",
+      "250 < severity", "severity > 9000", "pmod(severity, 7) = 3",
+      "severity > 250 OR pmod(severity, 7) = 3",
+      "severity > 250 AND pmod(severity, 7) = 3", "severity IS NULL",
+      "severity IS NOT NULL")
+    def kept(): Map[String, Set[String]] = conds.map { c =>
+      c -> OcsfTables.prunedFiles(spark, fs, tableDir, c)
+        .map(IdempotentSink.normalizePath(fs, _)).toSet
+    }.toMap
+    val driver = kept() // a three-manifest log: under the default threshold
+    spark.conf.set("spark.graft.distributedListingBytes", "0")
+    val distributed = try kept()
+      finally spark.conf.unset("spark.graft.distributedListingBytes")
+    conds.foreach(c => assert(driver(c) == distributed(c), c))
+    assert(driver("severity > 250").size == 1 && driver("severity > 9000").isEmpty &&
+      driver("pmod(severity, 7) = 3").size == 3)
+  }
+
   test("committedFilesDF raises on an unreadable committed manifest") {
     val base = mkBase()
     writeBatches(base, 2)
@@ -365,8 +389,12 @@ class StatsIndexSpec extends SparkSpec {
       lit(-1).as("max_severity"), lit(0L).as("nulls_severity"))
     idxMain.union(idxFold).write.parquet(s"$base/t/_stats/index")
     val lo = nManifests * per - 2 // top 2 files only
-    val survivors = OcsfTables.prunedFiles(spark, fs, tableDir,
-      s"severity >= $lo")
+    // ~5.8 MB of manifests sits under the default threshold: pin the
+    // distributed prune this case is about
+    spark.conf.set("spark.graft.distributedListingBytes", "0")
+    val survivors =
+      try OcsfTables.prunedFiles(spark, fs, tableDir, s"severity >= $lo")
+      finally spark.conf.unset("spark.graft.distributedListingBytes")
     assert(survivors.size == 2,
       s"expected 2 survivors, got ${survivors.size}")
     assert(survivors.map(_.getName).toSet ==
