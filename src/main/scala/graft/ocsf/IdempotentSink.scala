@@ -379,127 +379,13 @@ object IdempotentSink {
   def committedFiles(fs: FileSystem, tableDir: Path): Seq[Path] =
     readContract(fs, tableDir)._1
 
-  /** The committed read contract as a DISTRIBUTED relation — the
-    * 100 TB twin of [[committedFiles]]: one row per live committed
-    * data file, `(file, len)` with `file` in canonical
-    * [[normalizePath]] form (what the [[StatsIndex]] rows key on, so
-    * pruning is a plain equi-join).
-    *
-    * Driver cost is O(live control PAIRS) — one LIST of the control
-    * dir for names and markers, never a manifest body: the manifests
-    * themselves are fetched and parsed in EXECUTORS (one GET each,
-    * spread across the cluster), and dead-pair exclusion (the
-    * `supersedes` graph) is a distributed anti-join. The file universe
-    * therefore never materializes on the driver — a reader composes
-    * this with [[StatsIndex.pruneDF]] and collects only the SURVIVING
-    * paths ([[OcsfTables.loadWhere]]), which is the pre-Delta-style
-    * metadata bottleneck [[committedFiles]] has at millions of files
-    * solved the way Delta's checkpoint reader solves it: log parsing
-    * as a Spark job.
-    *
-    * Failure contract matches the driver path: a committed marker
-    * whose manifest is missing gets ONE fresh relisting before
-    * raising (racing an in-band compaction), an unreadable committed
-    * manifest raises [[IllegalStateException]] (from the executor —
-    * committed data must never silently drop out of contract), and a
-    * manifest that VANISHES between the driver's listing and an
-    * executor's read raises the racing-compaction error. Lazy like
-    * any DataFrame: the listing snapshot is taken at CALL time, the
-    * GETs run per action — compose and collect promptly, against a
-    * quiet table. */
-  def committedFilesDF(spark: org.apache.spark.sql.SparkSession,
-                       tableDir: Path): DataFrame = {
-    import org.apache.spark.sql.functions.{col, concat, lit}
-    import spark.implicits._
-    val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val cb = new Path(tableDir, "_committed_batches")
-    def listing(): (Seq[String], Set[String]) =
-      if (!fs.exists(cb)) (Seq.empty, Set.empty)
-      else {
-        val names = fs.listStatus(cb).map(_.getPath.getName)
-        (names.filter(_.endsWith(".manifest"))
-          .map(_.stripSuffix(".manifest")).toSeq.sorted,
-          names.filter(_.endsWith(".committed"))
-            .map(_.stripSuffix(".committed")).toSet)
-      }
-    var (manifests, done) = listing()
-    if ((done -- manifests.toSet).nonEmpty) { // racing a compaction? reread
-      val again = listing(); manifests = again._1; done = again._2
-      val orphan = done -- manifests.toSet
-      if (orphan.nonEmpty) throw new IllegalStateException(
-        s"committed marker(s) without manifest under $cb: " +
-          s"${orphan.toSeq.sorted.mkString(", ")} — committed data " +
-          "would be invisible to readers; restore the manifest(s)")
-    }
-    val committedPairs = manifests.filter(done)
-    if (committedPairs.isEmpty)
-      return Seq.empty[(String, Long)].toDF("file", "len")
-    // ship the Hadoop conf as plain KVs (SerializableConfiguration is
-    // private[spark]); executors rebuild it so s3a/hdfs credentials
-    // and endpoints survive the hop
-    val confKVs: Array[(String, String)] = {
-      val it = spark.sessionState.newHadoopConf().iterator()
-      val b = Array.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
-      b.result()
-    }
-    val cbUri = fs.makeQualified(cb).toUri.toString
-    val baseKey = normalizePath(fs, tableDir)
-    // (pair, rel, len) entry rows + (pair, superseded) edge rows from
-    // ONE parse per manifest, GETs spread over the cluster
-    val rows = spark.createDataset(committedPairs)
-      .repartition(math.min(committedPairs.size,
-        math.max(1, spark.sparkContext.defaultParallelism)))
-      .mapPartitions { pairs =>
-        val c = new org.apache.hadoop.conf.Configuration(false)
-        confKVs.foreach { case (k, v) => c.set(k, v) }
-        val cbPath = new Path(new java.net.URI(cbUri))
-        val tfs = cbPath.getFileSystem(c)
-        pairs.flatMap { pair =>
-          val mp = new Path(cbPath, s"$pair.manifest")
-          val md =
-            try readManifestFull(tfs, mp)
-            catch {
-              case _: java.io.FileNotFoundException =>
-                throw new IllegalStateException(
-                  s"manifest $pair vanished between listing and read " +
-                    "under " + cbUri + " — a compaction is racing this " +
-                    "reader; re-run against a quiet table")
-            }
-          val m = md.getOrElse(throw new IllegalStateException(
-            s"committed manifest unreadable: $cbUri/$pair.manifest"))
-          m.entries.iterator.map { case (rel, len) =>
-            (pair, finalRelPath(rel), len, null.asInstanceOf[String])
-          } ++ m.supersedes.iterator.map(s =>
-            (pair, null.asInstanceOf[String], 0L, s))
-        }
-      }.toDF("pair", "rel", "len", "superseded")
-    // dead-pair exclusion includes dead manifests' own supersedes sets
-    // (every committed manifest's edges are present), matching the
-    // interrupted-cleanup-chain semantics of the driver path
-    val dead = rows.filter(col("superseded").isNotNull)
-      .select(col("superseded").as("dead_pair")).distinct()
-    rows.filter(col("rel").isNotNull)
-      .join(dead, col("pair") === col("dead_pair"), "left_anti")
-      .select(concat(lit(baseKey + "/"), col("rel")).as("file"), col("len"))
-      .distinct()
-  }
-
-  /** Final data-file paths named by ANY parseable manifest — committed
-    * or still in flight. The superset [[OcsfTables.load]] checks a
-    * directory scan against to detect out-of-contract plain appends:
-    * a file at a final path that no manifest names was never written
-    * through this sink and would be silently invisible to readers-by-
-    * manifest. (An UNCOMMITTED manifest's files are a legitimate
-    * transient — a mid-promote batch — and must not trip the guard.) */
-  def manifestedFiles(fs: FileSystem, tableDir: Path): Set[Path] =
-    readContract(fs, tableDir)._2
-
   /** One listing + one parse per manifest feeding BOTH contract views:
     * `_1` the committed read contract ([[committedFiles]] semantics),
-    * `_2` every final path any parseable manifest names (the
-    * [[manifestedFiles]] stray-guard superset) — so a reader pays the
-    * control-file LIST/GET tax once, not per view.
+    * `_2` every final path any parseable manifest names, committed or
+    * still in flight — the superset [[OcsfTables.load]]'s stray guard
+    * checks a directory scan against (an uncommitted manifest's files
+    * are a legitimate mid-promote transient and must not trip it) —
+    * so a reader pays the control-file LIST/GET tax once, not per view.
     *
     * The orphan-marker check (a `.committed` whose manifest is gone =
     * committed data silently out of contract) and manifest OPENS both

@@ -22,12 +22,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * sees each row exactly once on ANY store — including one whose
   * rename is a non-atomic copy+delete (S3A), where a directory scan
   * could otherwise glimpse a mid-promote batch. Partition columns and
-  * pruning survive the explicit file list via `basePath`. Tables
-  * written by the plain append sink fall back to the directory scan.
-  * A table is one or the other — mixing plain appends and committed
-  * batches under one prefix is out of contract, and [[load]] REJECTS
-  * it (a stray final-path file named by no manifest raises instead of
-  * being silently dropped from the read).
+  * pruning survive the explicit file list via `basePath`. A parquet
+  * directory with no commit log (written by some other tool) falls
+  * back to the directory scan. Mixing such appends and committed
+  * batches under one prefix is out of contract, and [[load]] with
+  * `verifyAppends` REJECTS it (a stray final-path file named by no
+  * manifest raises instead of being silently dropped from the read).
   *
   * Partition pruning comes free either way: `region`/`accountId`/
   * `eventDay` are directory partitions, so `WHERE eventDay = ...`
@@ -35,16 +35,19 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object OcsfTables {
 
-  /** `verifyAppends` arms the mixed-table stray guard (below). It is a
+  /** A committed table is read from its commit log, parsed on the
+    * driver ([[IdempotentSink.readContract]]: one LIST of the control
+    * dir and one GET per live manifest).
+    *
+    * `verifyAppends` arms the mixed-table stray guard (below). It is a
     * MISCONFIGURATION detector, not a runtime invariant, and it costs
     * a recursive listing of every data file in the table — fine at
     * test scale and on fresh tables, an O(10⁵–10⁶ objects) LIST tax on
-    * a months-old streaming table. OFF by default (r14): the default
-    * read path is the scale path — big commit logs parse their
-    * manifests in executors — and the guard is the opt-in maintenance
-    * check (pass true from an audit job, or after suspecting an
-    * out-of-band append). */
-  /** The default read costs ONE footer read on the driver: the schema
+    * a months-old streaming table. OFF by default (r14): the guard is
+    * the opt-in maintenance check (pass true from an audit job, or
+    * after suspecting an out-of-band append).
+    *
+    * The default read costs ONE footer read on the driver: the schema
     * Spark wrote into the first committed file's footer (see
     * [[readFiles]]). A table whose files carry different schemas, read
     * without `mergeSchemas`, therefore reads as one file's schema, as
@@ -60,45 +63,14 @@ object OcsfTables {
            verifyAppends: Boolean = false,
            mergeSchemas: Boolean = false): DataFrame = {
     val (fs, tableDir) = tableFs(spark, baseDir, route)
-    if (IdempotentSink.hasCommitLog(fs, tableDir)) {
-      // big commit log + no stray guard (the documented at-scale
-      // setting): parse the manifests in EXECUTORS and hand the driver
-      // only the final path array Spark's planner needs anyway. The
-      // guard path must stay driver-side — it needs the in-flight
-      // manifest superset too.
-      if (!verifyAppends &&
-          manifestBytes(fs, tableDir) > distributedListingBytes(spark)) {
-        val files = IdempotentSink.committedFilesDF(spark, tableDir)
-          .select("file").collect()
-          .map(r => new Path(new java.net.URI(r.getString(0)))).toSeq
-        require(files.nonEmpty,
-          s"$tableDir has a batch-commit log but no committed data files")
-        readFiles(spark, fs, tableDir, files, mergeSchemas)
-      } else loadCommitted(spark, fs, tableDir,
+    if (IdempotentSink.hasCommitLog(fs, tableDir))
+      loadCommitted(spark, fs, tableDir,
         IdempotentSink.readContract(fs, tableDir), verifyAppends,
         mergeSchemas)
-    } else if (mergeSchemas)
+    else if (mergeSchemas)
       spark.read.option("mergeSchema", "true").parquet(tableDir.toString)
     else spark.read.parquet(tableDir.toString)
   }
-
-  /** Total control-file bytes — the cheap proxy for commit-log entry
-    * count (one LIST, already paid by `hasCommitLog`'s existence
-    * probe). Above [[DistributedListingBytes]] (~100k+ file entries)
-    * the driver-side manifest parse is worth a Spark job to avoid. */
-  private def manifestBytes(fs: FileSystem, tableDir: Path): Long = {
-    val cb = new Path(tableDir, "_committed_batches")
-    if (!fs.exists(cb)) 0L
-    else fs.listStatus(cb).iterator
-      .filter(_.getPath.getName.endsWith(".manifest")).map(_.getLen).sum
-  }
-
-  /** ~100k file entries at typical path lengths; override with
-    * `spark.graft.distributedListingBytes` (0 forces the distributed
-    * path — how the spec pins load-path parity). */
-  private def distributedListingBytes(spark: SparkSession): Long =
-    spark.conf.getOption("spark.graft.distributedListingBytes")
-      .map(_.toLong).getOrElse(8L * 1024 * 1024)
 
   private def loadCommitted(spark: SparkSession, fs: FileSystem,
                             tableDir: Path,
@@ -226,8 +198,7 @@ object OcsfTables {
     * always read). The exact predicate is re-applied to the surviving
     * rows, so the result equals `load(...).filter(cond)` whether or
     * not an index exists — the index only changes how many files are
-    * opened ([[prunedFiles]] picks the driver or distributed prune by
-    * commit-log size). The mixed-table stray guard is [[load]]'s
+    * opened ([[prunedFiles]]). The mixed-table stray guard is [[load]]'s
     * misconfiguration detector, not repeated here (it would relist
     * every data file and defeat the point of skipping). */
   def loadWhere(spark: SparkSession, baseDir: String, route: String,
@@ -253,30 +224,15 @@ object OcsfTables {
   }
 
   /** The file list [[loadWhere]] would open — exposed for maintenance
-    * jobs and tests to observe skipping. The same size rule as [[load]]
-    * picks the path. A commit log at or below
-    * [[distributedListingBytes]] is parsed on the driver
-    * ([[IdempotentSink.committedFiles]]) and pruned by
-    * [[StatsIndex.prune]]: one small join, no log-parsing stages. Above
-    * it the read is fully distributed end-to-end: the committed
-    * universe is [[IdempotentSink.committedFilesDF]] (manifests parsed
-    * in executors, O(control pairs) on the driver) and the stats prune
-    * is [[StatsIndex.pruneDF]]'s join, so the ONLY O(files)-shaped
-    * driver materialization is this method's return — the SURVIVORS.
-    * At a million-file table with a selective predicate that is the
-    * difference between a driver OOM-and-minutes listing and a one-job
-    * metadata pass. */
+    * jobs and tests to observe skipping. The committed list is parsed
+    * on the driver ([[IdempotentSink.committedFiles]], the same read
+    * [[load]] makes) and pruned by [[StatsIndex.prune]]: one join of
+    * that list against the stats index, which collects only the
+    * survivors. */
   def prunedFiles(spark: SparkSession, fs: FileSystem, tableDir: Path,
                   cond: String): Seq[Path] =
-    if (manifestBytes(fs, tableDir) <= distributedListingBytes(spark))
-      StatsIndex.prune(spark, fs, tableDir,
-        IdempotentSink.committedFiles(fs, tableDir), cond)
-    else {
-      val universe = IdempotentSink.committedFilesDF(spark, tableDir)
-        .select("file")
-      StatsIndex.pruneDF(spark, fs, tableDir, universe, cond)
-        .collect().map(r => new Path(new java.net.URI(r.getString(0)))).toSeq
-    }
+    StatsIndex.prune(spark, fs, tableDir,
+      IdempotentSink.committedFiles(fs, tableDir), cond)
 
   private def tableFs(spark: SparkSession, baseDir: String,
                       route: String): (FileSystem, Path) = {
@@ -286,24 +242,20 @@ object OcsfTables {
 
   /** An explicit file-list read; an EMPTY selection (e.g. no changes
     * since the consumer's checkpoint) still returns the table's true
-    * schema by planning the full contract with a LIMIT 0 — metadata
-    * only, nothing is read. A table whose committed batches hold zero
-    * data files (a stream that has only seen empty batches) has no
-    * schema to serve, so that raises the same clear error as [[load]]
-    * rather than Spark's opaque cannot-infer-schema failure. */
+    * schema, read from the first committed file with a LIMIT 0 — one
+    * footer read, no Spark job, nothing scanned. A table whose
+    * committed batches hold zero data files (a stream that has only
+    * seen empty batches) has no schema to serve, so that raises the
+    * same clear error as [[load]] rather than Spark's opaque
+    * cannot-infer-schema failure. */
   private def dfFor(spark: SparkSession, fs: FileSystem, tableDir: Path,
                     files: Seq[Path]): DataFrame =
     if (files.nonEmpty) readFiles(spark, fs, tableDir, files)
     else {
-      // schema-only: ONE committed file suffices (Spark infers from
-      // the first footer absent mergeSchema anyway), so the empty
-      // selection never pulls the O(files) universe onto the driver
-      val one = IdempotentSink.committedFilesDF(spark, tableDir)
-        .select("file").limit(1).collect()
+      val one = IdempotentSink.committedFiles(fs, tableDir).take(1)
       require(one.nonEmpty,
         s"$tableDir has a batch-commit log but no committed data files")
-      readFiles(spark, fs, tableDir,
-        Seq(new Path(new java.net.URI(one.head.getString(0))))).limit(0)
+      readFiles(spark, fs, tableDir, one).limit(0)
     }
 
   /** Qualified data files at FINAL paths — everything outside the
@@ -336,21 +288,13 @@ object OcsfTables {
       val dir = new Path(s"$baseDir/$name")
       val fs = dir.getFileSystem(hadoopConf)
       if (IdempotentSink.hasCommitLog(fs, dir)) {
-        if (!verifyAppends &&
-            manifestBytes(fs, dir) > distributedListingBytes(spark)) {
-          // big commit log: delegate to load's executor-side manifest
-          // parse; emptiness is implied (committed manifests ⇒ files)
-          load(spark, baseDir, route).createOrReplaceTempView(s"ocsf_$name")
+        // one contract parse per table: the probe and the load share it
+        val contract = IdempotentSink.readContract(fs, dir)
+        if (contract._1.nonEmpty) {
+          loadCommitted(spark, fs, dir, contract, verifyAppends)
+            .createOrReplaceTempView(s"ocsf_$name")
           Some(s"ocsf_$name")
-        } else {
-          // one contract parse per table: the probe and the load share it
-          val contract = IdempotentSink.readContract(fs, dir)
-          if (contract._1.nonEmpty) {
-            loadCommitted(spark, fs, dir, contract, verifyAppends)
-              .createOrReplaceTempView(s"ocsf_$name")
-            Some(s"ocsf_$name")
-          } else None
-        }
+        } else None
       } else if (fs.exists(dir) && hasAnyParquet(fs, dir)) {
         spark.read.parquet(dir.toString).createOrReplaceTempView(s"ocsf_$name")
         Some(s"ocsf_$name")

@@ -42,21 +42,17 @@ import org.apache.spark.sql.types._
   * files not yet indexed (one column-pruned distributed scan grouped
   * by `input_file_name`) and APPENDS their rows; existing index rows
   * are never rewritten, so the steady-state cost tracks the ingest
-  * delta, not the table size. The index is itself a parquet relation,
-  * read, filtered AND set-intersected distributed: the not-yet-indexed
-  * delta is a left-anti join of the committed list against the index
-  * (only the DELTA's names reach the driver), and [[prune]] is a join
-  * whose driver materialization is the SURVIVOR list — O(pruned
-  * result), never O(indexed files). Its schema comes from one
-  * part-file's footer read on the driver, so opening the index runs
-  * no inference job. [[OcsfTables.prunedFiles]] hands [[prune]] the
-  * driver-parsed committed list while the commit log is small, and
-  * uses [[pruneDF]] over the executor-parsed list above
-  * `spark.graft.distributedListingBytes`: at a million-file table the
-  * committed list then never reaches the driver either. The swap-free
-  * append design means a crash anywhere leaves at worst a torn
-  * part-file, which readers skip: an index can lose acceleration,
-  * never rows.
+  * delta, not the table size. The committed file list is the one
+  * [[IdempotentSink.committedFiles]] parses on the driver, the same
+  * list every committed read opens; the index itself is a parquet
+  * relation, read and joined against that list distributed: the
+  * not-yet-indexed delta is a left-anti join (only the DELTA's names
+  * come back), and [[prune]] is a join that collects only the
+  * SURVIVORS, so the index rows never reach the driver. The index
+  * schema comes from one part-file's footer read on the driver, so
+  * opening it runs no inference job. The swap-free append design
+  * means a crash anywhere leaves at worst a torn part-file, which
+  * readers skip: an index can lose acceleration, never rows.
   */
 object StatsIndex {
 
@@ -129,47 +125,14 @@ object StatsIndex {
 
   /** The committed files a read with SQL predicate `cond` must open:
     * every committed file EXCEPT those whose stats prove no row can
-    * match. Files without a stats row are kept. */
+    * match. Files without a stats row are kept, and so is everything
+    * when there is no index or nothing in `cond` is prunable. A file
+    * survives the join when it has NO stats row or ANY of its rows
+    * passes the relaxed predicate; only the survivors are collected. */
   def prune(spark: SparkSession, fs: FileSystem, tableDir: Path,
             committed: Seq[Path], cond: String): Seq[Path] = {
     import spark.implicits._
-    survivorCond(spark, fs, tableDir, cond) match {
-      case None => committed // no index / nothing prunable in cond
-      case Some((idx, pruning)) =>
-        val cdf = committed.map(p => normalize(fs, p)).toDF("c_file")
-        val survivors = joinSurvivors(cdf, idx, pruning)
-          .as[String].collect().toSet
-        committed.filter(p => survivors(normalize(fs, p)))
-    }
-  }
-
-  /** [[prune]] over a DISTRIBUTED committed universe — the companion
-    * of [[IdempotentSink.committedFilesDF]]: `committed`'s FIRST
-    * column must hold canonical [[IdempotentSink.normalizePath]] file
-    * keys (what `committedFilesDF` emits as `file`). Returns the
-    * surviving keys as a one-column (`file`) DataFrame, still lazy —
-    * the universe, the index and the prune join all stay executor-side
-    * and the CALLER decides what to materialize (the loadWhere path
-    * collects only this output: O(survivors) driver memory, never
-    * O(files)). Same keep-semantics as [[prune]]: no index, an opaque
-    * predicate, or an unindexed file all keep. */
-  def pruneDF(spark: SparkSession, fs: FileSystem, tableDir: Path,
-              committed: DataFrame, cond: String): DataFrame = {
-    val cdf = committed.select(col(committed.columns.head).as("c_file"))
-    survivorCond(spark, fs, tableDir, cond) match {
-      case None => cdf.select(col("c_file").as("file"))
-      case Some((idx, pruning)) => joinSurvivors(cdf, idx, pruning)
-        .select(col("c_file").as("file"))
-    }
-  }
-
-  /** The (index relation, relaxed file-level predicate) pair a prune
-    * should join on, or None when pruning cannot help (no index, or
-    * nothing in `cond` is prunable). */
-  private def survivorCond(spark: SparkSession, fs: FileSystem,
-                           tableDir: Path, cond: String)
-      : Option[(DataFrame, Column)] =
-    indexDf(spark, fs, tableDir).flatMap { idx =>
+    val joinOn = indexDf(spark, fs, tableDir).flatMap { idx =>
       val statTypes: Map[String, DataType] =
         idx.schema.fields.collect {
           case f if f.name.startsWith("min_") =>
@@ -178,16 +141,17 @@ object StatsIndex {
       val parsed = spark.sessionState.sqlParser.parseExpression(cond)
       pruningFor(parsed, statTypes).map(idx -> _)
     }
-
-  /** The one distributed prune join: a committed file survives when it
-    * has NO stats row (unindexed → keep) or ANY of its rows passes the
-    * relaxed predicate. The index never round-trips through driver
-    * memory. */
-  private def joinSurvivors(cdf: DataFrame, idx: DataFrame,
-                            pruning: Column): DataFrame =
-    cdf.join(idx, cdf("c_file") === idx("file"), "left_outer")
-      .filter(idx("file").isNull || pruning)
-      .select("c_file").distinct()
+    joinOn match {
+      case None => committed
+      case Some((idx, pruning)) =>
+        val cdf = committed.map(p => normalize(fs, p)).toDF("c_file")
+        val survivors = cdf.join(idx, cdf("c_file") === idx("file"), "left_outer")
+          .filter(idx("file").isNull || pruning)
+          .select("c_file").distinct()
+          .as[String].collect().toSet
+        committed.filter(p => survivors(normalize(fs, p)))
+    }
+  }
 
   /** The index relation, or None when absent. Torn part-files from a
     * crashed append are skipped, not fatal — their files simply read
@@ -220,8 +184,6 @@ object StatsIndex {
     * manifest-Path key rule lives in exactly one place. */
   private def normalize(fs: FileSystem, p: Path): String =
     IdempotentSink.normalizePath(fs, p)
-  private def normalize(fs: FileSystem, s: String): String =
-    IdempotentSink.normalizePath(fs, s)
 
   // ---- predicate → file-level pruning condition -------------------
 

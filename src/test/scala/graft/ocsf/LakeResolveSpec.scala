@@ -17,11 +17,11 @@ import graft.queries.OcsfLakeQueries
 import graft.sources.FdrSource
 
 /** Resolving a committed lake table ([[OcsfTables.load]],
-  * [[OcsfTables.registerAll]]) takes the schema Spark wrote into the
-  * first committed file's footer, read on the driver: it runs no Spark
-  * job and serves exactly what Spark's own inference over the same
-  * files serves. A footer without Spark's schema key falls back to that
-  * inference. */
+  * [[OcsfTables.registerAll]], an empty [[OcsfTables.changesSince]])
+  * takes the schema Spark wrote into the first committed file's
+  * footer, read on the driver: it runs no Spark job and serves exactly
+  * what Spark's own inference over the same files serves. A footer
+  * without Spark's schema key falls back to that inference. */
 class LakeResolveSpec extends SparkSpec {
 
   /** Two batches of 260 lines over every route and two eventDays. */
@@ -107,6 +107,21 @@ class LakeResolveSpec extends SparkSpec {
     assert(jobs.isEmpty, s"registerAll started jobs $jobs")
     assert(views.size == OcsfMappings.routes.size, views)
     assert(spark.table("ocsf_dns_activity").schema == plainRead("DNS Activity").schema)
+  }
+
+  test("an empty changesSince runs no Spark job and serves the table's schema") {
+    val base = lake // built before any job is counted
+    val route = "DNS Activity"
+    val dir = tableDir(route)
+    val last = dir.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(new Path(dir, "_committed_batches")).map(_.getPath.getName)
+      .filter(_.endsWith(".committed"))
+      .flatMap(_.stripSuffix(".committed").toLongOption).max
+    var delta: DataFrame = null
+    val jobs = jobsIn { delta = OcsfTables.changesSince(spark, base, route, last) }
+    assert(jobs.isEmpty, s"changesSince started jobs $jobs")
+    assert(delta.schema == OcsfTables.load(spark, base, route).schema)
+    assert(delta.collect().isEmpty)
   }
 
   test("a first file whose footer has no Spark schema key falls back to inference") {

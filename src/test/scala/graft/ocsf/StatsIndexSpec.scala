@@ -239,54 +239,7 @@ class StatsIndexSpec extends SparkSpec {
       s"pmod(severity, 7) = 3").size == committed.size)
   }
 
-  test("committedFilesDF matches the driver read contract, before and after compaction") {
-    val base = mkBase()
-    writeBatches(base, 3)
-    val (fs, tableDir) = fsOf(base)
-    def dfKeys: Set[String] = IdempotentSink.committedFilesDF(spark, tableDir)
-      .select("file").collect().map(_.getString(0)).toSet
-    def driverKeys: Set[String] = IdempotentSink.committedFiles(fs, tableDir)
-      .map(p => IdempotentSink.normalizePath(fs, p)).toSet
-    val before = dfKeys
-    assert(before == driverKeys && before.size == 3)
-    // lengths ride along and match the physical files
-    IdempotentSink.committedFilesDF(spark, tableDir).collect().foreach { r =>
-      assert(fs.getFileStatus(new Path(new java.net.URI(r.getString(0))))
-        .getLen == r.getLong(1))
-    }
-    // fold the per-batch pairs: the superseded manifests stay on disk
-    // until cleanup, so the anti-join must exclude their entries
-    assert(IdempotentSink.compactCommits(fs, tableDir) > 0)
-    assert(dfKeys == driverKeys, "post-compaction contract diverged")
-    assert(dfKeys == before, "a metadata-only fold must not change the files")
-  }
-
-  test("load's distributed-listing path is the DEFAULT above the size threshold and matches the driver path") {
-    val base = mkBase()
-    writeBatches(base, 3)
-    def uids(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.select("metadata.uid").collect().map(_.getString(0)).sorted.toSeq
-    // guarded read = the driver-side maintenance path
-    val driverPath = uids(OcsfTables.load(spark, base, route,
-      verifyAppends = true))
-    spark.conf.set("spark.graft.distributedListingBytes", "0")
-    try {
-      // a "big" manifest (threshold 0) must take the executor-side
-      // listing with DEFAULT arguments — no opt-in flag required
-      val distributed = uids(OcsfTables.load(spark, base, route))
-      assert(distributed == driverPath && distributed.size == 3 * 64)
-      // partition columns must survive the explicit file list
-      val parts = OcsfTables.load(spark, base, route)
-        .select("region", "accountId", "eventDay").distinct().collect()
-      assert(parts.nonEmpty && parts.forall(_.getString(0) == region))
-      // registerAll inherits the same default scale path
-      val views = OcsfTables.registerAll(spark, base)
-      assert(views.contains("ocsf_dns_activity"))
-      assert(spark.table("ocsf_dns_activity").count() == 3 * 64)
-    } finally spark.conf.unset("spark.graft.distributedListingBytes")
-  }
-
-  test("prunedFiles: the driver prune and the distributed prune keep the same files") {
+  test("prunedFiles is sound: every file with a matching row survives the prune") {
     val base = mkBase()
     writeBatches(base, 3)
     assert(OcsfTables.buildStats(spark, base, route, Seq("severity", "host")) == 3)
@@ -297,20 +250,22 @@ class StatsIndexSpec extends SparkSpec {
       "severity > 250 OR pmod(severity, 7) = 3",
       "severity > 250 AND pmod(severity, 7) = 3", "severity IS NULL",
       "severity IS NOT NULL")
-    def kept(): Map[String, Set[String]] = conds.map { c =>
+    val kept: Map[String, Set[String]] = conds.map { c =>
       c -> OcsfTables.prunedFiles(spark, fs, tableDir, c)
         .map(IdempotentSink.normalizePath(fs, _)).toSet
     }.toMap
-    val driver = kept() // a three-manifest log: under the default threshold
-    spark.conf.set("spark.graft.distributedListingBytes", "0")
-    val distributed = try kept()
-      finally spark.conf.unset("spark.graft.distributedListingBytes")
-    conds.foreach(c => assert(driver(c) == distributed(c), c))
-    assert(driver("severity > 250").size == 1 && driver("severity > 9000").isEmpty &&
-      driver("pmod(severity, 7) = 3").size == 3)
+    conds.foreach { c =>
+      val matching = OcsfTables.load(spark, base, route).filter(c)
+        .select(input_file_name()).distinct().collect()
+        .map(r => IdempotentSink.normalizePath(fs, r.getString(0))).toSet
+      assert(matching.subsetOf(kept(c)),
+        s"$c: pruned away ${matching -- kept(c)}")
+    }
+    assert(kept("severity > 250").size == 1 && kept("severity > 9000").isEmpty &&
+      kept("pmod(severity, 7) = 3").size == 3)
   }
 
-  test("committedFilesDF raises on an unreadable committed manifest") {
+  test("committedFiles and load raise on an unreadable committed manifest") {
     val base = mkBase()
     writeBatches(base, 2)
     val (fs, tableDir) = fsOf(base)
@@ -320,20 +275,23 @@ class StatsIndexSpec extends SparkSpec {
     val os = fs.create(victim, true)
     try os.write("#graft-manifest files=1\n".getBytes("UTF-8"))
     finally os.close()
-    val e = intercept[Exception] {
-      IdempotentSink.committedFilesDF(spark, tableDir).count()
-    }
     def chain(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ chain(t.getCause)
-    assert(chain(e).exists(_.contains("committed manifest unreadable")),
-      s"unexpected failure: ${chain(e).mkString(" | ")}")
+    def assertUnreadable(read: => Any): Unit = {
+      val e = intercept[Exception](read)
+      assert(chain(e).exists(_.contains("committed manifest unreadable")),
+        s"unexpected failure: ${chain(e).mkString(" | ")}")
+    }
+    assertUnreadable(IdempotentSink.committedFiles(fs, tableDir))
+    assertUnreadable(OcsfTables.load(spark, base, route))
   }
 
-  test("distributed listing+prune: a 120k-entry commit log reads with O(survivors) driver materialization") {
-    // the pre-Delta metadata bottleneck case: the file universe exists
-    // ONLY in manifests (no physical data files needed for the
-    // metadata path), the driver never parses a manifest body, and the
-    // only O(files)-shaped thing it ever holds is prunedFiles' return
+  test("a 120k-entry commit log resolves and prunes on the driver") {
+    // metadata-scale case: the file universe exists ONLY in manifests
+    // (no physical data files needed for the metadata path); the
+    // driver parses every manifest, excludes the superseded pair, and
+    // the prune join collects only the survivors
+    val started = System.nanoTime()
     val base = Files.createTempDirectory("dlist").toString
     val tableDir = new Path(s"file:$base/t")
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -364,10 +322,9 @@ class StatsIndexSpec extends SparkSpec {
       (Seq("#graft-manifest files=100", "#supersedes 50") ++
         foldEntries :+ "#end").mkString("\n"))
     put(new Path(cb, "compact-0.committed"), "")
-    val expectedN = nManifests * per + 100
-    val df = IdempotentSink.committedFilesDF(spark, tableDir)
-    assert(df.count() == expectedN)
-    assert(df.filter(col("file").contains("/dead/")).count() == 0,
+    val committed = IdempotentSink.committedFiles(fs, tableDir)
+    assert(committed.size == nManifests * per + 100)
+    assert(!committed.exists(_.toString.contains("/dead/")),
       "superseded pair's entries leaked into the contract")
     // hand-written stats index covering EVERY file: per-file disjoint
     // severity points; the fold's files sit at severity -1
@@ -389,16 +346,13 @@ class StatsIndexSpec extends SparkSpec {
       lit(-1).as("max_severity"), lit(0L).as("nulls_severity"))
     idxMain.union(idxFold).write.parquet(s"$base/t/_stats/index")
     val lo = nManifests * per - 2 // top 2 files only
-    // ~5.8 MB of manifests sits under the default threshold: pin the
-    // distributed prune this case is about
-    spark.conf.set("spark.graft.distributedListingBytes", "0")
-    val survivors =
-      try OcsfTables.prunedFiles(spark, fs, tableDir, s"severity >= $lo")
-      finally spark.conf.unset("spark.graft.distributedListingBytes")
+    val survivors = OcsfTables.prunedFiles(spark, fs, tableDir, s"severity >= $lo")
     assert(survivors.size == 2,
       s"expected 2 survivors, got ${survivors.size}")
     assert(survivors.map(_.getName).toSet ==
       Set(f"part-${nManifests - 1}-${per - 1}%05d.parquet",
         f"part-${nManifests - 1}-${per - 2}%05d.parquet"))
+    info(f"120k-entry log: written, resolved and pruned in " +
+      f"${(System.nanoTime() - started) / 1e9}%.1f s")
   }
 }
