@@ -96,7 +96,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * silently dropped) — give every concurrent job its own writerId.
   *
   * Control files are one pair per batch: O(batches) small objects per
-  * table. At streaming cadence over months, run [[compactCommits]] to
+  * table, and every read or maintenance op takes them in through one
+  * [[scanPairs]] — one LIST of the control dir plus one GET per
+  * manifest in it (a data rewrite rescans once after its settle). At
+  * streaming cadence over months, run [[compactCommits]] to
   * merge them into one pair — the read contract only requires that
   * the set of (manifest, committed) pairs names every live data file
   * exactly once, and [[committedFiles]] dedups on final paths, so the
@@ -180,9 +183,6 @@ object IdempotentSink {
       if (i > 0) Some(rest.substring(0, i)) else None
     }
 
-  private[ocsf] def attemptKey(fs: FileSystem, tableDir: Path, batchId: Long): String =
-    attemptKey(fs, tableDir, pairName("", batchId))
-
   private[ocsf] def attemptKey(fs: FileSystem, tableDir: Path, pair: String): String =
     s"${fs.makeQualified(tableDir)}#$pair"
 
@@ -229,10 +229,6 @@ object IdempotentSink {
     * Package-private so the spec can model a timed-out attempt racing
     * its replay. */
   private[ocsf] def beginAttempt(fs: FileSystem, tableDir: Path,
-                                 batchId: Long): Long =
-    beginAttempt(fs, tableDir, pairName("", batchId))
-
-  private[ocsf] def beginAttempt(fs: FileSystem, tableDir: Path,
                                  pair: String): Long = {
     val g = genSeq.incrementAndGet()
     // max-accumulate, not set: two racing beginAttempts must leave the
@@ -263,13 +259,6 @@ object IdempotentSink {
           "by a newer replay of the same batch; aborting without publishing")
   }
 
-  private[ocsf] def runAttempt(df: DataFrame, fs: FileSystem, tableDir: Path,
-                               route: String, region: String,
-                               accountId: String, batchId: Long,
-                               filesPerDay: Int, gen: Long): Unit =
-    runAttempt(df, fs, tableDir, route, region, accountId,
-      pairName("", batchId), filesPerDay, gen)
-
   /** The body of one attempt at a fixed generation. Package-private
     * for the superseded-attempt spec. */
   private[ocsf] def runAttempt(df: DataFrame, fs: FileSystem, tableDir: Path,
@@ -281,7 +270,7 @@ object IdempotentSink {
     val manifest = new Path(tableDir, s"_committed_batches/$pair.manifest")
     val batchStaging = new Path(tableDir, s"_staging/batch_$pair")
     def currentManifest(): Option[Seq[(String, Long)]] =
-      if (fs.exists(manifest)) readManifest(fs, manifest) else None
+      if (fs.exists(manifest)) readManifestFull(fs, manifest).map(_.entries) else None
     if (fs.exists(committed)) {
       // already done: sweep any staging dir a pre-commit crash (or a
       // straggling superseded attempt) orphaned, then no-op
@@ -375,54 +364,120 @@ object IdempotentSink {
     * manifests. Readers opening precisely these paths see each row
     * exactly once on any store — uncommitted batches, staging dirs,
     * torn-rename residue and straggler leftovers are simply never
-    * named. One directory listing + one small read per batch. */
+    * named. One [[scanPairs]]: one directory listing + one small read
+    * per manifest in the control dir. */
   def committedFiles(fs: FileSystem, tableDir: Path): Seq[Path] =
-    readContract(fs, tableDir)._1
+    scanPairs(fs, tableDir).files
 
-  /** One listing + one parse per manifest feeding BOTH contract views:
-    * `_1` the committed read contract ([[committedFiles]] semantics),
-    * `_2` every final path any parseable manifest names, committed or
-    * still in flight — the superset [[OcsfTables.load]]'s stray guard
-    * checks a directory scan against (an uncommitted manifest's files
-    * are a legitimate mid-promote transient and must not trip it) —
-    * so a reader pays the control-file LIST/GET tax once, not per view.
-    *
-    * The orphan-marker check (a `.committed` whose manifest is gone =
-    * committed data silently out of contract) and manifest OPENS both
-    * retry on ONE fresh listing before failing: a concurrent in-band
-    * compaction can delete a pair's marker and manifest between a
-    * reader's (paginated) LIST and its GETs, making a pair look
-    * orphaned — or its manifest open throw FileNotFoundException —
-    * when the directory never actually held that state. */
-  def readContract(fs: FileSystem, tableDir: Path): (Seq[Path], Set[Path]) = {
-    val parsed = scanPairs(fs, tableDir)
-    val named = parsed
-      .flatMap(_._3.map(_.entries).getOrElse(Seq.empty))
-      .map { case (rel, _) =>
-        fs.makeQualified(new Path(tableDir, finalRelPath(rel)))
-      }.toSet
-    (committedLive(tableDir, parsed)
-      .flatMap(_._2.entries)
-      .map { case (rel, _) => new Path(tableDir, finalRelPath(rel)) }
-      .distinct, named)
+  /** One snapshot of a table's commit log, as [[scanPairs]] read it:
+    * every manifest as (pair name, has a committed marker?, parsed
+    * content — None when torn), sorted by name, plus the torn
+    * `.{name}.tmp` leftovers of [[writeAtomic]]. Every view a reader or
+    * a maintenance op takes of the log is a pure function of it, so an
+    * operation pays the control-file LIST/GET tax once per snapshot,
+    * not once per view. */
+  private[ocsf] final class LogScan(fs: FileSystem, tableDir: Path,
+                                    val pairs: Seq[(String, Boolean, Option[ManifestData])],
+                                    val tmps: Seq[Path]) {
+    /** Every pair with a manifest; markers are a subset ([[scanPairs]]
+      * raises on a marker without its manifest). */
+    val names: Set[String] = pairs.map(_._1).toSet
+    private lazy val parsed = pairs.map(p => p._1 -> p._3).toMap
+    def manifest(n: String): Option[ManifestData] = parsed.getOrElse(n, None)
+    def hasCommitted: Boolean = pairs.exists(_._2)
+
+    /** Committed pairs, parsed; an unreadable committed manifest raises. */
+    lazy val committed: Seq[(String, ManifestData)] =
+      pairs.collect { case (n, true, md) =>
+        n -> md.getOrElse(throw new IllegalStateException(
+          s"committed manifest unreadable: $tableDir/_committed_batches/$n.manifest"))
+      }
+
+    /** Every pair a committed manifest supersedes. The union includes
+      * dead manifests' own supersedes sets, so an interrupted cleanup
+      * chain (A superseded {1,2}, B superseded {A}) keeps 1 and 2
+      * excluded while they linger. */
+    lazy val superseded: Set[String] =
+      committed.iterator.flatMap(_._2.supersedes).toSet
+
+    /** Superseded pairs still on disk: an interrupted cleanup to settle,
+      * and the exclusions a new superseding manifest must carry. */
+    def ghosts: Set[String] = superseded.intersect(names)
+
+    /** Live committed pairs: committed manifests nothing supersedes — a
+      * dead pair's rows live in the superseding manifest's files. */
+    lazy val live: Seq[(String, ManifestData)] =
+      committed.filterNot { case (n, _) => superseded.contains(n) }
+
+    /** The committed read contract ([[committedFiles]]). */
+    lazy val files: Seq[Path] = finalPaths(live.map(_._2))
+
+    /** Every final path any parseable manifest names, committed or
+      * still in flight — the superset [[OcsfTables.load]]'s stray guard
+      * checks a directory scan against (an uncommitted manifest's files
+      * are a legitimate mid-promote transient and must not trip it). */
+    lazy val named: Set[Path] = pairs.flatMap(_._3).flatMap(_.entries)
+      .map { case (rel, _) => fs.makeQualified(new Path(tableDir, finalRelPath(rel))) }
+      .toSet
+
+    /** See [[IdempotentSink.filesAsOf]]. */
+    def filesAsOf(asOfBatch: Long): Seq[Path] = {
+      val (folded, batches, writers) = splitPairs(live)
+      requireAboveHorizon(folded, batches, asOfBatch, "asOfBatch", tableDir)
+      // writer pairs (backfills) are off the stream batch axis: their
+      // rows are base state, included at every snapshot — a backfill
+      // loads HISTORY, so excluding it from asOf reads would make old
+      // snapshots silently lose rows that were always logically there
+      finalPaths(folded.map(_._2) ++ writers.map(_._2) ++ batches.collect {
+        case (id, md) if id <= asOfBatch => md
+      })
+    }
+
+    /** See [[IdempotentSink.filesSince]]. */
+    def filesSince(afterBatch: Long): Seq[Path] = {
+      val (folded, batches, _) = splitPairs(live)
+      requireAboveHorizon(folded, batches, afterBatch, "afterBatch", tableDir)
+      // foreign-writer (backfill) pairs are NOT emitted here: the cursor
+      // is a STREAM batch id and cannot order another writer's pairs.
+      // A CDC consumer detects backfills via [[writerPairNames]] and
+      // re-syncs (or reads them once by name) — silent interleaving
+      // would hand it the same backfill on every poll.
+      finalPaths(batches.collect { case (id, md) if id > afterBatch => md })
+    }
+
+    /** Live committed pairs a data rewrite may take as inputs: all but
+      * foreign-writer `w-*` pairs. */
+    def rewriteInputs: Seq[(String, ManifestData)] =
+      live.filterNot(_._1.startsWith("w-"))
+
+    /** Fresh `<prefix>-<k>` sequence number: one past the largest k any
+      * manifest or marker (committed or crashed) has used. */
+    def nextK(prefix: String): Int = names.flatMap(n =>
+      if (n.startsWith(s"$prefix-")) n.stripPrefix(s"$prefix-").toIntOption
+      else None).maxOption.getOrElse(-1) + 1
+
+    private def finalPaths(mds: Seq[ManifestData]): Seq[Path] =
+      mds.flatMap(_.entries)
+        .map { case (rel, _) => new Path(tableDir, finalRelPath(rel)) }
+        .distinct
   }
 
-  /** One listing + parse of the whole control directory — the shared
-    * core under [[readContract]] and [[liveCommittedPairs]]: every
-    * manifest as (pair name, has a committed marker?, parsed content),
-    * with the orphan-marker check and ONE reread when a concurrent
-    * compaction races the listing (a pair's marker and manifest can be
-    * deleted between a paginated LIST and its GETs, making the pair
-    * look orphaned — or its manifest open throw — when the directory
-    * never actually held that state). */
-  private def scanPairs(fs: FileSystem, tableDir: Path)
-      : Seq[(String, Boolean, Option[ManifestData])] = {
+  /** The one read of a table's control directory — every reader and
+    * maintenance op derives its view from the [[LogScan]] this returns;
+    * only a writer's checks on its own pair and [[hasCommitLog]] read
+    * the log otherwise. One LIST plus one GET per manifest, with the
+    * orphan-marker check (a `.committed` whose manifest is gone =
+    * committed data silently out of contract) and ONE reread when a
+    * concurrent compaction races the listing (a pair's marker and
+    * manifest can be deleted between a paginated LIST and its GETs,
+    * making the pair look orphaned — or its manifest open throw — when
+    * the directory never actually held that state). */
+  private[ocsf] def scanPairs(fs: FileSystem, tableDir: Path): LogScan = {
     val cb = new Path(tableDir, "_committed_batches")
     // Left(Some(names)) = committed markers without manifests;
     // Left(None) = a manifest vanished between LIST and GET (race)
-    def attempt(): Either[Option[Set[String]],
-                          Seq[(String, Boolean, Option[ManifestData])]] = {
-      if (!fs.exists(cb)) return Right(Seq.empty)
+    def attempt(): Either[Option[Set[String]], LogScan] = {
+      if (!fs.exists(cb)) return Right(new LogScan(fs, tableDir, Nil, Nil))
       val entries = fs.listStatus(cb).map(_.getPath)
       val done = entries.filter(_.getName.endsWith(".committed"))
         .map(_.getName.stripSuffix(".committed")).toSet
@@ -437,7 +492,8 @@ object IdempotentSink {
         catch { case _: java.io.FileNotFoundException => return Left(None) }
       val orphan = done -- parsed.map(_._1).toSet
       if (orphan.nonEmpty) return Left(Some(orphan))
-      Right(parsed)
+      Right(new LogScan(fs, tableDir, parsed, entries.toSeq.filter(p =>
+        p.getName.startsWith(".") && p.getName.endsWith(".tmp"))))
     }
     attempt() match {
       case Right(r) => r
@@ -453,32 +509,6 @@ object IdempotentSink {
       }
     }
   }
-
-  /** The live committed pairs of a [[scanPairs]] result: committed
-    * manifests that no other committed manifest supersedes. A pair
-    * named in ANY committed manifest's supersedes set is dead — its
-    * rows live in the superseding manifest's files; the union includes
-    * dead manifests' own supersedes sets, so an interrupted cleanup
-    * chain (A superseded {1,2}, B superseded {A}) keeps 1 and 2
-    * excluded while they linger. */
-  private def committedLive(tableDir: Path,
-                            parsed: Seq[(String, Boolean, Option[ManifestData])])
-      : Seq[(String, ManifestData)] = {
-    val committed = parsed.collect { case (n, true, md) =>
-      n -> md.getOrElse(throw new IllegalStateException(
-        s"committed manifest unreadable: $tableDir/_committed_batches/$n.manifest"))
-    }
-    val superseded = committed.iterator.flatMap(_._2.supersedes).toSet
-    committed.filterNot { case (n, _) => superseded.contains(n) }
-  }
-
-  /** Live COMMITTED pairs — (pair name, parsed manifest) for every
-    * committed batch or compaction pair that no other committed
-    * manifest supersedes. The per-pair view behind the time-travel /
-    * incremental readers ([[filesAsOf]], [[filesSince]]). */
-  private[ocsf] def liveCommittedPairs(
-      fs: FileSystem, tableDir: Path): Seq[(String, ManifestData)] =
-    committedLive(tableDir, scanPairs(fs, tableDir))
 
   /** Splits live committed pairs into (compaction pairs, per-batch
     * pairs keyed by numeric STREAM batch id, foreign-writer `w-*`
@@ -534,21 +564,10 @@ object IdempotentSink {
     * every committed batch with id <= `asOfBatch`. Compaction trades
     * history for control-file count — below its horizon only the
     * folded (latest) view exists, and this THROWS rather than serving
-    * a wrong snapshot. Metadata-only: same one-LIST + one-GET-per-pair
-    * cost as [[committedFiles]]. */
-  def filesAsOf(fs: FileSystem, tableDir: Path, asOfBatch: Long): Seq[Path] = {
-    val (folded, batches, writers) = splitPairs(liveCommittedPairs(fs, tableDir))
-    requireAboveHorizon(folded, batches, asOfBatch, "asOfBatch", tableDir)
-    // writer pairs (backfills) are off the stream batch axis: their
-    // rows are base state, included at every snapshot — a backfill
-    // loads HISTORY, so excluding it from asOf reads would make old
-    // snapshots silently lose rows that were always logically there
-    (folded.map(_._2) ++ writers.map(_._2) ++ batches.collect {
-      case (id, md) if id <= asOfBatch => md
-    }).flatMap(_.entries)
-      .map { case (rel, _) => new Path(tableDir, finalRelPath(rel)) }
-      .distinct
-  }
+    * a wrong snapshot. Metadata-only: one [[scanPairs]], the same cost
+    * as [[committedFiles]]. */
+  def filesAsOf(fs: FileSystem, tableDir: Path, asOfBatch: Long): Seq[Path] =
+    scanPairs(fs, tableDir).filesAsOf(asOfBatch)
 
   /** Incremental (CDC-style) read contract: the final data-file paths
     * of committed batches with id > `afterBatch` — what a downstream
@@ -557,19 +576,8 @@ object IdempotentSink {
     * compaction has folded any batch beyond `afterBatch` (the consumer
     * lags the compaction cadence — its unread rows no longer exist at
     * per-batch granularity). */
-  def filesSince(fs: FileSystem, tableDir: Path, afterBatch: Long): Seq[Path] = {
-    val (folded, batches, _) = splitPairs(liveCommittedPairs(fs, tableDir))
-    requireAboveHorizon(folded, batches, afterBatch, "afterBatch", tableDir)
-    // foreign-writer (backfill) pairs are NOT emitted here: the cursor
-    // is a STREAM batch id and cannot order another writer's pairs.
-    // A CDC consumer detects backfills via [[writerPairNames]] and
-    // re-syncs (or reads them once by name) — silent interleaving
-    // would hand it the same backfill on every poll.
-    batches.collect { case (id, md) if id > afterBatch => md }
-      .flatMap(_.entries)
-      .map { case (rel, _) => new Path(tableDir, finalRelPath(rel)) }
-      .distinct
-  }
+  def filesSince(fs: FileSystem, tableDir: Path, afterBatch: Long): Seq[Path] =
+    scanPairs(fs, tableDir).filesSince(afterBatch)
 
   /** The live committed foreign-writer (`w-<writerId>-<batchId>`)
     * pairs of a table — the backfills a stream-axis CDC consumer
@@ -579,31 +587,35 @@ object IdempotentSink {
     * [[committedFiles]]-style reads); names are stable until an
     * operator retires them via `compactCommits(foldWriters = ...)`. */
   def writerPairNames(fs: FileSystem, tableDir: Path): Seq[String] =
-    splitPairs(liveCommittedPairs(fs, tableDir))._3.map(_._1).sorted
+    scanPairs(fs, tableDir).live.map(_._1).filter(_.startsWith("w-")).sorted
 
   /** Delete one superseded pair — its data files FIRST (skipping any
     * path the live read contract still names: a control-only merge
     * re-owns its inputs' files without rewriting them), then marker,
     * then manifest, so no crash cut strands a file no manifest names
-    * or produces the marker-without-manifest state readers reject. */
+    * or produces the marker-without-manifest state readers reject.
+    * `md` is the pair's manifest as the caller's [[scanPairs]] parsed
+    * it (None when torn: only the control files go). */
   private def settlePair(fs: FileSystem, tableDir: Path, n: String,
+                         md: Option[ManifestData],
                          protectedFiles: Set[Path]): Unit = {
     val cb = new Path(tableDir, "_committed_batches")
-    readManifestFull(fs, new Path(cb, s"$n.manifest")).foreach(_.entries
-      .foreach { case (rel, _) =>
-        val p = new Path(tableDir, finalRelPath(rel))
-        if (!protectedFiles.contains(fs.makeQualified(p)))
-          fs.delete(p, false)
-      })
+    md.foreach(_.entries.foreach { case (rel, _) =>
+      val p = new Path(tableDir, finalRelPath(rel))
+      if (!protectedFiles.contains(fs.makeQualified(p)))
+        fs.delete(p, false)
+    })
     fs.delete(new Path(cb, s"$n.committed"), false)
     fs.delete(new Path(cb, s"$n.manifest"), false)
   }
 
   /** Merge the control files of every COMMITTED batch into ONE
     * (manifest, committed) pair named `compact-<k>`, then delete the
-    * originals — bounding the O(batches) LIST/GET tax [[committedFiles]]
-    * pays at streaming cadence (a 10 s trigger over months is 10⁵–10⁶
-    * small control objects per table). OFFLINE maintenance: run it
+    * originals — bounding the one-GET-per-manifest tax every
+    * [[scanPairs]] pays at streaming cadence (a 10 s trigger over months
+    * is 10⁵–10⁶ small control objects per table). It pays that tax once
+    * itself: one scan feeds the sweep, the ghost settle and the merge,
+    * and no manifest is opened twice. OFFLINE maintenance: run it
     * only while no writer is active on the table (the same
     * single-writer contract the sink itself requires).
     *
@@ -645,28 +657,14 @@ object IdempotentSink {
                      maxBatchId: Long = Long.MaxValue,
                      foldWriters: Set[String] = Set.empty): Int = {
     val cb = new Path(tableDir, "_committed_batches")
-    if (!fs.exists(cb)) return 0
-    val entries = fs.listStatus(cb).map(_.getPath)
-    val manifests = entries.filter(_.getName.endsWith(".manifest"))
-      .map(_.getName.stripSuffix(".manifest")).toSet
-    val done = entries.filter(_.getName.endsWith(".committed"))
-      .map(_.getName.stripSuffix(".committed")).toSet
+    val log = scanPairs(fs, tableDir)
     // sweep unmarked compact-* manifests (a crashed attempt's step-1
     // leftover; compaction owns this namespace and runs writer-free,
     // so unlike a batch manifest it can never be an in-flight promote).
     // compactdata-* is NOT swept here: those manifests own their data
     // files, and only compactDataFiles knows how to sweep both.
-    (manifests -- done).filter(_.startsWith("compact-")).foreach { n =>
-      fs.delete(new Path(cb, s"$n.manifest"), false)
-    }
-    val full = done.toSeq.sorted.map { n =>
-      val mp = new Path(cb, s"$n.manifest")
-      if (!fs.exists(mp)) throw new IllegalStateException(
-        s"committed marker without manifest during compaction: $mp — " +
-          "committed data would leave the read contract; restore it")
-      n -> readManifestFull(fs, mp).getOrElse(throw new IllegalStateException(
-        s"committed manifest unreadable during compaction: $mp"))
-    }
+    log.pairs.collect { case (n, false, _) if n.startsWith("compact-") => n }
+      .foreach(n => fs.delete(new Path(cb, s"$n.manifest"), false))
     // superseded ghosts are never merged — their rows live in the
     // superseding manifest's files. Their presence is an interrupted
     // cleanup (a crashed compactCommits step 3/4 or compactDataFiles
@@ -677,14 +675,10 @@ object IdempotentSink {
     // files-first, so no cut point ever strands a file that trips the
     // stray-append guard. Exclusions are carried forward so ghosts a
     // crash leaves behind stay dead under the merged manifest.
-    val ghostExclusions = full.iterator.flatMap(_._2.supersedes).toSet
-    val protectedFiles = readContract(fs, tableDir)._1.map(fs.makeQualified).toSet
-    ghostExclusions
-      .filter(n => manifests.contains(n) || done.contains(n))
-      .foreach(settlePair(fs, tableDir, _, protectedFiles))
-    val live = full.filterNot { case (n, _) =>
-      ghostExclusions.contains(n) ||
-        // a batch newer than maxBatchId is untouchable: its streaming
+    val protectedFiles = log.files.map(fs.makeQualified).toSet
+    log.ghosts.foreach(n => settlePair(fs, tableDir, n, log.manifest(n), protectedFiles))
+    val live = log.live.filterNot { case (n, _) =>
+      // a batch newer than maxBatchId is untouchable: its streaming
         // checkpoint may not have committed yet (see scaladoc)
         n.toLongOption.exists(_ > maxBatchId) ||
         // a foreign writer's pair is untouchable unless that writer is
@@ -697,14 +691,12 @@ object IdempotentSink {
       // re-anchor under a dummy attempt component so finalRelPath holds
       .map { case (rel, len) => (s"c/${finalRelPath(rel)}", len) }
       .distinct
-    val k = (manifests ++ done).flatMap(n =>
-      if (n.startsWith("compact-")) n.stripPrefix("compact-").toIntOption
-      else None).maxOption.getOrElse(-1) + 1
+    val k = log.nextK("compact")
     // carry forward only exclusions whose pairs STILL exist after the
     // settle above (the resurrectable ones) — carrying every
     // historical name would grow the supersedes header without bound
     // across repeated compactions (same rule as compactDataFiles)
-    val carried = ghostExclusions.filter(n =>
+    val carried = log.superseded.filter(n =>
       fs.exists(new Path(cb, s"$n.manifest")) ||
         fs.exists(new Path(cb, s"$n.committed")))
     // coverage carry: the largest batch id this fold (transitively)
@@ -777,10 +769,9 @@ object IdempotentSink {
     val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
     val cb = new Path(tableDir, "_committed_batches")
     if (!fs.exists(cb)) return 0
-    def listPairs(): (Set[String], Set[String]) = pairNames(fs, cb)
     // 1. settle interrupted predecessors (protected-aware: settlePair
     // never deletes a file the live read contract names)
-    settleRewrites(fs, tableDir, cb)
+    val log = settleRewrites(fs, tableDir, scanPairs(fs, tableDir))
 
     // 2. stage the rewrite of all live committed pairs — EXCEPT
     // foreign-writer (w-*) pairs: their owner's replay checks the pair
@@ -789,7 +780,7 @@ object IdempotentSink {
     // files would double their rows into the new files. Retire a
     // backfill via compactCommits(foldWriters) first; its rows then
     // live in a compact-* pair this rewrite CAN fold.
-    val (inputs, deadExclusions) = liveNonWriterPairs(fs, cb)
+    val inputs = log.rewriteInputs
     // already at the target layout? (filesPerDay files per partition
     // dir) — counts files, not pairs: a control-file merge leaves one
     // pair that can still name thousands of small objects
@@ -817,7 +808,7 @@ object IdempotentSink {
     val files = inputs.flatMap(_._2.entries.map { case (rel, _) =>
       new Path(tableDir, finalRelPath(rel)).toString
     }).distinct
-    val k = nextRewriteK(fs, cb)
+    val k = log.nextK("compactdata")
     val stagingRoot = new Path(tableDir, s"_staging/compactdata_$k")
     val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
     val inferOld = spark.conf.get(inferKey, "true")
@@ -844,7 +835,7 @@ object IdempotentSink {
       n.toLongOption ++ md.maxBatch
     }.maxOption
     writeAtomic(fs, new Path(cb, s"compactdata-$k.manifest"),
-      manifestBody(entries, inputs.map(_._1).toSet ++ deadExclusions, maxBatch,
+      manifestBody(entries, inputs.map(_._1).toSet ++ log.ghosts, maxBatch,
         layoutStr))
     entries.foreach { case (rel, len) =>
       promoteOne(fs, stagingRoot, tableDir, rel, len, "compactdata", k.toString)
@@ -858,14 +849,8 @@ object IdempotentSink {
     val keep = entries.map { case (rel, _) =>
       fs.makeQualified(new Path(tableDir, finalRelPath(rel)))
     }.toSet
-    inputs.foreach { case (n, _) => settlePair(fs, tableDir, n, keep) }
+    inputs.foreach { case (n, md) => settlePair(fs, tableDir, n, Some(md), keep) }
     inputs.size
-  }
-
-  private def pairNames(fs: FileSystem, cb: Path): (Set[String], Set[String]) = {
-    val es = fs.listStatus(cb).map(_.getPath.getName)
-    (es.filter(_.endsWith(".manifest")).map(_.stripSuffix(".manifest")).toSet,
-      es.filter(_.endsWith(".committed")).map(_.stripSuffix(".committed")).toSet)
   }
 
   /** The physical split+order of a data rewrite, shared by
@@ -899,53 +884,27 @@ object IdempotentSink {
       pmod(xxhash64(col("metadata.uid"), col("time")), lit(filesPerDay)))
   }
 
-  /** Fresh `compactdata-<k>` sequence number: one past the largest k
-    * any manifest or marker (committed or crashed) has ever used. */
-  private def nextRewriteK(fs: FileSystem, cb: Path): Int =
-    pairNames(fs, cb) match { case (m, d) => (m ++ d).flatMap(n =>
-      if (n.startsWith("compactdata-")) n.stripPrefix("compactdata-").toIntOption
-      else None).maxOption.getOrElse(-1) + 1 }
-
   /** Step-1 settle shared by the data-rewriting maintenance ops
-    * ([[compactDataFiles]], [[deleteWhere]]): finish any interrupted
-    * predecessor's supersedes chain, sweep unmarked `compactdata-*`
-    * manifests (protected-aware — never a file the live read contract
-    * names) and orphaned compactdata staging dirs. */
-  private def settleRewrites(fs: FileSystem, tableDir: Path, cb: Path): Unit = {
-    val protectedFiles = committedFiles(fs, tableDir)
-      .map(fs.makeQualified).toSet
-    val (manifests0, done0) = pairNames(fs, cb)
-    val committed0 = done0.toSeq.sorted.flatMap(n =>
-      readManifestFull(fs, new Path(cb, s"$n.manifest")).map(n -> _))
-    committed0.iterator.flatMap(_._2.supersedes).toSet
-      .filter(n => manifests0.contains(n) || done0.contains(n))
-      .foreach(settlePair(fs, tableDir, _, protectedFiles))
-    (manifests0 -- done0).filter(_.startsWith("compactdata-"))
-      .foreach(settlePair(fs, tableDir, _, protectedFiles))
+    * ([[compactDataFiles]], [[deleteWhere]], [[vacuum]]): finish any
+    * interrupted predecessor's supersedes chain, sweep unmarked
+    * `compactdata-*` manifests (protected-aware — never a file the live
+    * read contract names) and orphaned compactdata staging dirs. Takes
+    * the op's first scan and returns the log as the op goes on to see
+    * it: the same scan when the settle left the control dir untouched,
+    * else one fresh scan. */
+  private def settleRewrites(fs: FileSystem, tableDir: Path, log: LogScan): LogScan = {
+    val protectedFiles = log.files.map(fs.makeQualified).toSet
+    val unmarked = log.pairs.collect {
+      case (n, false, _) if n.startsWith("compactdata-") && !log.ghosts(n) => n
+    }
+    val settle = log.ghosts.toSeq ++ unmarked
+    settle.foreach(n => settlePair(fs, tableDir, n, log.manifest(n), protectedFiles))
     val staging = new Path(tableDir, "_staging")
     if (fs.exists(staging))
       fs.listStatus(staging).map(_.getPath)
         .filter(_.getName.startsWith("compactdata_"))
         .foreach(p => fs.delete(p, true))
-  }
-
-  /** Live committed pairs eligible as rewrite inputs (foreign-writer
-    * `w-*` pairs excluded) plus the still-resurrectable dead exclusions
-    * the new manifest must carry forward. */
-  private def liveNonWriterPairs(fs: FileSystem, cb: Path)
-      : (Seq[(String, ManifestData)], Set[String]) = {
-    val (m, d) = pairNames(fs, cb)
-    val full = d.toSeq.sorted.filterNot(_.startsWith("w-")).map(n =>
-      n -> readManifestFull(fs, new Path(cb, s"$n.manifest")).getOrElse(
-        throw new IllegalStateException(
-          s"committed manifest unreadable during data rewrite: $n" +
-            (if (m.contains(n)) "" else " (manifest missing)"))))
-    val dead = full.iterator.flatMap(_._2.supersedes).toSet
-    // carry forward only exclusions whose pairs still exist — those
-    // are the resurrectable ones; carrying every historical name
-    // would grow the supersedes header without bound
-    (full.filterNot { case (n, _) => dead.contains(n) },
-      dead.filter(n => m.contains(n) || d.contains(n)))
+    if (settle.isEmpty) log else scanPairs(fs, tableDir)
   }
 
   /** Row-level delete: permanently remove every committed row matching
@@ -999,16 +958,17 @@ object IdempotentSink {
     import org.apache.spark.sql.functions.{coalesce, col, count, expr, input_file_name, lit, not}
     val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
     val cb = new Path(tableDir, "_committed_batches")
-    require(fs.exists(cb) && hasCommitLog(fs, tableDir),
+    val log0 = scanPairs(fs, tableDir)
+    require(log0.hasCommitted,
       s"$tableDir has no batch-commit log — deleteWhere needs a table " +
         "written through IdempotentSink")
-    settleRewrites(fs, tableDir, cb)
-    val liveWriters = pairNames(fs, cb)._2.filter(_.startsWith("w-"))
+    val log = settleRewrites(fs, tableDir, log0)
+    val liveWriters = log.committed.map(_._1).filter(_.startsWith("w-"))
     require(liveWriters.isEmpty,
       s"$tableDir has live foreign-writer pairs ${liveWriters.toSeq.sorted}" +
         " — a delete over them would be undone by the writer's replay;" +
         " retire them first via compactCommits(foldWriters = ...)")
-    val (inputs, deadExclusions) = liveNonWriterPairs(fs, cb)
+    val inputs = log.rewriteInputs
     if (inputs.isEmpty) return 0L
 
     // which committed files hold matching rows? Stats-index pre-prune
@@ -1056,7 +1016,7 @@ object IdempotentSink {
       case (rel, _) if affectedFiles.contains(finalOf(rel)) =>
         new Path(tableDir, finalRelPath(rel)).toString
     }).distinct
-    val k = nextRewriteK(fs, cb)
+    val k = log.nextK("compactdata")
     val stagingRoot = new Path(tableDir, s"_staging/compactdata_$k")
     val affectedPartDirs = rewriteFiles
       .map(f => new Path(f).getParent.toString).toSet.size
@@ -1096,7 +1056,7 @@ object IdempotentSink {
       layoutStr.filter(ls => inputs.forall(_._2.layout.contains(ls)))
     writeAtomic(fs, new Path(cb, s"compactdata-$k.manifest"),
       manifestBody(staged ++ carried,
-        inputs.map(_._1).toSet ++ deadExclusions, maxBatch, recordLayout))
+        inputs.map(_._1).toSet ++ log.ghosts, maxBatch, recordLayout))
     staged.foreach { case (rel, len) =>
       promoteOne(fs, stagingRoot, tableDir, rel, len, "compactdata", k.toString)
     }
@@ -1105,7 +1065,7 @@ object IdempotentSink {
     val keep = (staged ++ carried).map { case (rel, _) =>
       fs.makeQualified(new Path(tableDir, finalRelPath(rel)))
     }.toSet
-    inputs.foreach { case (n, _) => settlePair(fs, tableDir, n, keep) }
+    inputs.foreach { case (n, md) => settlePair(fs, tableDir, n, Some(md), keep) }
     deleted
   }
 
@@ -1136,8 +1096,8 @@ object IdempotentSink {
     val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
     val cb = new Path(tableDir, "_committed_batches")
     if (!fs.exists(cb)) return (0, 0)
-    settleRewrites(fs, tableDir, cb)
-    val (manifests, done) = pairNames(fs, cb)
+    val log = settleRewrites(fs, tableDir, scanPairs(fs, tableDir))
+    val done = log.committed.map(_._1).toSet
     val staging = new Path(tableDir, "_staging")
     var dirs = 0
     if (fs.exists(staging)) {
@@ -1150,16 +1110,14 @@ object IdempotentSink {
           // no manifest and not in-flight → crashed first attempt,
           // nothing published. A published-but-unmarked batch manifest
           // keeps its staging (a replay may still resume its promote).
-          if (!inFlight && (done.contains(pair) || !manifests.contains(pair))) {
+          if (!inFlight && (done.contains(pair) || !log.names.contains(pair))) {
             fs.delete(d, true)
             dirs += 1
           }
         }
     }
     var tmps = 0
-    fs.listStatus(cb).map(_.getPath)
-      .filter(p => p.getName.startsWith(".") && p.getName.endsWith(".tmp"))
-      .foreach { p => fs.delete(p, false); tmps += 1 }
+    log.tmps.foreach { p => fs.delete(p, false); tmps += 1 }
     (dirs, tmps)
   }
 
@@ -1245,9 +1203,6 @@ object IdempotentSink {
     * the self-terminating header+trailer format is valid — any other
     * content is treated as torn, so a replay restages under a fresh
     * generation rather than trusting a file of unknown provenance. */
-  private[ocsf] def readManifest(fs: FileSystem, p: Path): Option[Seq[(String, Long)]] =
-    readManifestFull(fs, p).map(_.entries)
-
   private[ocsf] def readManifestFull(fs: FileSystem, p: Path): Option[ManifestData] = {
     val lines = readLines(fs, p)
     lines.headOption match {

@@ -36,8 +36,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
 object OcsfTables {
 
   /** A committed table is read from its commit log, parsed on the
-    * driver ([[IdempotentSink.readContract]]: one LIST of the control
-    * dir and one GET per live manifest).
+    * driver: one [[IdempotentSink.scanPairs]] — one LIST of the control
+    * dir and one GET per manifest in it — both decides that the table
+    * has a committed batch and names its files.
     *
     * `verifyAppends` arms the mixed-table stray guard (below). It is a
     * MISCONFIGURATION detector, not a runtime invariant, and it costs
@@ -63,10 +64,9 @@ object OcsfTables {
            verifyAppends: Boolean = false,
            mergeSchemas: Boolean = false): DataFrame = {
     val (fs, tableDir) = tableFs(spark, baseDir, route)
-    if (IdempotentSink.hasCommitLog(fs, tableDir))
-      loadCommitted(spark, fs, tableDir,
-        IdempotentSink.readContract(fs, tableDir), verifyAppends,
-        mergeSchemas)
+    val log = IdempotentSink.scanPairs(fs, tableDir)
+    if (log.hasCommitted)
+      loadCommitted(spark, fs, tableDir, log, verifyAppends, mergeSchemas)
     else if (mergeSchemas)
       spark.read.option("mergeSchema", "true").parquet(tableDir.toString)
     else spark.read.parquet(tableDir.toString)
@@ -74,11 +74,10 @@ object OcsfTables {
 
   private def loadCommitted(spark: SparkSession, fs: FileSystem,
                             tableDir: Path,
-                            contract: (Seq[Path], Set[Path]),
+                            log: IdempotentSink.LogScan,
                             verifyAppends: Boolean,
                             mergeSchemas: Boolean = false): DataFrame = {
-    val (files, named) = contract
-    require(files.nonEmpty,
+    require(log.files.nonEmpty,
       s"$tableDir has a batch-commit log but no committed data files")
     if (verifyAppends) {
       // mixed-table guard: a data file at a final path that NO manifest
@@ -89,11 +88,11 @@ object OcsfTables {
       // before) the manifests cover it, so a batch promoted after the
       // contract snapshot is re-checked against a FRESH contract
       // rather than flagged.
-      val strays0 = finalDataFiles(fs, tableDir).filterNot(named.contains)
+      val strays0 = finalDataFiles(fs, tableDir).filterNot(log.named.contains)
       val strays =
         if (strays0.isEmpty) strays0
         else { // racing a live writer? re-snapshot the contract once
-          val fresh = IdempotentSink.readContract(fs, tableDir)._2
+          val fresh = IdempotentSink.scanPairs(fs, tableDir).named
           strays0.filterNot(fresh.contains).filter(fs.exists)
         }
       require(strays.isEmpty,
@@ -102,7 +101,7 @@ object OcsfTables {
           s"named by any batch manifest and would be invisible to the " +
           s"manifest reader; first: ${strays.headOption.getOrElse("")}")
     }
-    readFiles(spark, fs, tableDir, files, mergeSchemas)
+    readFiles(spark, fs, tableDir, log.files, mergeSchemas)
   }
 
   /** The one committed file-list read. Spark's schema inference
@@ -156,12 +155,8 @@ object OcsfTables {
     * VACUUM. Partition pruning survives via `basePath`. */
   def loadAsOf(spark: SparkSession, baseDir: String, route: String,
                asOfBatch: Long): DataFrame = {
-    val (fs, tableDir) = tableFs(spark, baseDir, route)
-    require(IdempotentSink.hasCommitLog(fs, tableDir),
-      s"$tableDir has no batch-commit log — time travel reads need a " +
-        "table written through IdempotentSink")
-    dfFor(spark, fs, tableDir,
-      IdempotentSink.filesAsOf(fs, tableDir, asOfBatch))
+    val (fs, tableDir, log) = committedLog(spark, baseDir, route, "time travel")
+    dfFor(spark, fs, tableDir, log, log.filesAsOf(asOfBatch))
   }
 
   /** Incremental consumption: only the rows committed AFTER
@@ -174,12 +169,8 @@ object OcsfTables {
     * `maxBatchId` / scheduling accordingly). */
   def changesSince(spark: SparkSession, baseDir: String, route: String,
                    afterBatch: Long): DataFrame = {
-    val (fs, tableDir) = tableFs(spark, baseDir, route)
-    require(IdempotentSink.hasCommitLog(fs, tableDir),
-      s"$tableDir has no batch-commit log — incremental reads need a " +
-        "table written through IdempotentSink")
-    dfFor(spark, fs, tableDir,
-      IdempotentSink.filesSince(fs, tableDir, afterBatch))
+    val (fs, tableDir, log) = committedLog(spark, baseDir, route, "incremental")
+    dfFor(spark, fs, tableDir, log, log.filesSince(afterBatch))
   }
 
   /** Build or refresh the file-skipping stats index for `route` on
@@ -203,12 +194,9 @@ object OcsfTables {
     * every data file and defeat the point of skipping). */
   def loadWhere(spark: SparkSession, baseDir: String, route: String,
                 cond: String): DataFrame = {
-    val (fs, tableDir) = tableFs(spark, baseDir, route)
-    require(IdempotentSink.hasCommitLog(fs, tableDir),
-      s"$tableDir has no batch-commit log — stats-pruned reads need a " +
-        "table written through IdempotentSink")
-    dfFor(spark, fs, tableDir, prunedFiles(spark, fs, tableDir, cond))
-      .filter(cond)
+    val (fs, tableDir, log) = committedLog(spark, baseDir, route, "stats-pruned")
+    dfFor(spark, fs, tableDir, log,
+      StatsIndex.prune(spark, fs, tableDir, log.files, cond)).filter(cond)
   }
 
   /** Row-level erasure for `route`: permanently delete every row
@@ -240,6 +228,18 @@ object OcsfTables {
     (tableDir.getFileSystem(spark.sessionState.newHadoopConf()), tableDir)
   }
 
+  /** `route`'s table with its commit log scanned once; raises unless it
+    * holds a committed batch, naming the `kind` of read that needs one. */
+  private def committedLog(spark: SparkSession, baseDir: String, route: String,
+                           kind: String): (FileSystem, Path, IdempotentSink.LogScan) = {
+    val (fs, tableDir) = tableFs(spark, baseDir, route)
+    val log = IdempotentSink.scanPairs(fs, tableDir)
+    require(log.hasCommitted,
+      s"$tableDir has no batch-commit log — $kind reads need a " +
+        "table written through IdempotentSink")
+    (fs, tableDir, log)
+  }
+
   /** An explicit file-list read; an EMPTY selection (e.g. no changes
     * since the consumer's checkpoint) still returns the table's true
     * schema, read from the first committed file with a LIMIT 0 — one
@@ -249,10 +249,10 @@ object OcsfTables {
     * same clear error as [[load]] rather than Spark's opaque
     * cannot-infer-schema failure. */
   private def dfFor(spark: SparkSession, fs: FileSystem, tableDir: Path,
-                    files: Seq[Path]): DataFrame =
+                    log: IdempotentSink.LogScan, files: Seq[Path]): DataFrame =
     if (files.nonEmpty) readFiles(spark, fs, tableDir, files)
     else {
-      val one = IdempotentSink.committedFiles(fs, tableDir).take(1)
+      val one = log.files.take(1)
       require(one.nonEmpty,
         s"$tableDir has a batch-commit log but no committed data files")
       readFiles(spark, fs, tableDir, one).limit(0)
@@ -287,11 +287,10 @@ object OcsfTables {
       val name = OcsfSink.tableName(route)
       val dir = new Path(s"$baseDir/$name")
       val fs = dir.getFileSystem(hadoopConf)
-      if (IdempotentSink.hasCommitLog(fs, dir)) {
-        // one contract parse per table: the probe and the load share it
-        val contract = IdempotentSink.readContract(fs, dir)
-        if (contract._1.nonEmpty) {
-          loadCommitted(spark, fs, dir, contract, verifyAppends)
+      val log = IdempotentSink.scanPairs(fs, dir)
+      if (log.hasCommitted) {
+        if (log.files.nonEmpty) {
+          loadCommitted(spark, fs, dir, log, verifyAppends)
             .createOrReplaceTempView(s"ocsf_$name")
           Some(s"ocsf_$name")
         } else None

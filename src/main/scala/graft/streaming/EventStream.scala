@@ -113,8 +113,10 @@ object EventStream {
     *
     * Delivery: exactly-once per (route, batch). The checkpoint records
     * completed batches (clean restarts reprocess nothing), and a crash
-    * MID-batch replays the batch under the SAME batchId into
-    * [[graft.ocsf.IdempotentSink.writeBatch]]'s two-phase commit —
+    * MID-batch replays the batch under the SAME batchId into the
+    * fan-out's per-route two-phase commit
+    * ([[graft.ocsf.OcsfSink.fanOutIdempotent]] →
+    * `IdempotentSink.begin`, one attempt per route) —
     * routes that already committed the batch skip, half-written routes
     * restage or resume their promote, so nothing is re-appended (the
     * spec pins the crash-after-k-routes replay). See IdempotentSink
@@ -155,7 +157,7 @@ object EventStream {
     * advisory, so a failed refresh is logged, never a batch failure.
     *
     * `filesPerDay` is the writer-parallelism lever (writer tasks per
-    * (route, day)) of every route's [[IdempotentSink.writeBatch]]. The
+    * (route, day)) of every route's write in the fan-out. The
     * default 0 auto-sizes per batch from the cache's size estimate
     * (ONE file per (route, day) at micro-batch scale — the
     * file-hygiene optimum for a long-running table). At one file per

@@ -22,7 +22,10 @@ import org.apache.hadoop.util.Progressable
   * once the armed budget is exceeded every further mutation throws
   * [[FaultFs.InjectedCrash]] — modeling a hard crash where all
   * subsequent IO fails, not just one op. Reads are never failed (a
-  * reader racing the crash is a separate, already-specced concern).
+  * reader racing the crash is a separate, already-specced concern),
+  * but the commit-log reads — each LIST of a `_committed_batches` dir
+  * and each open of a `*.manifest` — are logged for
+  * [[CommitLogReadsSpec]].
   *
   * The counter is JVM-global on purpose: in local mode the driver and
   * every executor thread share it, so a budget of k crashes the
@@ -35,13 +38,20 @@ class FaultFs extends RawLocalFileSystem {
   // RawLocalFileSystem's lazy permission loading calls new File(uri),
   // which rejects any scheme but file: — return eager statuses instead
   // (the NonAtomicRenameFs workaround)
-  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] =
+  override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName == "_committed_batches") FaultFs.read("list", f)
     super.listStatus(f).map { s =>
       new org.apache.hadoop.fs.FileStatus(s.getLen, s.isDirectory,
         s.getReplication, s.getBlockSize, s.getModificationTime,
         s.getAccessTime, FsPermission.getFileDefault, "test", "test",
         s.getPath)
     }
+  }
+
+  override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName.endsWith(".manifest")) FaultFs.read("open", f)
+    super.open(f, bufferSize)
+  }
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
                       bufferSize: Int, replication: Short, blockSize: Long,
@@ -97,6 +107,10 @@ object FaultFs {
   @volatile private var budget: Long = Long.MaxValue
   private val log =
     java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+  private val readLog =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+
+  private[ocsf] def read(op: String, p: Path): Unit = { readLog.add(s"$op $p"); () }
 
   private[ocsf] def tick(op: String, p: Path): Unit = {
     val n = opCount.incrementAndGet()
@@ -108,11 +122,13 @@ object FaultFs {
 
   /** Allow exactly `allowedOps` mutations, then fail every further one. */
   def arm(allowedOps: Long): Unit = {
-    opCount.set(0L); log.clear(); budget = allowedOps
+    opCount.set(0L); log.clear(); readLog.clear(); budget = allowedOps
   }
 
   /** Count without failing (for measuring an operation's op total). */
-  def disarm(): Unit = { budget = Long.MaxValue; opCount.set(0L); log.clear() }
+  def disarm(): Unit = {
+    budget = Long.MaxValue; opCount.set(0L); log.clear(); readLog.clear()
+  }
 
   def ops: Long = opCount.get()
 
@@ -121,6 +137,14 @@ object FaultFs {
   def trace: Seq[String] = {
     import scala.jdk.CollectionConverters._
     log.asScala.toSeq
+  }
+
+  /** The commit-log reads since the last arm/disarm: `list <dir>` per
+    * LIST of a `_committed_batches` dir, `open <file>` per open of a
+    * manifest. */
+  def reads: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    readLog.synchronized(readLog.asScala.toList)
   }
 
   /** True if any cause in the chain is an injected crash. Spark wraps

@@ -50,14 +50,14 @@ class IdempotentSinkSpec extends SparkSpec {
       val p = new org.apache.hadoop.fs.Path(s"$probe/m.manifest")
       // the full content must parse...
       Files.write(Paths.get(s"$probe/m.manifest"), bytes)
-      assert(IdempotentSink.readManifest(fs, p).isDefined, "full manifest must parse")
+      assert(IdempotentSink.readManifestFull(fs, p).isDefined, "full manifest must parse")
       // ...and EVERY strict byte-prefix must be rejected as torn — the
       // property the #end trailer buys on a non-atomic store, including
       // cuts inside the last entry's length digits where the line count
       // still matches and every line still parses
       for (cut <- 0 until bytes.length) {
         Files.write(Paths.get(s"$probe/m.manifest"), bytes.take(cut))
-        assert(IdempotentSink.readManifest(fs, p).isEmpty,
+        assert(IdempotentSink.readManifestFull(fs, p).isEmpty,
           s"prefix of length $cut parsed as a valid manifest")
       }
     }
@@ -177,25 +177,25 @@ class IdempotentSinkSpec extends SparkSpec {
     // attempt g1 begins (the route future the streaming layer later
     // times out and abandons), then the replayed batch begins a NEWER
     // attempt — but has not committed yet
-    val gen1 = IdempotentSink.beginAttempt(fs, tableDir, batchId = 3L)
-    val gen2 = IdempotentSink.beginAttempt(fs, tableDir, batchId = 3L)
+    val gen1 = IdempotentSink.beginAttempt(fs, tableDir, pair = "3")
+    val gen2 = IdempotentSink.beginAttempt(fs, tableDir, pair = "3")
     // the abandoned g1 attempt gets scheduled mid-replay: it stages
     // into its own generation dir, then must abort at the manifest
     // control step — the replay owns the batch now
     intercept[IdempotentSink.SupersededAttemptException] {
       IdempotentSink.runAttempt(batch, fs, tableDir, "DNS Activity",
-        region, acct, batchId = 3L, filesPerDay = 0, gen = gen1)
+        region, acct, pair = "3", filesPerDay = 0, gen = gen1)
     }
     assert(!Files.exists(base.resolve("dns_activity/_committed_batches/3.manifest")),
       "a fenced attempt published a manifest")
     // the current attempt then lands the batch exactly once
     IdempotentSink.runAttempt(batch, fs, tableDir, "DNS Activity",
-      region, acct, batchId = 3L, filesPerDay = 0, gen = gen2)
+      region, acct, pair = "3", filesPerDay = 0, gen = gen2)
     assert(tableUids(base) == Seq("e1", "e2"))
     // a late replay of the FENCED generation is also harmless: the
     // committed marker short-circuits it
     IdempotentSink.runAttempt(batch, fs, tableDir, "DNS Activity",
-      region, acct, batchId = 3L, filesPerDay = 0, gen = gen1)
+      region, acct, pair = "3", filesPerDay = 0, gen = gen1)
     assert(tableUids(base) == Seq("e1", "e2"))
     // a straggler's staging leftovers (it wrote its gen dir before the
     // winner's cleanup... or after) are swept on the next replay
@@ -234,10 +234,10 @@ class IdempotentSinkSpec extends SparkSpec {
     val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
     // straggler attempt g1 begins; the replay (g2) lands and commits,
     // evicting the (table, batch) bookkeeping
-    val gen1 = IdempotentSink.beginAttempt(fs, tableDir, batchId = 4L)
+    val gen1 = IdempotentSink.beginAttempt(fs, tableDir, pair = "4")
     IdempotentSink.writeBatch(df("e1" -> "2023-11-14"), base.toString,
       "DNS Activity", region, acct, batchId = 4L)
-    val key = IdempotentSink.attemptKey(fs, tableDir, 4L)
+    val key = IdempotentSink.attemptKey(fs, tableDir, "4")
     assert(!IdempotentSink.bookkeepingKeys.contains(key), "commit must evict")
     // the straggler now reaches its next control step: lockFor recreates
     // the lock entry (the computeIfAbsent race), then the generation
@@ -352,10 +352,10 @@ class IdempotentSinkSpec extends SparkSpec {
     // a per-key counter restarted at 1 after commit-time eviction
     // would hand a replay the same gen a first-attempt straggler
     // still holds; the process-wide sequence makes every gen unique
-    val g1 = IdempotentSink.beginAttempt(fs, tableDir, 7L)
+    val g1 = IdempotentSink.beginAttempt(fs, tableDir, "7")
     IdempotentSink.writeBatch(df("g1" -> "2023-11-14"), base.toString,
       "DNS Activity", region, acct, batchId = 7L) // commits + evicts
-    val g2 = IdempotentSink.beginAttempt(fs, tableDir, 7L)
+    val g2 = IdempotentSink.beginAttempt(fs, tableDir, "7")
     assert(g2 > g1, s"recreated generation $g2 must exceed pre-evict $g1")
   }
 

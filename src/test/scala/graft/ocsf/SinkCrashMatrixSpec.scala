@@ -122,7 +122,7 @@ class SinkCrashMatrixSpec extends SparkSpec {
       val td = new Path(s"$base/dns_activity")
       assert(fs.exists(new Path(td, "_committed_batches/0.committed")),
         s"k=$k marker missing")
-      assert(IdempotentSink.readManifest(fs,
+      assert(IdempotentSink.readManifestFull(fs,
         new Path(td, "_committed_batches/0.manifest")).isDefined,
         s"k=$k manifest unreadable")
       assert(!fs.exists(new Path(td, "_staging/batch_0")),
@@ -243,6 +243,75 @@ class SinkCrashMatrixSpec extends SparkSpec {
       // settled: exactly one live data file per day remains reachable
       val files = IdempotentSink.committedFiles(fs, td)
       assert(files.size == 1, s"k=$k expected 1 compacted file: $files")
+    }
+  }
+
+  test("vacuum: reads exact at every cut point over a crashed rewrite, abandoned staging and a torn tmp; the re-run settles") {
+    registerScheme()
+    FaultFs.disarm()
+    val proto = Files.createTempDirectory("crashmx-vac-proto")
+    val protoBase = "faultfs:" + proto
+    // two days, so the rewrite stages two files
+    (0L until 3L).foreach { b =>
+      IdempotentSink.writeBatch(df(s"e$b" -> s"2023-11-1${4 + b % 2}"),
+        protoBase, route, region, acct, batchId = b)
+    }
+    val before = contractUids(protoBase)
+    val protoTd = new Path(s"$protoBase/dns_activity")
+    // a compactDataFiles crashed right after promoting its first file:
+    // an unmarked compactdata-0 manifest, a promoted file no committed
+    // manifest names, and the rest still under its staging dir
+    val (_, rewrite) = measure {
+      IdempotentSink.compactDataFiles(spark,
+        new Path(s"${copyOf(proto)}/dns_activity"), filesPerDay = 1)
+    }
+    val published = rewrite.indexWhere(t =>
+      t.startsWith("rename") && t.contains(".compactdata-0.manifest.tmp"))
+    val firstPromote = rewrite.indexWhere(t =>
+      t.startsWith("rename") && t.contains("_staging/compactdata_0/"), published)
+    assert(published >= 0 && firstPromote > published,
+      s"rewrite trace lacks a manifest publish and promote: $rewrite")
+    assert(crashAt(firstPromote + 1L, "compactDataFiles") {
+      IdempotentSink.compactDataFiles(spark, protoTd, filesPerDay = 1)
+    })
+    val table = proto.resolve("dns_activity")
+    val cbNames = fs.listStatus(new Path(protoTd, "_committed_batches"))
+      .map(_.getPath.getName).toSet
+    assert(cbNames("compactdata-0.manifest") && !cbNames("compactdata-0.committed") &&
+      !cbNames.exists(_.startsWith(".")) &&
+      Files.isDirectory(table.resolve("_staging/compactdata_0")),
+      s"the rewrite did not crash between publish and commit: $cbNames")
+    // a writer that crashed in its first attempt's stage and never came
+    // back, and a control-file publish torn before its rename
+    val abandoned = Files.createDirectories(table.resolve("_staging/batch_7/g99"))
+    Files.write(abandoned.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    Files.write(table.resolve("_committed_batches/.8.manifest.tmp"),
+      "#graft-manifest files=1\ng1/".getBytes("UTF-8"))
+    assert(contractUids(protoBase) == before)
+    val (n, _) = measure {
+      assert(IdempotentSink.vacuum(spark,
+        new Path(s"${copyOf(proto)}/dns_activity")) == (1, 1))
+    }
+    assert(n >= 5, s"expected settle, sweep and tmp deletes, got $n")
+    (0L until n).foreach { k =>
+      val c = copyOf(proto)
+      val td = new Path(s"$c/dns_activity")
+      crashAt(k, "vacuum")(IdempotentSink.vacuum(spark, td))
+      assert(contractUids(c) == before, s"k=$k read inside crash window")
+      IdempotentSink.vacuum(spark, td)
+      assert(contractUids(c) == before, s"k=$k read after re-run")
+      // settled: only the committed batch pairs remain in the log, no
+      // staging is left, and the raw directory view holds no stray
+      val names = fs.listStatus(new Path(td, "_committed_batches"))
+        .map(_.getPath.getName).sorted.toSeq
+      assert(names == (0 until 3).flatMap(b => Seq(s"$b.committed", s"$b.manifest")),
+        s"k=$k control log did not settle: $names")
+      assert(!fs.exists(new Path(td, "_staging")) ||
+        fs.listStatus(new Path(td, "_staging")).isEmpty,
+        s"k=$k staging left: ${fs.listStatus(new Path(td, "_staging")).toSeq}")
+      val raw = spark.read.parquet(td.toString)
+        .select("metadata.uid").collect().map(_.getString(0)).sorted.toSeq
+      assert(raw == before, s"k=$k raw view: $raw")
     }
   }
 

@@ -290,7 +290,8 @@ class StatsIndexSpec extends SparkSpec {
     // metadata-scale case: the file universe exists ONLY in manifests
     // (no physical data files needed for the metadata path); the
     // driver parses every manifest, excludes the superseded pair, and
-    // the prune join collects only the survivors
+    // the prune join collects only the survivors; compactCommits then
+    // folds the same log
     val started = System.nanoTime()
     val base = Files.createTempDirectory("dlist").toString
     val tableDir = new Path(s"file:$base/t")
@@ -352,7 +353,18 @@ class StatsIndexSpec extends SparkSpec {
     assert(survivors.map(_.getName).toSet ==
       Set(f"part-${nManifests - 1}-${per - 1}%05d.parquet",
         f"part-${nManifests - 1}-${per - 2}%05d.parquet"))
-    info(f"120k-entry log: written, resolved and pruned in " +
+    // the maintenance path over the same log: the 12 batches and the
+    // fold merge into one compact-* pair, the superseded pair settles,
+    // and the read contract does not move
+    assert(IdempotentSink.compactCommits(fs, tableDir) == nManifests + 1)
+    val names = fs.listStatus(cb).map(_.getPath.getName)
+      .filterNot(_.startsWith(".")).sorted.toSeq
+    assert(names == Seq("compact-1.committed", "compact-1.manifest"), names)
+    val folded = IdempotentSink.committedFiles(fs, tableDir)
+    assert(folded.size == committed.size && folded.toSet == committed.toSet)
+    assert(!folded.exists(_.toString.contains("/dead/")),
+      "superseded pair's entries leaked into the folded contract")
+    info(f"120k-entry log: written, resolved, pruned and folded in " +
       f"${(System.nanoTime() - started) / 1e9}%.1f s")
   }
 }
