@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Exactly-once per (route, batch) parquet landing (SURVEY.md §2 A24).
   *
@@ -98,17 +99,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Control files are one pair per batch: O(batches) small objects per
   * table, and every read or maintenance op takes them in through one
   * [[scanPairs]] — one LIST of the control dir plus one GET per
-  * manifest in it (a data rewrite rescans once after its settle). At
-  * streaming cadence over months, run [[compactCommits]] to
-  * merge them into one pair — the read contract only requires that
-  * the set of (manifest, committed) pairs names every live data file
-  * exactly once, and [[committedFiles]] dedups on final paths, so the
-  * compaction's publish-then-delete windows are reader-safe at every
-  * crash point. Foreign-writer (`w-*`) pairs are NEVER folded by
-  * default — a replay of that writer checks its own pair name, and
-  * folding it away would make the replay restage and duplicate rows;
-  * pass `foldWriters` once a backfill is retired (will never re-run)
-  * to merge its pairs into the compacted history.
+  * manifest in it. At streaming cadence over months, run
+  * [[compactCommits]] to merge them into one pair — the read contract
+  * only requires that the set of (manifest, committed) pairs names
+  * every live data file exactly once, and [[committedFiles]] dedups on
+  * final paths, so the compaction's publish-then-delete windows are
+  * reader-safe at every crash point. Foreign-writer (`w-*`) pairs are
+  * NEVER folded by default — a replay of that writer checks its own
+  * pair name, and folding it away would make the replay restage and
+  * duplicate rows; pass `foldWriters` once a backfill is retired (will
+  * never re-run) to merge its pairs into the compacted history.
+  *
+  * MAINTENANCE — [[compactCommits]], [[compactDataFiles]] and
+  * [[deleteWhere]] are one commit, [[fold]], over different inputs: it
+  * replaces live committed pairs by one superseding pair whose
+  * manifest names the files it restaged (promoted like a batch's) and
+  * the files it carried (left in place), then settles the inputs. A
+  * control merge carries every file, a data compaction restages every
+  * row, an erasure restages the affected files and carries the rest.
+  * Each op, [[vacuum]] included, starts with the same [[settle]] of
+  * whatever a crashed predecessor left, on the op's one scan.
   */
 object IdempotentSink {
 
@@ -451,10 +461,18 @@ object IdempotentSink {
       live.filterNot(_._1.startsWith("w-"))
 
     /** Fresh `<prefix>-<k>` sequence number: one past the largest k any
-      * manifest or marker (committed or crashed) has used. */
-    def nextK(prefix: String): Int = names.flatMap(n =>
+      * manifest (committed or crashed) or any committed `#supersedes`
+      * header names. A settled pair's name can outlive its files in its
+      * superseder's header; a new pair under that name would be born
+      * superseded, and the superseder with it. */
+    def nextK(prefix: String): Int = (names ++ superseded).flatMap(n =>
       if (n.startsWith(s"$prefix-")) n.stripPrefix(s"$prefix-").toIntOption
       else None).maxOption.getOrElse(-1) + 1
+
+    /** This view minus the pairs in `settled` (deleted since the scan). */
+    def without(settled: Set[String]): LogScan =
+      if (settled.isEmpty) this
+      else new LogScan(fs, tableDir, pairs.filterNot(p => settled(p._1)), tmps)
 
     private def finalPaths(mds: Seq[ManifestData]): Seq[Path] =
       mds.flatMap(_.entries)
@@ -590,12 +608,12 @@ object IdempotentSink {
     scanPairs(fs, tableDir).live.map(_._1).filter(_.startsWith("w-")).sorted
 
   /** Delete one superseded pair — its data files FIRST (skipping any
-    * path the live read contract still names: a control-only merge
-    * re-owns its inputs' files without rewriting them), then marker,
-    * then manifest, so no crash cut strands a file no manifest names
-    * or produces the marker-without-manifest state readers reject.
-    * `md` is the pair's manifest as the caller's [[scanPairs]] parsed
-    * it (None when torn: only the control files go). */
+    * path in `protectedFiles`: a control-only merge re-owns its inputs'
+    * files without rewriting them), then marker, then manifest, so no
+    * crash cut strands a file no manifest names or produces the
+    * marker-without-manifest state readers reject. `md` is the pair's
+    * manifest as the caller's [[scanPairs]] parsed it (None when torn:
+    * only the control files go). */
   private def settlePair(fs: FileSystem, tableDir: Path, n: String,
                          md: Option[ManifestData],
                          protectedFiles: Set[Path]): Unit = {
@@ -609,28 +627,101 @@ object IdempotentSink {
     fs.delete(new Path(cb, s"$n.manifest"), false)
   }
 
+  /** The first step of every maintenance op: finish whatever an
+    * interrupted predecessor left. Settles every superseded ghost (an
+    * interrupted cleanup) and every unmarked `compact-*`/`compactdata-*`
+    * manifest (a fold that crashed before its marker) through the
+    * protected-aware [[settlePair]] — a control merge's files are all
+    * still live and stay, a crashed rewrite's promoted files are named
+    * by no live pair and go — then drops orphaned rewrite staging.
+    * Maintenance owns those namespaces and runs writer-free, so none of
+    * it can be an in-flight promote. Returns `log` minus the pairs it
+    * settled: the view the op goes on with, without a rescan. */
+  private def settle(fs: FileSystem, tableDir: Path, log: LogScan): LogScan = {
+    val settled = (log.ghosts.toSeq.sorted ++ log.pairs.collect {
+      case (n, false, _) if n.startsWith("compact") => n
+    }).distinct
+    if (settled.nonEmpty) {
+      val protectedFiles = log.files.map(fs.makeQualified).toSet
+      settled.foreach(n => settlePair(fs, tableDir, n, log.manifest(n), protectedFiles))
+    }
+    val staging = new Path(tableDir, "_staging")
+    if (fs.exists(staging))
+      fs.listStatus(staging).map(_.getPath)
+        .filter(_.getName.startsWith("compactdata_"))
+        .foreach(p => fs.delete(p, true))
+    log.without(settled.toSet)
+  }
+
+  /** The one commit of every maintenance op: replace `inputs` (live
+    * committed pairs of the settled view `log`) by one fresh pair
+    * `<prefix>-<k>` naming `restaged`'s rows, written under
+    * `_staging/<prefix>_<k>/`, plus the `carried` files, which stay
+    * where they are. In order, each step atomic or idempotent:
+    *  1. STAGE `restaged` partitioned by region/accountId/eventDay.
+    *  2. MANIFEST: publish the staged and carried files with
+    *     `#supersedes` = the inputs (the settled view holds no ghost to
+    *     carry), `#maxbatch` = the largest batch id they (transitively)
+    *     cover — what keeps the time-travel horizon boundable across
+    *     chained folds — and `layout` as `#layout`.
+    *  3. PROMOTE the staged files, length-verified ([[promoteOne]]):
+    *     fresh part-file names, so the inputs' files stay live for
+    *     readers meanwhile.
+    *  4. COMMIT: publish the marker and drop the staging dir. The
+    *     marker is the atomic swap: every input is now superseded by
+    *     name, and the read contract is exactly the new pair's files.
+    *  5. CLEANUP: settle every input against the new pair's files —
+    *     files no longer named go first, then the marker, then the
+    *     manifest.
+    * Until step 4 the new manifest is unmarked and invisible; between 4
+    * and 5 the inputs are ghosts that [[LogScan.files]] excludes. A
+    * crash anywhere leaves state the next op's [[settle]] finishes. */
+  private def fold(fs: FileSystem, tableDir: Path, log: LogScan, prefix: String,
+                   inputs: Seq[(String, ManifestData)],
+                   restaged: Option[DataFrame], carried: Seq[(String, Long)],
+                   layout: Option[String] = None): Unit = {
+    val cb = new Path(tableDir, "_committed_batches")
+    val k = log.nextK(prefix)
+    val stagingRoot = new Path(tableDir, s"_staging/${prefix}_$k")
+    val staged = restaged.toSeq.flatMap { rows =>
+      rows.write.mode("overwrite").partitionBy(PartitionCols: _*)
+        .parquet(new Path(stagingRoot, "c").toString)
+      listRelative(fs, stagingRoot)
+    }
+    // re-anchor under a dummy attempt component so finalRelPath holds
+    val entries = staged ++ carried
+      .map { case (rel, len) => (s"c/${finalRelPath(rel)}", len) }.distinct
+    val maxBatch = inputs.flatMap { case (n, md) => n.toLongOption ++ md.maxBatch }
+      .maxOption
+    writeAtomic(fs, new Path(cb, s"$prefix-$k.manifest"),
+      manifestBody(entries, inputs.map(_._1).toSet, maxBatch, layout))
+    staged.foreach { case (rel, len) =>
+      promoteOne(fs, stagingRoot, tableDir, rel, len, prefix, k.toString)
+    }
+    writeAtomic(fs, new Path(cb, s"$prefix-$k.committed"), "")
+    if (restaged.isDefined) fs.delete(stagingRoot, true)
+    val keep = entries.map { case (rel, _) =>
+      fs.makeQualified(new Path(tableDir, finalRelPath(rel)))
+    }.toSet
+    inputs.foreach { case (n, md) => settlePair(fs, tableDir, n, Some(md), keep) }
+  }
+
   /** Merge the control files of every COMMITTED batch into ONE
     * (manifest, committed) pair named `compact-<k>`, then delete the
     * originals — bounding the one-GET-per-manifest tax every
     * [[scanPairs]] pays at streaming cadence (a 10 s trigger over months
-    * is 10⁵–10⁶ small control objects per table). It pays that tax once
-    * itself: one scan feeds the sweep, the ghost settle and the merge,
-    * and no manifest is opened twice. OFFLINE maintenance: run it
-    * only while no writer is active on the table (the same
-    * single-writer contract the sink itself requires).
+    * is 10⁵–10⁶ small control objects per table). A [[fold]] that
+    * restages nothing and carries every input file: one scan feeds the
+    * settle and the merge, and no manifest is opened twice. OFFLINE
+    * maintenance: run it only while no writer is active on the table
+    * (the same single-writer contract the sink itself requires).
     *
-    * Crash-safe on any store by ordering alone:
-    *  1. publish the merged manifest (atomic), 2. publish the merged
-    *  marker (atomic), 3. delete original markers, 4. delete original
-    *  manifests. Until step 2 the merged manifest is unmarked and
-    *  invisible; between 2 and 4 the merged pair and surviving
-    *  originals name the same data files twice and [[committedFiles]]'s
-    *  final-path distinct keeps the read exactly-once; markers are
-    *  deleted BEFORE their manifests so no cut point ever produces a
-    *  marker without a manifest (the state [[committedFiles]] rejects
-    *  as data loss). A crashed compaction is simply re-run: leftover
-    *  unmarked `compact-*` manifests are swept, never reused (the next
-    *  attempt takes a fresh `k`).
+    * Reader-safe at every crash point by ordering alone: between the
+    * merged marker and the originals' deletes the merged pair and the
+    * superseded originals name the same data files, and the read
+    * contract excludes the superseded ones. A crashed compaction is
+    * simply re-run: the re-run's [[settle]] drops its unmarked
+    * `compact-*` manifest before publishing its own.
     *
     * `maxBatchId` bounds WHICH batch pairs may merge: only pairs whose
     * name parses as a batch id <= maxBatchId (compact-* and
@@ -656,63 +747,18 @@ object IdempotentSink {
   def compactCommits(fs: FileSystem, tableDir: Path,
                      maxBatchId: Long = Long.MaxValue,
                      foldWriters: Set[String] = Set.empty): Int = {
-    val cb = new Path(tableDir, "_committed_batches")
-    val log = scanPairs(fs, tableDir)
-    // sweep unmarked compact-* manifests (a crashed attempt's step-1
-    // leftover; compaction owns this namespace and runs writer-free,
-    // so unlike a batch manifest it can never be an in-flight promote).
-    // compactdata-* is NOT swept here: those manifests own their data
-    // files, and only compactDataFiles knows how to sweep both.
-    log.pairs.collect { case (n, false, _) if n.startsWith("compact-") => n }
-      .foreach(n => fs.delete(new Path(cb, s"$n.manifest"), false))
-    // superseded ghosts are never merged — their rows live in the
-    // superseding manifest's files. Their presence is an interrupted
-    // cleanup (a crashed compactCommits step 3/4 or compactDataFiles
-    // step 6); RESUME it here via the protected-aware settle: a ghost
-    // of a control merge shares all its files with the merger (all
-    // protected → only control files deleted), a data-compaction
-    // ghost's old files are outside the live contract and are removed
-    // files-first, so no cut point ever strands a file that trips the
-    // stray-append guard. Exclusions are carried forward so ghosts a
-    // crash leaves behind stay dead under the merged manifest.
-    val protectedFiles = log.files.map(fs.makeQualified).toSet
-    log.ghosts.foreach(n => settlePair(fs, tableDir, n, log.manifest(n), protectedFiles))
-    val live = log.live.filterNot { case (n, _) =>
+    val log = settle(fs, tableDir, scanPairs(fs, tableDir))
+    val inputs = log.live.filterNot { case (n, _) =>
       // a batch newer than maxBatchId is untouchable: its streaming
-        // checkpoint may not have committed yet (see scaladoc)
-        n.toLongOption.exists(_ > maxBatchId) ||
+      // checkpoint may not have committed yet (see scaladoc)
+      n.toLongOption.exists(_ > maxBatchId) ||
         // a foreign writer's pair is untouchable unless that writer is
         // explicitly retired: its replay checks this pair's existence
         (n.startsWith("w-") && !writerIdOf(n).exists(foldWriters.contains))
     }
-    if (live.size < 2) return 0
-    val merged = live
-      .flatMap(_._2.entries)
-      // re-anchor under a dummy attempt component so finalRelPath holds
-      .map { case (rel, len) => (s"c/${finalRelPath(rel)}", len) }
-      .distinct
-    val k = log.nextK("compact")
-    // carry forward only exclusions whose pairs STILL exist after the
-    // settle above (the resurrectable ones) — carrying every
-    // historical name would grow the supersedes header without bound
-    // across repeated compactions (same rule as compactDataFiles)
-    val carried = log.superseded.filter(n =>
-      fs.exists(new Path(cb, s"$n.manifest")) ||
-        fs.exists(new Path(cb, s"$n.committed")))
-    // coverage carry: the largest batch id this fold (transitively)
-    // holds — from the folded batch-pair names, or from an earlier
-    // fold's own #maxbatch when an input is itself a compaction pair
-    val maxBatch = live.flatMap { case (n, md) =>
-      n.toLongOption ++ md.maxBatch
-    }.maxOption
-    writeAtomic(fs, new Path(cb, s"compact-$k.manifest"),
-      manifestBody(merged, live.map(_._1).toSet ++ carried, maxBatch))
-    writeAtomic(fs, new Path(cb, s"compact-$k.committed"), "")
-    live.foreach { case (n, _) =>
-      fs.delete(new Path(cb, s"$n.committed"), false)
-      fs.delete(new Path(cb, s"$n.manifest"), false)
-    }
-    live.size
+    if (inputs.size < 2) return 0
+    fold(fs, tableDir, log, "compact", inputs, None, inputs.flatMap(_._2.entries))
+    inputs.size
   }
 
   /** Rewrite the data files of every committed batch into (at most)
@@ -727,33 +773,9 @@ object IdempotentSink {
     * MANIFEST ([[OcsfTables.load]]) are safe at every point; a
     * directory-scanning reader (Athena over the prefix) may see rows
     * doubled during the publish-to-cleanup window and must not run
-    * concurrently.
-    *
-    * Mechanism — the same staged two-phase commit as a batch write,
-    * plus the `#supersedes` manifest header:
-    *  1. SETTLE: finish any interrupted predecessor — for every pair
-    *     named in a committed manifest's supersedes set that still
-    *     exists, delete its data files, then its marker, then its
-    *     manifest; sweep unmarked `compactdata-*` manifests (deleting
-    *     the files they name — never reader-visible) and orphaned
-    *     compactdata staging dirs.
-    *  2. STAGE: read the rows of all live committed pairs (via the
-    *     read contract itself) and write them partitioned to
-    *     `_staging/compactdata_<k>/c/`.
-    *  3. MANIFEST: publish `compactdata-<k>.manifest` naming the new
-    *     files WITH a supersedes line listing every input pair.
-    *  4. PROMOTE: length-verified move of each file to its final path
-    *     (fresh Spark part-file names — no collision with the old
-    *     files, which stay live for readers until step 6).
-    *  5. COMMIT: publish `compactdata-<k>.committed`. THIS is the
-    *     atomic swap: committedFiles now returns exactly the new
-    *     files, because every input pair is superseded by name.
-    *  6. CLEANUP: delete the input pairs' old data files, then their
-    *     markers, then their manifests (files-first ordering means a
-    *     crash can never strand data files that no manifest names,
-    *     and markers-before-manifests never produces the
-    *     marker-without-manifest state committedFiles rejects). A
-    *     crash anywhere re-runs as step 1.
+    * concurrently. A [[fold]] into a `compactdata-<k>` pair that
+    * restages every input row ([[rewriteReader]], [[rewriteLayout]])
+    * and carries nothing.
     *
     * `zorderCols` additionally re-lays each day partition along the
     * Morton curve of those columns ([[graft.operators.Zorder]]) —
@@ -761,25 +783,17 @@ object IdempotentSink {
     * OPTIMIZE-ZORDER maintenance op for the lake's read side.
     *
     * Returns the number of input pairs compacted (0 = nothing to do). */
-  def compactDataFiles(spark: org.apache.spark.sql.SparkSession,
-                       tableDir: Path, filesPerDay: Int = 1,
+  def compactDataFiles(spark: SparkSession, tableDir: Path,
+                       filesPerDay: Int = 1,
                        zorderCols: Seq[String] = Nil): Int = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     require(filesPerDay >= 1, "filesPerDay must be >= 1")
     val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val cb = new Path(tableDir, "_committed_batches")
-    if (!fs.exists(cb)) return 0
-    // 1. settle interrupted predecessors (protected-aware: settlePair
-    // never deletes a file the live read contract names)
-    val log = settleRewrites(fs, tableDir, scanPairs(fs, tableDir))
-
-    // 2. stage the rewrite of all live committed pairs — EXCEPT
-    // foreign-writer (w-*) pairs: their owner's replay checks the pair
-    // by name (rewriting + superseding it would duplicate rows on
-    // replay), and leaving them as inputs while reading ALL committed
-    // files would double their rows into the new files. Retire a
-    // backfill via compactCommits(foldWriters) first; its rows then
-    // live in a compact-* pair this rewrite CAN fold.
+    val log = settle(fs, tableDir, scanPairs(fs, tableDir))
+    // every live pair but foreign-writer (w-*) ones: their owner's
+    // replay checks the pair by name (rewriting + superseding it would
+    // duplicate rows on replay). Retire a backfill via
+    // compactCommits(foldWriters) first; its rows then live in a
+    // compact-* pair this rewrite CAN fold.
     val inputs = log.rewriteInputs
     // already at the target layout? (filesPerDay files per partition
     // dir) — counts files, not pairs: a control-file merge leaves one
@@ -794,117 +808,73 @@ object IdempotentSink {
     // at the target count still holds interleaved rows and must be
     // re-laid. This keeps the maintenance loop idempotent without ever
     // treating "few files" as "clustered files".
-    val layoutStr =
-      if (zorderCols.isEmpty) None
-      else Some("zorder:" + zorderCols.mkString(","))
+    val layout = layoutTag(zorderCols)
     if (inputs.isEmpty ||
         ((zorderCols.isEmpty ||
-            (inputs.size <= 1 && inputs.forall(_._2.layout == layoutStr))) &&
+            (inputs.size <= 1 && inputs.forall(_._2.layout == layout))) &&
           inputs.map(_._2.entries.size).sum <= partDirs.size * filesPerDay))
       return 0
-    // read exactly the INPUT pairs' files (not all committedFiles):
-    // live w-* pairs' rows must not be copied into the rewrite while
-    // their own pairs keep naming them
     val files = inputs.flatMap(_._2.entries.map { case (rel, _) =>
-      new Path(tableDir, finalRelPath(rel)).toString
+      new Path(tableDir, finalRelPath(rel))
     }).distinct
-    val k = log.nextK("compactdata")
-    val stagingRoot = new Path(tableDir, s"_staging/compactdata_$k")
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val inferOld = spark.conf.get(inferKey, "true")
-    try {
-      // string partition values round-trip exactly (an accountId with a
-      // leading zero must not re-land as a different directory)
-      spark.conf.set(inferKey, "false")
-      val rows = spark.read.option("basePath", tableDir.toString)
-        .parquet(files: _*)
-      rewriteLayout(rows, partDirs.size, filesPerDay, zorderCols)
-        .write.mode("overwrite")
-        .partitionBy("region", "accountId", "eventDay")
-        .parquet(new Path(stagingRoot, "c").toString)
-    } finally spark.conf.set(inferKey, inferOld)
-
-    // 3.-5. publish, promote, commit. Supersedes carries forward the
-    // inputs' own exclusions: if a prior settle deleted a superseding
-    // pair but crashed before its ghosts, the ghosts must stay dead
-    // under THIS manifest or they would resurrect naming deleted files.
-    val entries = listRelative(fs, stagingRoot)
-    // same coverage carry as compactCommits: keeps the time-travel
-    // horizon boundable when this fold's inputs are compaction pairs
-    val maxBatch = inputs.flatMap { case (n, md) =>
-      n.toLongOption ++ md.maxBatch
-    }.maxOption
-    writeAtomic(fs, new Path(cb, s"compactdata-$k.manifest"),
-      manifestBody(entries, inputs.map(_._1).toSet ++ log.ghosts, maxBatch,
-        layoutStr))
-    entries.foreach { case (rel, len) =>
-      promoteOne(fs, stagingRoot, tableDir, rel, len, "compactdata", k.toString)
-    }
-    writeAtomic(fs, new Path(cb, s"compactdata-$k.committed"), "")
-    fs.delete(stagingRoot, true)
-
-    // 6. cleanup: the live contract is now exactly the new files —
-    // settle every input pair against it (old files first, then
-    // markers, then manifests)
-    val keep = entries.map { case (rel, _) =>
-      fs.makeQualified(new Path(tableDir, finalRelPath(rel)))
-    }.toSet
-    inputs.foreach { case (n, md) => settlePair(fs, tableDir, n, Some(md), keep) }
+    val rows = rewriteReader(spark, tableDir, files)(files)
+    fold(fs, tableDir, log, "compactdata", inputs,
+      Some(rewriteLayout(rows, filesPerDay, zorderCols, partDirs.size * filesPerDay)),
+      Nil, layout)
     inputs.size
   }
 
-  /** The physical split+order of a data rewrite, shared by
-    * [[compactDataFiles]] and [[deleteWhere]]. With `zorderCols`:
+  /** The region/accountId/eventDay directory layout every write lands. */
+  private val PartitionCols = Seq("region", "accountId", "eventDay")
+
+  /** The `#layout` a rewrite with `zorderCols` produces. */
+  private def layoutTag(zorderCols: Seq[String]): Option[String] =
+    if (zorderCols.isEmpty) None else Some("zorder:" + zorderCols.mkString(","))
+
+  /** The one reader of a data rewrite's input `files`: a reader of any
+    * subset of them under one explicit schema — the data columns merged
+    * across every file's footer (a column an additive evolution
+    * appended survives whichever file Spark's own inference would have
+    * taken the schema from) and the partition columns as strings (an
+    * accountId `000011112222` re-lands in its own directory, not as
+    * `11112222`). */
+  private def rewriteReader(spark: SparkSession, tableDir: Path,
+                            files: Seq[Path]): Seq[Path] => DataFrame = {
+    val merged = spark.read.option("basePath", tableDir.toString)
+      .option("mergeSchema", "true").parquet(files.map(_.toString): _*).schema
+    val schema = StructType(merged.filterNot(f => PartitionCols.contains(f.name)) ++
+      PartitionCols.map(StructField(_, StringType)))
+    subset => spark.read.schema(schema).option("basePath", tableDir.toString)
+      .parquet(subset.map(_.toString): _*)
+  }
+
+  /** The physical split+order of a data rewrite. With `zorderCols`:
     * cluster each day's rows along the Morton curve
     * ([[graft.operators.Zorder]], C34) so per-file min-max stats
     * narrow on EVERY layout column; the file split is the TOP z bits —
-    * a z-RANGE cut via an EXPLICIT-count `repartitionByRange` (an
-    * implicit repartition would let AQE coalesce the layout away), so
-    * clustering survives across files. Without: one file per day, or a
-    * deterministic hash split into `filesPerDay`. */
-  private def rewriteLayout(rows: org.apache.spark.sql.DataFrame,
-                            numPartDirs: Int, filesPerDay: Int,
-                            zorderCols: Seq[String])
-      : org.apache.spark.sql.DataFrame = {
+    * a z-RANGE cut into `zFiles` files via an EXPLICIT-count
+    * `repartitionByRange` (an implicit repartition would let AQE
+    * coalesce the layout away), so clustering survives across files.
+    * Without: one file per day, or a deterministic hash split into
+    * `filesPerDay`, each file time-sorted. Either way the sort leads
+    * with the partition keys, which is the order the partitioned write
+    * requires, so the write keeps it instead of re-sorting. */
+  private def rewriteLayout(rows: DataFrame, filesPerDay: Int,
+                            zorderCols: Seq[String], zFiles: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    val keys = PartitionCols.map(col)
     if (zorderCols.nonEmpty) {
       val bits = math.min(16, 63 / zorderCols.size)
-      val withZ = graft.operators.Zorder
-        .withZValue(rows, zorderCols, "__z", bits)
-      val numParts = math.max(1, numPartDirs * filesPerDay)
-      withZ
-        .repartitionByRange(numParts, col("region"), col("accountId"),
-          col("eventDay"), col("__z"))
-        .sortWithinPartitions(col("region"), col("accountId"),
-          col("eventDay"), col("__z"))
+      graft.operators.Zorder.withZValue(rows, zorderCols, "__z", bits)
+        .repartitionByRange(math.max(1, zFiles), keys :+ col("__z"): _*)
+        .sortWithinPartitions(keys :+ col("__z"): _*)
         .drop("__z")
-    } else if (filesPerDay == 1)
-      rows.repartition(col("region"), col("accountId"), col("eventDay"))
-    else rows.repartition(col("region"), col("accountId"), col("eventDay"),
-      pmod(xxhash64(col("metadata.uid"), col("time")), lit(filesPerDay)))
-  }
-
-  /** Step-1 settle shared by the data-rewriting maintenance ops
-    * ([[compactDataFiles]], [[deleteWhere]], [[vacuum]]): finish any
-    * interrupted predecessor's supersedes chain, sweep unmarked
-    * `compactdata-*` manifests (protected-aware — never a file the live
-    * read contract names) and orphaned compactdata staging dirs. Takes
-    * the op's first scan and returns the log as the op goes on to see
-    * it: the same scan when the settle left the control dir untouched,
-    * else one fresh scan. */
-  private def settleRewrites(fs: FileSystem, tableDir: Path, log: LogScan): LogScan = {
-    val protectedFiles = log.files.map(fs.makeQualified).toSet
-    val unmarked = log.pairs.collect {
-      case (n, false, _) if n.startsWith("compactdata-") && !log.ghosts(n) => n
+    } else {
+      val salt =
+        if (filesPerDay == 1) Nil
+        else Seq(pmod(xxhash64(col("metadata.uid"), col("time")), lit(filesPerDay)))
+      rows.repartition(keys ++ salt: _*).sortWithinPartitions(keys :+ col("time"): _*)
     }
-    val settle = log.ghosts.toSeq ++ unmarked
-    settle.foreach(n => settlePair(fs, tableDir, n, log.manifest(n), protectedFiles))
-    val staging = new Path(tableDir, "_staging")
-    if (fs.exists(staging))
-      fs.listStatus(staging).map(_.getPath)
-        .filter(_.getName.startsWith("compactdata_"))
-        .foreach(p => fs.delete(p, true))
-    if (settle.isEmpty) log else scanPairs(fs, tableDir)
   }
 
   /** Row-level delete: permanently remove every committed row matching
@@ -916,15 +886,12 @@ object IdempotentSink {
     * table — and [[StatsIndex]], when built, pre-prunes which files
     * are even scanned for matches.
     *
-    * Same offline single-operator contract and two-phase mechanism as
-    * [[compactDataFiles]] (the pair lands in the `compactdata-*`
-    * namespace so both ops share one settle/crash-recovery path):
-    * stage the kept rows of affected files, publish ONE manifest
-    * naming staged + carried files with `#supersedes` over EVERY live
-    * pair (a partial fold would break the horizon derivation's
-    * prefix invariant and leak post-snapshot rows into old snapshots),
-    * promote, mark — the marker is the atomic swap — then clean up. A
-    * crash anywhere re-runs safely; the re-run re-scans
+    * Same offline single-operator contract as [[compactDataFiles]],
+    * and the same [[fold]] into a `compactdata-<k>` pair: it restages
+    * the kept rows of the affected files and carries the rest, and
+    * supersedes EVERY live pair (a partial fold would break the horizon
+    * derivation's prefix invariant and leak post-snapshot rows into old
+    * snapshots). A crash anywhere re-runs safely; the re-run re-scans
     * (already-deleted rows simply no longer match). Readers by
     * manifest are exact at every point; a directory scanner may see
     * kept rows doubled and deleted rows still present during the
@@ -950,19 +917,17 @@ object IdempotentSink {
     *    `compactDataFiles(zorderCols = ...)` restores clustering.
     *
     * Returns the number of rows deleted. */
-  def deleteWhere(spark: org.apache.spark.sql.SparkSession,
-                  tableDir: Path, cond: String,
+  def deleteWhere(spark: SparkSession, tableDir: Path, cond: String,
                   filesPerDay: Int = 1,
                   zorderCols: Seq[String] = Nil): Long = {
     require(filesPerDay >= 1, "filesPerDay must be >= 1")
-    import org.apache.spark.sql.functions.{coalesce, col, count, expr, input_file_name, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, count, expr, input_file_name, lit, not}
     val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val cb = new Path(tableDir, "_committed_batches")
     val log0 = scanPairs(fs, tableDir)
     require(log0.hasCommitted,
       s"$tableDir has no batch-commit log — deleteWhere needs a table " +
         "written through IdempotentSink")
-    val log = settleRewrites(fs, tableDir, log0)
+    val log = settle(fs, tableDir, log0)
     val liveWriters = log.committed.map(_._1).filter(_.startsWith("w-"))
     require(liveWriters.isEmpty,
       s"$tableDir has live foreign-writer pairs ${liveWriters.toSeq.sorted}" +
@@ -970,29 +935,22 @@ object IdempotentSink {
         " retire them first via compactCommits(foldWriters = ...)")
     val inputs = log.rewriteInputs
     if (inputs.isEmpty) return 0L
+    val entries = inputs.flatMap(_._2.entries)
+    def finalOf(rel: String): Path = new Path(tableDir, finalRelPath(rel))
 
     // which committed files hold matching rows? Stats-index pre-prune
     // (advisory) bounds the scan; the scan itself reads only the
     // predicate's columns
-    val allFinal = inputs.flatMap(_._2.entries.map { case (rel, _) =>
-      new Path(tableDir, finalRelPath(rel))
-    }).distinct
-    val candidates =
-      StatsIndex.prune(spark, fs, tableDir, allFinal, cond)
+    val candidates = StatsIndex.prune(spark, fs, tableDir,
+      entries.map(e => finalOf(e._1)).distinct, cond)
     if (candidates.isEmpty) return 0L
     val delCond = expr(cond)
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val inferOld = spark.conf.get(inferKey, "true")
-    val matches =
-      try {
-        spark.conf.set(inferKey, "false")
-        spark.read.option("basePath", tableDir.toString)
-          .parquet(candidates.map(_.toString): _*)
-          .filter(delCond)
-          .groupBy(input_file_name().as("file"))
-          .agg(count(lit(1)).as("n"))
-          .collect().map(r => normalizePath(fs, r.getString(0)) -> r.getLong(1))
-      } finally spark.conf.set(inferKey, inferOld)
+    val read = rewriteReader(spark, tableDir, candidates)
+    val matches = read(candidates)
+      .filter(delCond)
+      .groupBy(input_file_name().as("file"))
+      .agg(count(lit(1)).as("n"))
+      .collect().map(r => normalizePath(fs, r.getString(0)) -> r.getLong(1))
     val deleted = matches.map(_._2).sum
     if (deleted == 0L) return 0L
     val affectedFiles = matches.map(_._1).toSet
@@ -1007,65 +965,23 @@ object IdempotentSink {
     // erased rows) refuses to serve rather than resurrecting them.
     // Untouched files are carried BY NAME (no copy) — only files that
     // actually contain matching rows are rewritten.
-    def finalOf(rel: String): String =
-      normalizePath(fs, new Path(tableDir, finalRelPath(rel)))
-    val carried = inputs.flatMap(_._2.entries.filterNot {
-      case (rel, _) => affectedFiles.contains(finalOf(rel))
-    })
-    val rewriteFiles = inputs.flatMap(_._2.entries.collect {
-      case (rel, _) if affectedFiles.contains(finalOf(rel)) =>
-        new Path(tableDir, finalRelPath(rel)).toString
-    }).distinct
-    val k = log.nextK("compactdata")
-    val stagingRoot = new Path(tableDir, s"_staging/compactdata_$k")
-    val affectedPartDirs = rewriteFiles
-      .map(f => new Path(f).getParent.toString).toSet.size
-    try {
-      spark.conf.set(inferKey, "false")
-      val kept = spark.read.option("basePath", tableDir.toString)
-        .parquet(rewriteFiles: _*)
-        .where(not(coalesce(delCond, lit(false))))
-      // one staged file per affected input file (capped by the per-day
-      // quota): the rewrite covers only a SLICE of each day, so
-      // applying the full day quota would inflate the file count past
-      // the compaction target and force a needless follow-up rewrite
-      val numParts = math.max(1,
-        math.min(rewriteFiles.size, affectedPartDirs * filesPerDay))
-      val laid =
-        if (zorderCols.nonEmpty)
-          rewriteLayout(kept, numParts, 1, zorderCols)
-        else rewriteLayout(kept, affectedPartDirs, filesPerDay, Nil)
-          .sortWithinPartitions(col("region"), col("accountId"),
-            col("eventDay"), col("time"))
-      laid.write.mode("overwrite")
-        .partitionBy("region", "accountId", "eventDay")
-        .parquet(new Path(stagingRoot, "c").toString)
-    } finally spark.conf.set(inferKey, inferOld)
-
-    val staged = listRelative(fs, stagingRoot)
-    val maxBatch = inputs.flatMap { case (n, md) =>
-      n.toLongOption ++ md.maxBatch
-    }.maxOption
+    val (rewrite, carried) = entries.partition { case (rel, _) =>
+      affectedFiles.contains(normalizePath(fs, finalOf(rel)))
+    }
+    val rewriteFiles = rewrite.map(e => finalOf(e._1)).distinct
+    val kept = read(rewriteFiles).where(not(coalesce(delCond, lit(false))))
+    // z-ordered: one staged file per affected input file, capped by the
+    // per-day quota — the rewrite covers only a SLICE of each day, so
+    // the full day quota would inflate the file count past the
+    // compaction target and force a needless follow-up rewrite
+    val zFiles = math.min(rewriteFiles.size,
+      rewriteFiles.map(_.getParent).toSet.size * filesPerDay)
     // record the layout ONLY when the whole output pair (staged AND
     // carried files) is uniformly laid: every superseded pair must
     // already record it
-    val layoutStr =
-      if (zorderCols.isEmpty) None
-      else Some("zorder:" + zorderCols.mkString(","))
-    val recordLayout =
-      layoutStr.filter(ls => inputs.forall(_._2.layout.contains(ls)))
-    writeAtomic(fs, new Path(cb, s"compactdata-$k.manifest"),
-      manifestBody(staged ++ carried,
-        inputs.map(_._1).toSet ++ log.ghosts, maxBatch, recordLayout))
-    staged.foreach { case (rel, len) =>
-      promoteOne(fs, stagingRoot, tableDir, rel, len, "compactdata", k.toString)
-    }
-    writeAtomic(fs, new Path(cb, s"compactdata-$k.committed"), "")
-    fs.delete(stagingRoot, true)
-    val keep = (staged ++ carried).map { case (rel, _) =>
-      fs.makeQualified(new Path(tableDir, finalRelPath(rel)))
-    }.toSet
-    inputs.foreach { case (n, md) => settlePair(fs, tableDir, n, Some(md), keep) }
+    fold(fs, tableDir, log, "compactdata", inputs,
+      Some(rewriteLayout(kept, filesPerDay, zorderCols, zFiles)), carried,
+      layoutTag(zorderCols).filter(l => inputs.forall(_._2.layout.contains(l))))
     deleted
   }
 
@@ -1096,7 +1012,7 @@ object IdempotentSink {
     val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
     val cb = new Path(tableDir, "_committed_batches")
     if (!fs.exists(cb)) return (0, 0)
-    val log = settleRewrites(fs, tableDir, scanPairs(fs, tableDir))
+    val log = settle(fs, tableDir, scanPairs(fs, tableDir))
     val done = log.committed.map(_._1).toSet
     val staging = new Path(tableDir, "_staging")
     var dirs = 0

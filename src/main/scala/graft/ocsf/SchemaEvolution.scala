@@ -21,7 +21,11 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * absent from a file's footer with null, so reading pre-evolution
   * batches under the evolved schema (explicit `.schema(...)` read, or
   * `mergeSchema` — [[OcsfTables.load]]'s `mergeSchemas` flag) serves
-  * the union with nulls where history predates the column.
+  * the union with nulls where history predates the column. The lake's
+  * data rewrites ([[IdempotentSink.compactDataFiles]],
+  * [[IdempotentSink.deleteWhere]]) read their inputs under that merged
+  * schema too, so a rewritten file keeps every appended column, null
+  * on the rows that predate it.
   * [[OcsfTables.registerCatalog]] applies the same rule to the
   * metastore: an additive drift between the catalog table and the
   * frozen DDL becomes `ALTER TABLE … ADD COLUMNS`, anything else

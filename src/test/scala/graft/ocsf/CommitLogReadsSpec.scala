@@ -9,9 +9,9 @@ import graft.SparkSpec
 
 /** Every lake operation reads the commit log through ONE scan
   * ([[IdempotentSink.scanPairs]]): a read takes one LIST of
-  * `_committed_batches` and opens each manifest once, a control merge
-  * the same, and a data rewrite at most two LISTs — one before its
-  * settle of interrupted predecessors and one after it. [[FaultFs]]
+  * `_committed_batches` and opens each manifest once, and so does every
+  * maintenance op — its settle of interrupted predecessors hands the op
+  * the scan minus what it settled instead of rescanning. [[FaultFs]]
   * logs the LISTs and manifest opens; the table has three committed
   * batches, a superseded ghost and a foreign-writer pair, so every
   * view of the log (live, superseded, writer, settle inputs) is in
@@ -136,27 +136,29 @@ class CommitLogReadsSpec extends SparkSpec {
     assert(rows(base) == 5L)
   }
 
-  test("data rewrites take at most two LISTs: one before their settle, one after") {
-    def atMostTwo(op: String, r: Seq[String]): Unit =
-      assert(lists(r).size <= 2, s"$op listed the commit log ${lists(r).size}×: $r")
+  test("data rewrites and vacuum take one LIST, the ghost settle included") {
+    def once(op: String, r: Seq[String]): Unit = {
+      assert(lists(r).size == 1, s"$op listed the commit log ${lists(r).size}×: $r")
+      assert(reopened(r).isEmpty, s"$op opened manifests twice: ${reopened(r)}")
+    }
 
     val cd = copyOf(withWriter)
-    atMostTwo("compactDataFiles", readsOf(assert(IdempotentSink.compactDataFiles(
+    once("compactDataFiles", readsOf(assert(IdempotentSink.compactDataFiles(
       spark, new Path(s"$cd/dns_activity")) == 4)))
     assert(rows(cd) == 5L)
 
     // the live backfill pair refuses the erasure after the settle
     val refused = copyOf(withWriter)
-    atMostTwo("deleteWhere (refused)", readsOf(intercept[IllegalArgumentException] {
+    once("deleteWhere (refused)", readsOf(intercept[IllegalArgumentException] {
       OcsfTables.deleteWhere(spark, refused, route, "metadata.uid = 'e2'")
     }))
     val dw = copyOf(noWriter)
-    atMostTwo("deleteWhere", readsOf(assert(OcsfTables.deleteWhere(spark, dw,
+    once("deleteWhere", readsOf(assert(OcsfTables.deleteWhere(spark, dw,
       route, "metadata.uid = 'e2'") == 1L)))
     assert(rows(dw) == 3L)
 
     val vac = copyOf(withWriter)
-    atMostTwo("vacuum", readsOf(IdempotentSink.vacuum(spark,
+    once("vacuum", readsOf(IdempotentSink.vacuum(spark,
       new Path(s"$vac/dns_activity"))))
     assert(rows(vac) == 5L)
   }

@@ -246,6 +246,39 @@ class SinkCrashMatrixSpec extends SparkSpec {
     }
   }
 
+  test("a rewrite after a control fold takes a fresh pair name: reads exact at every cut point") {
+    registerScheme()
+    FaultFs.disarm()
+    val proto = Files.createTempDirectory("crashmx-reuse-proto")
+    val protoBase = "faultfs:" + proto
+    val protoTd = new Path(s"$protoBase/dns_activity")
+    def land(b: Long): Unit =
+      IdempotentSink.writeBatch(df(s"e$b" -> "2023-11-14"), protoBase,
+        route, region, acct, batchId = b)
+    // compactdata-0 folds batches 0-1; compact-0 then folds it with
+    // batch 2 and settles it, so only compact-0's header still names
+    // compactdata-0
+    (0L to 1L).foreach(land)
+    assert(IdempotentSink.compactDataFiles(spark, protoTd) == 2)
+    land(2L)
+    assert(IdempotentSink.compactCommits(fs, protoTd) == 2)
+    val before = contractUids(protoBase)
+    assert(before == Seq("e0", "e1", "e2"))
+    val (n, _) = measure {
+      assert(IdempotentSink.compactDataFiles(spark,
+        new Path(s"${copyOf(proto)}/dns_activity")) == 1)
+    }
+    (0L until n).foreach { k =>
+      val c = copyOf(proto)
+      val td = new Path(s"$c/dns_activity")
+      crashAt(k, "compactDataFiles")(IdempotentSink.compactDataFiles(spark, td))
+      assert(contractUids(c) == before, s"k=$k read inside crash window")
+      IdempotentSink.compactDataFiles(spark, td)
+      assert(contractUids(c) == before, s"k=$k read after resume")
+      assert(IdempotentSink.committedFiles(fs, td).size == 1, s"k=$k")
+    }
+  }
+
   test("vacuum: reads exact at every cut point over a crashed rewrite, abandoned staging and a torn tmp; the re-run settles") {
     registerScheme()
     FaultFs.disarm()
