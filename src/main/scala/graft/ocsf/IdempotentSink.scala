@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Exactly-once per (route, batch) parquet landing (SURVEY.md §2 A24).
   *
@@ -292,7 +291,7 @@ object IdempotentSink {
       val genDir = new Path(batchStaging, s"g$gen")
       OcsfSink.partitionedFrame(df, region, accountId, filesPerDay).write
         .mode("overwrite")
-        .partitionBy("region", "accountId", "eventDay")
+        .partitionBy(OcsfSink.PartitionCols: _*)
         .parquet(genDir.toString)
       val entries = listRelative(fs, genDir)
         .map { case (rel, len) => (s"g$gen/$rel", len) }
@@ -684,7 +683,7 @@ object IdempotentSink {
     val k = log.nextK(prefix)
     val stagingRoot = new Path(tableDir, s"_staging/${prefix}_$k")
     val staged = restaged.toSeq.flatMap { rows =>
-      rows.write.mode("overwrite").partitionBy(PartitionCols: _*)
+      rows.write.mode("overwrite").partitionBy(OcsfSink.PartitionCols: _*)
         .parquet(new Path(stagingRoot, "c").toString)
       listRelative(fs, stagingRoot)
     }
@@ -774,8 +773,10 @@ object IdempotentSink {
     * directory-scanning reader (Athena over the prefix) may see rows
     * doubled during the publish-to-cleanup window and must not run
     * concurrently. A [[fold]] into a `compactdata-<k>` pair that
-    * restages every input row ([[rewriteReader]], [[rewriteLayout]])
-    * and carries nothing.
+    * restages every input row (read through
+    * [[OcsfTables.committedReader]] with the data columns merged across
+    * every file's footer, laid by [[rewriteLayout]]) and carries
+    * nothing.
     *
     * `zorderCols` additionally re-lays each day partition along the
     * Morton curve of those columns ([[graft.operators.Zorder]]) —
@@ -817,36 +818,16 @@ object IdempotentSink {
     val files = inputs.flatMap(_._2.entries.map { case (rel, _) =>
       new Path(tableDir, finalRelPath(rel))
     }).distinct
-    val rows = rewriteReader(spark, tableDir, files)(files)
+    val rows = OcsfTables.committedReader(spark, fs, tableDir, files, mergeSchemas = true)(files)
     fold(fs, tableDir, log, "compactdata", inputs,
       Some(rewriteLayout(rows, filesPerDay, zorderCols, partDirs.size * filesPerDay)),
       Nil, layout)
     inputs.size
   }
 
-  /** The region/accountId/eventDay directory layout every write lands. */
-  private val PartitionCols = Seq("region", "accountId", "eventDay")
-
   /** The `#layout` a rewrite with `zorderCols` produces. */
   private def layoutTag(zorderCols: Seq[String]): Option[String] =
     if (zorderCols.isEmpty) None else Some("zorder:" + zorderCols.mkString(","))
-
-  /** The one reader of a data rewrite's input `files`: a reader of any
-    * subset of them under one explicit schema — the data columns merged
-    * across every file's footer (a column an additive evolution
-    * appended survives whichever file Spark's own inference would have
-    * taken the schema from) and the partition columns as strings (an
-    * accountId `000011112222` re-lands in its own directory, not as
-    * `11112222`). */
-  private def rewriteReader(spark: SparkSession, tableDir: Path,
-                            files: Seq[Path]): Seq[Path] => DataFrame = {
-    val merged = spark.read.option("basePath", tableDir.toString)
-      .option("mergeSchema", "true").parquet(files.map(_.toString): _*).schema
-    val schema = StructType(merged.filterNot(f => PartitionCols.contains(f.name)) ++
-      PartitionCols.map(StructField(_, StringType)))
-    subset => spark.read.schema(schema).option("basePath", tableDir.toString)
-      .parquet(subset.map(_.toString): _*)
-  }
 
   /** The physical split+order of a data rewrite. With `zorderCols`:
     * cluster each day's rows along the Morton curve
@@ -855,27 +836,23 @@ object IdempotentSink {
     * a z-RANGE cut into `zFiles` files via an EXPLICIT-count
     * `repartitionByRange` (an implicit repartition would let AQE
     * coalesce the layout away), so clustering survives across files.
-    * Without: one file per day, or a deterministic hash split into
-    * `filesPerDay`, each file time-sorted. Either way the sort leads
-    * with the partition keys, which is the order the partitioned write
-    * requires, so the write keeps it instead of re-sorting. */
+    * Without: the salted split of a route write
+    * ([[OcsfSink.saltedByDay]]), each file time-sorted. Either way the
+    * sort leads with the partition keys, which is the order the
+    * partitioned write requires, so the write keeps it instead of
+    * re-sorting. */
   private def rewriteLayout(rows: DataFrame, filesPerDay: Int,
-                            zorderCols: Seq[String], zFiles: Int): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val keys = PartitionCols.map(col)
-    if (zorderCols.nonEmpty) {
+                            zorderCols: Seq[String], zFiles: Int): DataFrame =
+    if (zorderCols.isEmpty) OcsfSink.saltedByDay(rows, filesPerDay)
+    else {
+      import org.apache.spark.sql.functions.col
+      val keys = OcsfSink.PartitionCols.map(col) :+ col("__z")
       val bits = math.min(16, 63 / zorderCols.size)
       graft.operators.Zorder.withZValue(rows, zorderCols, "__z", bits)
-        .repartitionByRange(math.max(1, zFiles), keys :+ col("__z"): _*)
-        .sortWithinPartitions(keys :+ col("__z"): _*)
+        .repartitionByRange(math.max(1, zFiles), keys: _*)
+        .sortWithinPartitions(keys: _*)
         .drop("__z")
-    } else {
-      val salt =
-        if (filesPerDay == 1) Nil
-        else Seq(pmod(xxhash64(col("metadata.uid"), col("time")), lit(filesPerDay)))
-      rows.repartition(keys ++ salt: _*).sortWithinPartitions(keys :+ col("time"): _*)
     }
-  }
 
   /** Row-level delete: permanently remove every committed row matching
     * SQL predicate `cond` — the erasure request (GDPR/DSAR takedown)
@@ -945,7 +922,8 @@ object IdempotentSink {
       entries.map(e => finalOf(e._1)).distinct, cond)
     if (candidates.isEmpty) return 0L
     val delCond = expr(cond)
-    val read = rewriteReader(spark, tableDir, candidates)
+    val read = OcsfTables.committedReader(spark, fs, tableDir, candidates,
+      mergeSchemas = true)
     val matches = read(candidates)
       .filter(delCond)
       .groupBy(input_file_name().as("file"))

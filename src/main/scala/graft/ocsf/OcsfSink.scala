@@ -7,6 +7,7 @@ import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Security-Lake-layout parquet sink (SURVEY.md §2 A22–A23).
   *
@@ -26,6 +27,16 @@ import org.apache.spark.sql.functions._
   * layout) to spread a single day across more writers.
   */
 object OcsfSink {
+
+  /** The Security-Lake partition layout, `region=/accountId=/eventDay=`,
+    * with the one type every write, read and DDL gives it: STRING, as
+    * the lake's Glue tables declare it. Declared, never inferred from
+    * the paths, so an accountId `000011112222` reads back as written. */
+  private[ocsf] val PartitionSchema: StructType =
+    StructType(Seq("region", "accountId", "eventDay").map(StructField(_, StringType)))
+
+  /** [[PartitionSchema]]'s column names, in directory order. */
+  private[ocsf] val PartitionCols: Seq[String] = PartitionSchema.fieldNames.toSeq
 
   /** Table (directory) name for a sink route, e.g.
     * "Operating System Patch State" → `operating_system_patch_state`. */
@@ -84,7 +95,8 @@ object OcsfSink {
     *
     * `filesPerDay` is the skew lever: how many writer tasks (and so
     * files) share one (region, account, day) partition. 0 derives it
-    * from the input size ([[autoFilesPerDay]]).
+    * from the input size ([[autoFilesPerDay]]). Above 1 it is an upper
+    * bound: AQE may coalesce the salted shuffle into fewer files.
     *
     * At `filesPerDay` 1 the frame is `coalesce(1)` then ordered by
     * (region, accountId, eventDay, time): the single writer task sees
@@ -102,27 +114,43 @@ object OcsfSink {
     * min/max stats on `time`, so any engine (this one, Athena/Trino
     * over the same prefix) skips row groups on the time-range
     * predicates that dominate security-lake queries. A local
-    * `sortWithinPartitions` would not survive the write: the planned
-    * write adds its own local sort by the partition keys, and Spark's
-    * `EliminateSorts` drops a local sort beneath another one.
+    * `sortWithinPartitions` on these keys would not survive the write:
+    * the planned write adds its own local sort by the partition keys,
+    * and Spark's `EliminateSorts` drops a local sort beneath another
+    * one (see [[saltedByDay]] for when it does not add one).
     *
-    * Above 1, the frame is repartitioned on the keys plus a
-    * `metadata.uid`/`time` salt in [0, filesPerDay). The planned
-    * write's sort groups each task's rows by day; those files are not
-    * time-sorted. */
+    * Above 1, the frame is split by [[saltedByDay]], the same split a
+    * data rewrite makes, and each of its files is time-sorted too. */
   private[ocsf] def partitionedFrame(df: DataFrame, region: String,
                                      accountId: String,
                                      filesPerDay: Int): DataFrame = {
     require(filesPerDay >= 0, "filesPerDay must be >= 0 (0 = auto)")
     val filesPerDay0 = if (filesPerDay == 0) autoFilesPerDay(df) else filesPerDay
-    val partitioned = df.withColumns(Map(
-      "region" -> lit(region),
-      "accountId" -> lit(accountId),
-      "eventDay" -> date_format(col("time"), "yyyyMMdd")))
-    val keys = Seq(col("region"), col("accountId"), col("eventDay"))
-    if (filesPerDay0 == 1) partitioned.coalesce(1).orderBy(keys :+ col("time"): _*)
-    else partitioned.repartition(keys :+
-      pmod(xxhash64(col("metadata.uid"), col("time")), lit(filesPerDay0)): _*)
+    val day = df.withColumn("eventDay", date_format(col("time"), "yyyyMMdd"))
+    val constants = Map("region" -> lit(region), "accountId" -> lit(accountId))
+    if (filesPerDay0 == 1)
+      day.withColumns(constants).coalesce(1).orderBy(PartitionCols.map(col) :+ col("time"): _*)
+    else saltedByDay(day, filesPerDay0).withColumns(constants)
+  }
+
+  /** Rows spread over up to `filesPerDay` writers per (region,
+    * accountId, eventDay): a shuffle on the partition keys `df` carries
+    * plus, above 1, a `metadata.uid`/`time` salt in [0, filesPerDay),
+    * then each writer's rows sorted by those keys and `time`, so every
+    * file it writes is time-sorted. AQE may coalesce the shuffle, so
+    * `filesPerDay` bounds the files per day from above.
+    *
+    * A route write adds its constant region/accountId only after this.
+    * The planned write drops constant keys from the order it requires
+    * but compares the frame's own order as written, so a sort naming
+    * them fails the match: the write then adds its own sort by day,
+    * and Spark drops this one beneath it. */
+  private[ocsf] def saltedByDay(df: DataFrame, filesPerDay: Int): DataFrame = {
+    val keys = PartitionCols.filter(df.columns.contains).map(col)
+    val salt =
+      if (filesPerDay == 1) Nil
+      else Seq(pmod(xxhash64(col("metadata.uid"), col("time")), lit(filesPerDay)))
+    df.repartition(keys ++ salt: _*).sortWithinPartitions(keys :+ col("time"): _*)
   }
 
   /** Route-clustered layout for the fan-out cache: repartitions the

@@ -21,17 +21,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * opens exactly the data files the committed manifests name, so it
   * sees each row exactly once on ANY store — including one whose
   * rename is a non-atomic copy+delete (S3A), where a directory scan
-  * could otherwise glimpse a mid-promote batch. Partition columns and
-  * pruning survive the explicit file list via `basePath`. A parquet
-  * directory with no commit log (written by some other tool) falls
-  * back to the directory scan. Mixing such appends and committed
-  * batches under one prefix is out of contract, and [[load]] with
-  * `verifyAppends` REJECTS it (a stray final-path file named by no
-  * manifest raises instead of being silently dropped from the read).
+  * could otherwise glimpse a mid-promote batch. A parquet directory
+  * with no commit log (written by some other tool) is read over a
+  * listing of its data files instead. Mixing such appends and
+  * committed batches under one prefix is out of contract, and [[load]]
+  * with `verifyAppends` REJECTS it (a stray final-path file named by
+  * no manifest raises instead of being silently dropped from the read).
   *
-  * Partition pruning comes free either way: `region`/`accountId`/
-  * `eventDay` are directory partitions, so `WHERE eventDay = ...`
-  * prunes files before any IO.
+  * Every read goes through [[committedReader]], which declares
+  * `region`/`accountId`/`eventDay` ([[OcsfSink.PartitionSchema]]) as
+  * STRING, as [[registerCatalog]]'s DDL does: an accountId with a
+  * leading zero reads back as written. They stay directory
+  * partitions, so `WHERE eventDay = ...` prunes files before any IO.
   */
 object OcsfTables {
 
@@ -49,17 +50,21 @@ object OcsfTables {
     * after suspecting an out-of-band append).
     *
     * The default read costs ONE footer read on the driver: the schema
-    * Spark wrote into the first committed file's footer (see
-    * [[readFiles]]). A table whose files carry different schemas, read
-    * without `mergeSchemas`, therefore reads as one file's schema, as
-    * Spark's own non-merging inference does.
+    * Spark wrote into the first committed file's footer, with the
+    * partition columns declared STRING (see [[committedReader]]). A
+    * table whose files carry different schemas, read without
+    * `mergeSchemas`, therefore reads as one file's schema, as Spark's
+    * own non-merging inference does.
     *
     * `mergeSchemas` crosses an ADDITIVE schema-evolution boundary
     * ([[SchemaEvolution]]): batches written before a column was added
     * serve null for it. It keeps Spark's schema merge, a job that reads
     * a footer per file, so at scale prefer an explicit
     * `spark.read.schema(evolvedSchema)` over the same file list — this
-    * flag is the zero-setup path for occasional readers. */
+    * flag is the zero-setup path for occasional readers.
+    *
+    * A directory with no commit log is read over its data files, and
+    * raises when it holds none. */
   def load(spark: SparkSession, baseDir: String, route: String,
            verifyAppends: Boolean = false,
            mergeSchemas: Boolean = false): DataFrame = {
@@ -67,9 +72,11 @@ object OcsfTables {
     val log = IdempotentSink.scanPairs(fs, tableDir)
     if (log.hasCommitted)
       loadCommitted(spark, fs, tableDir, log, verifyAppends, mergeSchemas)
-    else if (mergeSchemas)
-      spark.read.option("mergeSchema", "true").parquet(tableDir.toString)
-    else spark.read.parquet(tableDir.toString)
+    else {
+      val files = finalDataFiles(fs, tableDir)
+      require(files.nonEmpty, s"$tableDir has no batch-commit log and no data files")
+      committedReader(spark, fs, tableDir, files, mergeSchemas)(files)
+    }
   }
 
   private def loadCommitted(spark: SparkSession, fs: FileSystem,
@@ -101,27 +108,41 @@ object OcsfTables {
           s"named by any batch manifest and would be invisible to the " +
           s"manifest reader; first: ${strays.headOption.getOrElse("")}")
     }
-    readFiles(spark, fs, tableDir, log.files, mergeSchemas)
+    committedReader(spark, fs, tableDir, log.files, mergeSchemas)(log.files)
   }
 
-  /** The one committed file-list read. Spark's schema inference
-    * (without merging) reads ONE file's footer and takes the schema it
-    * wrote there under [[SparkSchemaKey]] — but it does so in a
-    * one-task job. This reads that key from the first listed file's
-    * footer on the driver and hands Spark the schema, so resolving a
-    * table runs no job. The schema holds data columns only, so the
-    * partition columns stay path-inferred, exactly as before. Spark
-    * infers as before when the read merges schemas (`mergeSchemas`, or
-    * `spark.sql.parquet.mergeSchema` on the session) or when the footer
-    * has no parseable key (a file not written by Spark). */
-  private def readFiles(spark: SparkSession, fs: FileSystem, tableDir: Path,
-                        files: Seq[Path],
-                        mergeSchemas: Boolean = false): DataFrame = {
-    val reader = spark.read.option("basePath", tableDir.toString)
-    (if (mergeSchemas) reader.option("mergeSchema", "true")
-     else if (spark.sessionState.conf.isParquetSchemaMergingEnabled) reader
-     else footerSchema(fs.getConf, files.head).fold(reader)(s => reader.schema(s)))
-      .parquet(files.map(_.toString): _*)
+  /** The one reader of a lake table's data files: resolves ONE schema
+    * over `files` (non-empty) and returns a reader of any subset of
+    * them under it, `basePath`-anchored at `tableDir`. Every table read,
+    * both data rewrites and the stats build open files through it.
+    *
+    * The data columns: by default the schema Spark wrote under
+    * [[SparkSchemaKey]] in the first file's footer, read on the driver
+    * — what Spark's non-merging inference takes too, but that runs a
+    * one-task job, so resolving a table this way runs none. Spark's
+    * inference resolves them instead when the read merges schemas
+    * (`mergeSchemas`, or `spark.sql.parquet.mergeSchema` on the
+    * session; a job that reads every footer) or when the footer has no
+    * parseable key (a file not written by Spark).
+    *
+    * The partition columns are never inferred from the paths, where
+    * `accountId=000011112222` would read as the integer 11112222: any
+    * inferred ones are dropped and [[OcsfSink.PartitionSchema]] is
+    * appended, all STRING. */
+  private[ocsf] def committedReader(spark: SparkSession, fs: FileSystem,
+                                    tableDir: Path, files: Seq[Path],
+                                    mergeSchemas: Boolean = false): Seq[Path] => DataFrame = {
+    val base = spark.read.option("basePath", tableDir.toString)
+    def inferred: StructType =
+      (if (mergeSchemas) base.option("mergeSchema", "true") else base)
+        .parquet(files.map(_.toString): _*).schema
+    val data =
+      if (mergeSchemas || spark.sessionState.conf.isParquetSchemaMergingEnabled) inferred
+      else footerSchema(fs.getConf, files.head).getOrElse(inferred)
+    val schema = StructType(data.filterNot(f => OcsfSink.PartitionCols.contains(f.name)) ++
+      OcsfSink.PartitionSchema)
+    subset => spark.read.schema(schema).option("basePath", tableDir.toString)
+      .parquet(subset.map(_.toString): _*)
   }
 
   /** The footer key Spark's parquet writer stores its row schema under
@@ -250,17 +271,19 @@ object OcsfTables {
     * cannot-infer-schema failure. */
   private def dfFor(spark: SparkSession, fs: FileSystem, tableDir: Path,
                     log: IdempotentSink.LogScan, files: Seq[Path]): DataFrame =
-    if (files.nonEmpty) readFiles(spark, fs, tableDir, files)
+    if (files.nonEmpty) committedReader(spark, fs, tableDir, files)(files)
     else {
       val one = log.files.take(1)
       require(one.nonEmpty,
         s"$tableDir has a batch-commit log but no committed data files")
-      readFiles(spark, fs, tableDir, one).limit(0)
+      committedReader(spark, fs, tableDir, one)(one).limit(0)
     }
 
   /** Qualified data files at FINAL paths — everything outside the
-    * underscore-hidden control/staging dirs. */
+    * underscore-hidden control/staging dirs; none when `tableDir` does
+    * not exist. */
   private def finalDataFiles(fs: FileSystem, tableDir: Path): Seq[Path] = {
+    if (!fs.exists(tableDir)) return Nil
     val it = fs.listFiles(tableDir, true)
     val out = Seq.newBuilder[Path]
     while (it.hasNext) {
@@ -274,9 +297,11 @@ object OcsfTables {
   }
 
   /** Registers every sink-route table that has data under `baseDir` as
-    * a temp view named like `ocsf_process_activity`. Routes with no
-    * events write only a _SUCCESS marker (no schema to infer) and are
-    * skipped. Returns the views registered.
+    * a temp view named like `ocsf_process_activity`, read as [[load]]
+    * reads it. A route with no data file to read is skipped: one whose
+    * committed batches name none (it has seen no events), or a
+    * directory with no commit log and no data file. Returns the views
+    * registered.
     *
     * Probing goes through the Hadoop FileSystem API so the same call
     * works against `s3a://` / `hdfs://` lakes, not just the local FS. */
@@ -288,16 +313,12 @@ object OcsfTables {
       val dir = new Path(s"$baseDir/$name")
       val fs = dir.getFileSystem(hadoopConf)
       val log = IdempotentSink.scanPairs(fs, dir)
-      if (log.hasCommitted) {
-        if (log.files.nonEmpty) {
-          loadCommitted(spark, fs, dir, log, verifyAppends)
-            .createOrReplaceTempView(s"ocsf_$name")
-          Some(s"ocsf_$name")
-        } else None
-      } else if (fs.exists(dir) && hasAnyParquet(fs, dir)) {
-        spark.read.parquet(dir.toString).createOrReplaceTempView(s"ocsf_$name")
-        Some(s"ocsf_$name")
-      } else None
+      val df =
+        if (log.hasCommitted)
+          Option.when(log.files.nonEmpty)(loadCommitted(spark, fs, dir, log, verifyAppends))
+        else Some(finalDataFiles(fs, dir)).filter(_.nonEmpty)
+          .map(files => committedReader(spark, fs, dir, files)(files))
+      df.map { d => d.createOrReplaceTempView(s"ocsf_$name"); s"ocsf_$name" }
     }
   }
 
@@ -335,7 +356,6 @@ object OcsfTables {
                       database: String = "ocsf"): Seq[String] = {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$database`")
     val ddls = SchemaDump.schemas(spark)
-    val partCols = Seq("region", "accountId", "eventDay")
     val hadoopConf = spark.sessionState.newHadoopConf()
     OcsfMappings.routes.map { route =>
       val name = OcsfSink.tableName(route)
@@ -346,19 +366,19 @@ object OcsfTables {
       loc.getFileSystem(hadoopConf).mkdirs(loc)
       spark.sql(
         s"""CREATE TABLE IF NOT EXISTS $fq (${ddls(name)},
-           |  region STRING, accountId STRING, eventDay STRING)
+           |  ${OcsfSink.PartitionSchema.toDDL})
            |USING parquet
-           |PARTITIONED BY (region, accountId, eventDay)
+           |PARTITIONED BY (${OcsfSink.PartitionCols.mkString(", ")})
            |LOCATION '$baseDir/$name'""".stripMargin)
       // additive evolution: append any columns the frozen DDL gained
       // since the table was registered; reject anything non-additive
-      val catalogData = org.apache.spark.sql.types.StructType(
-        spark.table(fq).schema.filterNot(f => partCols.contains(f.name)))
-      val expected = org.apache.spark.sql.types.StructType.fromDDL(ddls(name))
+      val catalogData = StructType(
+        spark.table(fq).schema.filterNot(f => OcsfSink.PartitionCols.contains(f.name)))
+      val expected = StructType.fromDDL(ddls(name))
       val added = SchemaEvolution.requireAdditive(catalogData, expected, fq)
       if (added.nonEmpty)
         spark.sql(s"ALTER TABLE $fq ADD COLUMNS " +
-          s"(${org.apache.spark.sql.types.StructType(added).toDDL})")
+          s"(${StructType(added).toDDL})")
       // discover partition dirs the writers added since the last call
       spark.sql(s"MSCK REPAIR TABLE $fq")
       s"$database.$name"
@@ -391,15 +411,5 @@ object OcsfTables {
         Some(OcsfSink.tableName(route) -> Compacted(data, control))
       } else None
     }.toMap
-  }
-
-  /** Recursive object listing — one LIST call family on S3, no
-    * per-directory round trips. */
-  private def hasAnyParquet(fs: FileSystem, dir: Path): Boolean = {
-    val it = fs.listFiles(dir, true)
-    var found = false
-    while (!found && it.hasNext)
-      found = it.next().getPath.getName.endsWith(".parquet")
-    found
   }
 }

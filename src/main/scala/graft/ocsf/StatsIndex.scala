@@ -40,7 +40,8 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: [[build]] is incremental — it scans only committed
   * files not yet indexed (one column-pruned distributed scan grouped
-  * by `input_file_name`) and APPENDS their rows; existing index rows
+  * by `input_file_name`, through [[OcsfTables.committedReader]], so
+  * partition columns index as STRING) and APPENDS their rows; existing index rows
   * are never rewritten, so the steady-state cost tracks the ingest
   * delta, not the table size. The committed file list is the one
   * [[IdempotentSink.committedFiles]] parses on the driver, the same
@@ -106,13 +107,11 @@ object StatsIndex {
     val rawToCanon = newFiles
       .map(p => (fs.makeQualified(p).toUri.toString, normalize(fs, p)))
       .toDF("raw_uri", "file_key")
-    // mergeSchema: the delta may straddle an additive schema-evolution
+    // mergeSchemas: the delta may straddle an additive schema-evolution
     // boundary (SchemaEvolution) — an indexed column added later must
     // read as null from pre-evolution files, not lose the whole build
     // to whichever file wins schema inference
-    spark.read.option("basePath", tableDir.toString)
-      .option("mergeSchema", "true")
-      .parquet(newFiles.map(_.toString): _*)
+    OcsfTables.committedReader(spark, fs, tableDir, newFiles, mergeSchemas = true)(newFiles)
       .groupBy(input_file_name().as("file_raw"))
       .agg(aggs.head, aggs.tail: _*)
       .join(broadcast(rawToCanon), col("file_raw") === col("raw_uri"),

@@ -11,6 +11,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.{GraftSession, SparkSpec}
 import graft.queries.OcsfLakeQueries
@@ -18,10 +19,13 @@ import graft.sources.FdrSource
 
 /** Resolving a committed lake table ([[OcsfTables.load]],
   * [[OcsfTables.registerAll]], an empty [[OcsfTables.changesSince]])
-  * takes the schema Spark wrote into the first committed file's
-  * footer, read on the driver: it runs no Spark job and serves exactly
-  * what Spark's own inference over the same files serves. A footer
-  * without Spark's schema key falls back to that inference. */
+  * takes the data columns from the schema Spark wrote into the first
+  * committed file's footer, read on the driver, and declares the
+  * partition columns STRING: it runs no Spark job and serves exactly
+  * what Spark serves over the same files with the data columns
+  * inferred and the partition columns so declared. A footer without
+  * Spark's schema key falls back to that inference. Every read path,
+  * the catalog and both rewrites agree on the partition columns. */
 class LakeResolveSpec extends SparkSpec {
 
   /** Two batches of 260 lines over every route and two eventDays. */
@@ -78,12 +82,23 @@ class LakeResolveSpec extends SparkSpec {
   private def tableDir(route: String): Path =
     new Path(s"$lake/${OcsfSink.tableName(route)}")
 
-  /** Spark's own read of `route`'s committed files, schema inferred. */
+  private val partCols = Seq("region", "accountId", "eventDay")
+
+  /** Spark's own read of `files` under `dir`: the data columns inferred,
+    * the partition columns declared STRING, as the lake's Glue DDL
+    * declares them. */
+  private def declaredRead(dir: Path, files: Seq[String]): DataFrame = {
+    val inferred = spark.read.option("basePath", dir.toString).parquet(files: _*).schema
+    val schema = partCols.foldLeft(
+      StructType(inferred.filterNot(f => partCols.contains(f.name))))(_.add(_, "string"))
+    spark.read.schema(schema).option("basePath", dir.toString).parquet(files: _*)
+  }
+
+  /** [[declaredRead]] over `route`'s committed files. */
   private def plainRead(route: String): DataFrame = {
     val dir = tableDir(route)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = IdempotentSink.committedFiles(fs, dir).map(_.toString)
-    spark.read.option("basePath", dir.toString).parquet(files: _*)
+    declaredRead(dir, IdempotentSink.committedFiles(fs, dir).map(_.toString))
   }
 
   private def rows(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq.sorted
@@ -96,8 +111,8 @@ class LakeResolveSpec extends SparkSpec {
       assert(jobs.isEmpty, s"$route: load started jobs $jobs")
       val plain = plainRead(route)
       assert(loaded.schema == plain.schema, route)
-      assert(loaded.schema("accountId").dataType.typeName == "long" &&
-        loaded.schema("eventDay").dataType.typeName == "integer", loaded.schema)
+      assert(loaded.schema("accountId").dataType.typeName == "string" &&
+        loaded.schema("eventDay").dataType.typeName == "string", loaded.schema)
       val got = rows(loaded)
       assert(got.size == 40, s"$route: ${got.size} rows")
       assert(got == rows(plain), route)
@@ -154,11 +169,55 @@ class LakeResolveSpec extends SparkSpec {
     finally w.close()
     assert(OcsfTables.footerSchema(conf, file).isEmpty)
     val loaded = OcsfTables.load(spark, base, route)
-    val plain = spark.read.option("basePath", dir.toString).parquet(file.toString)
+    val plain = declaredRead(dir, Seq(file.toString))
     assert(loaded.schema == plain.schema)
+    assert(partCols.forall(loaded.schema(_).dataType == StringType), loaded.schema)
     assert(rows(loaded) == rows(plain))
     assert(loaded.select("host", "severity").as[(String, Int)].collect().toSeq ==
       Seq(("h9", 9)))
+  }
+
+  test("every read path serves the partition columns as the strings the paths hold") {
+    import spark.implicits._
+    val route = "DNS Activity"
+    def batch(rows: (String, String, Int)*): DataFrame = rows.toDF("uid", "day", "severity")
+      .select(struct(col("uid")).as("metadata"),
+        to_timestamp(concat(col("day"), lit(" 12:00:00"))).as("time"), col("severity"))
+    val stringParts = StructType(partCols.map(StructField(_, StringType)))
+    Seq("000011112222", "123456789012").foreach { acct =>
+      val base = Files.createTempDirectory(s"resolve-parts-$acct").toString
+      Seq(batch(("e0", "2023-11-14", 1), ("e1", "2023-11-15", 2)),
+          batch(("e2", "2023-11-15", 1), ("e3", "2023-11-14", 2))).zipWithIndex
+        .foreach { case (df, b) =>
+          IdempotentSink.writeBatch(df, base, route, "us-east-1", acct, batchId = b.toLong,
+            filesPerDay = 1)
+        }
+      val want = Set(("us-east-1", acct, "20231114"), ("us-east-1", acct, "20231115"))
+      val schema = OcsfTables.load(spark, base, route).schema
+      def check(what: String, df: DataFrame, full: Boolean = true): Unit = {
+        if (full) assert(df.schema == schema, s"$acct $what: ${df.schema}")
+        val parts = df.select(partCols.map(col): _*)
+        assert(parts.schema == stringParts, s"$acct $what: ${parts.schema}")
+        val got = parts.distinct().collect().map(r => (r.getString(0), r.getString(1),
+          r.getString(2))).toSet
+        assert(got == want, s"$acct $what: $got")
+      }
+      check("load", OcsfTables.load(spark, base, route))
+      assert(OcsfTables.registerAll(spark, base) == Seq("ocsf_dns_activity"))
+      check("registerAll", spark.table("ocsf_dns_activity"))
+      check("loadWhere", OcsfTables.loadWhere(spark, base, route, "severity >= 1"))
+      check("loadAsOf", OcsfTables.loadAsOf(spark, base, route, 1L))
+      check("changesSince", OcsfTables.changesSince(spark, base, route, 0L))
+      val db = s"resolve_parts_$acct"
+      OcsfTables.registerCatalog(spark, base, db)
+      // the catalog serves the frozen DDL's columns, not this batch's
+      check("registerCatalog", spark.sql(s"SELECT * FROM $db.dns_activity"), full = false)
+      val dir = new Path(s"$base/${OcsfSink.tableName(route)}")
+      assert(IdempotentSink.compactDataFiles(spark, dir) == 2)
+      check("compactDataFiles", OcsfTables.load(spark, base, route))
+      assert(OcsfTables.deleteWhere(spark, base, route, "severity = 2") == 2L)
+      check("deleteWhere", OcsfTables.load(spark, base, route))
+    }
   }
 
   test("a warm round of the lake query shapes compiles nothing") {

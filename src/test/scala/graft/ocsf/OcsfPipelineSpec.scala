@@ -483,6 +483,35 @@ class OcsfPipelineSpec extends SparkSpec {
     }
   }
 
+  test("A22: a salted route write (filesPerDay = 3) lands only time-sorted files") {
+    val landing = Files.createTempDirectory("ocsf-salted")
+    writeGz(landing, "part-0001.gz", multiDayLines)
+    val cached = OcsfSink.cacheForFanOut(OcsfSink.routeClustered(
+      FdrSource.load(spark, landing.toString).drop("raw")))
+    val outDir = Files.createTempDirectory("ocsf-salted-out").toString
+    // AQE would coalesce this tiny shuffle back to one file per day
+    val coalesceConf = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesceConf, "false")
+    try {
+      cached.count()
+      OcsfSink.fanOutIdempotent(cached, outDir, "us-east-1", "123456789012",
+        runId = 1L, filesPerDay = 3)
+    } finally { cached.unpersist(); spark.conf.set(coalesceConf, "true") }
+    val conf = spark.sessionState.newHadoopConf()
+    val files = OcsfMappings.routes.flatMap { route =>
+      val table = new org.apache.hadoop.fs.Path(s"$outDir/${OcsfSink.tableName(route)}")
+      IdempotentSink.committedFiles(table.getFileSystem(conf), table)
+    }
+    val perFile = files.map { file =>
+      val times = spark.read.parquet(file.toString).select("time").collect()
+        .map(_.getTimestamp(0).getTime).toSeq
+      times.size -> times.zip(times.drop(1)).count { case (a, b) => a > b }
+    }
+    assert(perFile.map(_._1).sum == 260)
+    assert(files.size > 3 * OcsfMappings.routes.size, files.size)
+    assert(perFile.map(_._2).sum == 0, s"time descents per file: ${perFile.map(_._2)}")
+  }
+
   test("A24: stream and batch fan-outs land the same rows in the same layout") {
     val landing = Files.createTempDirectory("ocsf-parity")
     writeGz(landing, "part-0001.gz", multiDayLines)
