@@ -6,7 +6,7 @@ import graft.ocsf.{IdempotentSink, OcsfTables}
 
 /** Measures what the lake's read-side maintenance actually buys: the
   * same narrow predicate over the same committed table, scanned three
-  * ways — (1) full manifest read + filter, (2) stats-index pruned read
+  * ways — (1) full manifest read + filter, (2) stats-pruned read
   * over the raw (unclustered) layout, (3) pruned read after a z-order
   * re-layout. Reports wall seconds and the FILE COUNTS each plan
   * opens, which is the number that survives the 1000-executor
@@ -67,15 +67,14 @@ object LakeBench {
 
     // stats over the RAW layout (each file spans all days x all
     // severities — stats exist but exclude nothing)
-    OcsfTables.buildStats(spark, base, route, Seq("time", "severity"))
     val rawKept = OcsfTables.prunedFiles(spark, fs, tableDir, cond).size
     val (nRaw, tRaw) = timed(prunedCount())
 
-    // z-order re-layout + fresh stats: min-max boxes tighten on both
-    // dimensions and the same predicate now skips most files
+    // z-order re-layout, whose manifest records the rewritten files'
+    // stats: min-max boxes tighten on both dimensions and the same
+    // predicate now skips most files
     IdempotentSink.compactDataFiles(spark, tableDir,
       filesPerDay = filesPerDay, zorderCols = Seq("time", "severity"))
-    OcsfTables.buildStats(spark, base, route, Seq("time", "severity"))
     val committed1 = IdempotentSink.committedFiles(fs, tableDir).size
     val zKept = OcsfTables.prunedFiles(spark, fs, tableDir, cond).size
     val (nZ, tZ) = timed(prunedCount())
@@ -85,8 +84,8 @@ object LakeBench {
 
     // the full lake MAINTENANCE CYCLE in the loop (r18): GDPR-erase a
     // row slice (A27 deleteWhere — rewrite-not-tombstone), fold the
-    // accumulated commit pairs (compactCommits), rebuild the stats
-    // index, and re-measure the SAME pruned read — the composition a
+    // accumulated commit pairs (compactCommits), and re-measure the
+    // SAME pruned read — the composition a
     // month of production (ingest + erasure requests + nightly
     // maintenance) actually runs, verified to keep the read fast and
     // exact rather than assumed to
@@ -98,8 +97,6 @@ object LakeBench {
         filesPerDay = filesPerDay, zorderCols = Seq("time", "severity")))
     val (folded, tCompact) = timed(
       IdempotentSink.compactCommits(fs, tableDir))
-    val (_, tStats) = timed(
-      OcsfTables.buildStats(spark, base, route, Seq("time", "severity")))
     val committed2 = IdempotentSink.committedFiles(fs, tableDir).size
     val mKept = OcsfTables.prunedFiles(spark, fs, tableDir, cond).size
     val (nM, tM) = timed(prunedCount())
@@ -108,8 +105,8 @@ object LakeBench {
 
     // ---- CYCLE 2 (r19 verdict item 8): the lifecycle CHAINED — a
     // second month of ingest lands ON TOP of the first cycle's
-    // artifacts (compaction horizon, z-order layout headers, stats
-    // staleness), then the same maintenance runs again. Every step
+    // artifacts (compaction horizon, z-order layout headers), then the
+    // same maintenance runs again. Every step
     // keeps exact row accounting, and time travel is probed on both
     // sides of the horizon: asOf AT the cycle-1 horizon serves the
     // exact post-erasure cycle-1 state; asOf BELOW it throws the
@@ -174,14 +171,12 @@ object LakeBench {
     require(asOfAfterRefused,
       s"asOf($horizon1) served a pre-erasure snapshot after the erase")
     // now the maintenance slot: z-order the union layout (cycle-1
-    // rewrites + cycle-2 appends), fold the control pairs, refresh
-    // stats — this is where batch granularity is traded away
+    // rewrites + cycle-2 appends) and fold the control pairs — this is
+    // where batch granularity is traded away
     val (_, tZ2) = timed(IdempotentSink.compactDataFiles(spark, tableDir,
       filesPerDay = filesPerDay, zorderCols = Seq("time", "severity")))
     val (folded2, tCompact2) = timed(
       IdempotentSink.compactCommits(fs, tableDir))
-    val (_, tStats2) = timed(
-      OcsfTables.buildStats(spark, base, route, Seq("time", "severity")))
     // the horizon MOVED: the new fold owns everything through the last
     // cycle-2 batch — asOf at the new horizon serves the live state,
     // asOf below it now throws where it served cycle-1 state above
@@ -207,7 +202,6 @@ object LakeBench {
       s""","files_zorder_kept":$zKept""" +
       s""","erased_rows":$nErased,"erase_sec":${f"$tErase%.3f"}""" +
       s""","compacted_pairs":$folded,"compact_sec":${f"$tCompact%.3f"}""" +
-      s""","stats_rebuild_sec":${f"$tStats%.3f"}""" +
       s""","post_maintenance_files_total":$committed2""" +
       s""","post_maintenance_files_kept":$mKept""" +
       s""","post_maintenance_pruned_sec":${f"$tM%.3f"}""" +
@@ -215,7 +209,6 @@ object LakeBench {
       s""","c2_zorder_sec":${f"$tZ2%.3f"}""" +
       s""","c2_erased_rows":$nErased2,"c2_erase_sec":${f"$tErase2%.3f"}""" +
       s""","c2_compacted_pairs":$folded2,"c2_compact_sec":${f"$tCompact2%.3f"}""" +
-      s""","c2_stats_rebuild_sec":${f"$tStats2%.3f"}""" +
       s""","c2_final_rows":$total3,"c2_files_total":$committed3""" +
       s""","c2_files_kept":$c2Kept,"c2_pruned_sec":${f"$tC2%.3f"}""" +
       s""","asof_horizon1_rows":$asOfBefore""" +

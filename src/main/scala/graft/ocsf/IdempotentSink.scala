@@ -24,6 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     with a timed-out attempt it superseded — the two bulk writes
   *     cannot interleave on the same files.
   *  2. MANIFEST — atomically publish the staged file list WITH SIZES
+  *     and each file's stats, read from its footer ([[StatsIndex]]: they
+  *     commit with the file, so a reader's prune is never stale)
   *     (paths carry the `g<gen>/` component; a count header plus a
   *     `#end` trailer make the format self-terminating, so a torn
   *     publish on a non-atomic store is detectable at ANY cut point,
@@ -295,13 +297,14 @@ object IdempotentSink {
         .parquet(genDir.toString)
       val entries = listRelative(fs, genDir)
         .map { case (rel, len) => (s"g$gen/$rel", len) }
+      val stats = stagedStats(fs, batchStaging, entries)
       lockFor(key).synchronized {
         checkCurrent(key, gen, route, pair)
         if (currentManifest().isEmpty) {
           // a torn manifest from a crashed non-atomic publish blocks
           // the write-once rename: discard it before republishing
           if (fs.exists(manifest)) fs.delete(manifest, false)
-          writeAtomic(fs, manifest, manifestBody(entries))
+          writeAtomic(fs, manifest, manifestBody(entries, stats))
         }
       }
     }
@@ -420,6 +423,11 @@ object IdempotentSink {
 
     /** The committed read contract ([[committedFiles]]). */
     lazy val files: Seq[Path] = finalPaths(live.map(_._2))
+
+    /** The stats the live manifests record, by final path; a file whose
+      * entry records none is absent. */
+    lazy val stats: Map[Path, StatsIndex.FileStats] =
+      live.flatMap(_._2.stats).map { case (rel, s) => new Path(tableDir, rel) -> s }.toMap
 
     /** Every final path any parseable manifest names, committed or
       * still in flight — the superset [[OcsfTables.load]]'s stray guard
@@ -657,8 +665,10 @@ object IdempotentSink {
     * `<prefix>-<k>` naming `restaged`'s rows, written under
     * `_staging/<prefix>_<k>/`, plus the `carried` files, which stay
     * where they are. In order, each step atomic or idempotent:
-    *  1. STAGE `restaged` partitioned by region/accountId/eventDay.
-    *  2. MANIFEST: publish the staged and carried files with
+    *  1. STAGE `restaged` partitioned by region/accountId/eventDay, and
+    *     read each staged file's footer stats.
+    *  2. MANIFEST: publish the staged files with their stats and the
+    *     carried files with the stats their input entries recorded,
     *     `#supersedes` = the inputs (the settled view holds no ghost to
     *     carry), `#maxbatch` = the largest batch id they (transitively)
     *     cover — what keeps the time-travel horizon boundable across
@@ -690,10 +700,11 @@ object IdempotentSink {
     // re-anchor under a dummy attempt component so finalRelPath holds
     val entries = staged ++ carried
       .map { case (rel, len) => (s"c/${finalRelPath(rel)}", len) }.distinct
+    val stats = inputs.flatMap(_._2.stats).toMap ++ stagedStats(fs, stagingRoot, staged)
     val maxBatch = inputs.flatMap { case (n, md) => n.toLongOption ++ md.maxBatch }
       .maxOption
     writeAtomic(fs, new Path(cb, s"$prefix-$k.manifest"),
-      manifestBody(entries, inputs.map(_._1).toSet, maxBatch, layout))
+      manifestBody(entries, stats, inputs.map(_._1).toSet, maxBatch, layout))
     staged.foreach { case (rel, len) =>
       promoteOne(fs, stagingRoot, tableDir, rel, len, prefix, k.toString)
     }
@@ -776,7 +787,9 @@ object IdempotentSink {
     * restages every input row (read through
     * [[OcsfTables.committedReader]] with the data columns merged across
     * every file's footer, laid by [[rewriteLayout]]) and carries
-    * nothing.
+    * nothing. The rewritten files' manifest entries record their stats,
+    * so a lake whose manifests predate per-file stats prunes again
+    * after one rewrite.
     *
     * `zorderCols` additionally re-lays each day partition along the
     * Morton curve of those columns ([[graft.operators.Zorder]]) —
@@ -860,8 +873,10 @@ object IdempotentSink {
     * ONLY the files that contain matching rows; every untouched file
     * is CARRIED by name into the superseding manifest (no copy), so
     * the IO cost scales with the data actually touched, not the
-    * table — and [[StatsIndex]], when built, pre-prunes which files
-    * are even scanned for matches.
+    * table — and the stats the manifests record ([[StatsIndex]])
+    * pre-prune which files are even scanned for matches, on the
+    * driver. Rewritten files get fresh stats and carried files keep
+    * theirs, so the output prunes at once.
     *
     * Same offline single-operator contract as [[compactDataFiles]],
     * and the same [[fold]] into a `compactdata-<k>` pair: it restages
@@ -915,11 +930,11 @@ object IdempotentSink {
     val entries = inputs.flatMap(_._2.entries)
     def finalOf(rel: String): Path = new Path(tableDir, finalRelPath(rel))
 
-    // which committed files hold matching rows? Stats-index pre-prune
-    // (advisory) bounds the scan; the scan itself reads only the
-    // predicate's columns
-    val candidates = StatsIndex.prune(spark, fs, tableDir,
-      entries.map(e => finalOf(e._1)).distinct, cond)
+    // which committed files hold matching rows? The manifest stats'
+    // pre-prune (advisory) bounds the scan; the scan itself reads only
+    // the predicate's columns
+    val candidates = StatsIndex.prune(spark, entries.map(e => finalOf(e._1)).distinct,
+      log.stats, cond)
     if (candidates.isEmpty) return 0L
     val delCond = expr(cond)
     val read = OcsfTables.committedReader(spark, fs, tableDir, candidates,
@@ -1017,15 +1032,23 @@ object IdempotentSink {
 
   /** Canonical per-file key: `input_file_name()` URIs (empty
     * authority) and manifest-derived Paths (null authority) must
-    * compare equal — rebuilt from URI components, never `toString`.
-    * Shared with [[StatsIndex]] so the two sides of the file-key
-    * contract can never drift. */
+    * compare equal — rebuilt from URI components, never `toString`. */
   private[ocsf] def normalizePath(fs: FileSystem, p: Path): String = {
     val u = fs.makeQualified(p).toUri
     s"${u.getScheme}://${Option(u.getAuthority).getOrElse("")}${u.getPath}"
   }
   private[ocsf] def normalizePath(fs: FileSystem, s: String): String =
     normalizePath(fs, new Path(new java.net.URI(s)))
+
+  /** The footer stats of `staged` files (paths relative to `root`,
+    * under one attempt component), keyed by final relative path: one
+    * driver open per file. A file whose footer cannot be read gets no
+    * stats; its entry is kept by every prune. */
+  private def stagedStats(fs: FileSystem, root: Path,
+                          staged: Seq[(String, Long)]): Map[String, StatsIndex.FileStats] =
+    staged.flatMap { case (rel, len) =>
+      StatsIndex.footerStats(fs.getConf, new Path(root, rel), len).map(finalRelPath(rel) -> _)
+    }.toMap
 
   /** Data files under `root` with their lengths, as `/`-relative
     * paths, skipping Spark's `_SUCCESS`/hidden bookkeeping files. */
@@ -1049,8 +1072,9 @@ object IdempotentSink {
   private val LayoutHeader = "#layout "
 
   /** Parsed manifest: the staged data files (with lengths), the
-    * control-pair base names this manifest REPLACES, and — on
-    * compaction manifests — the largest batch id the pair covers. A
+    * control-pair base names this manifest REPLACES, on compaction
+    * manifests the largest batch id the pair covers, and the per-file
+    * stats its entries record, keyed by final relative path. A
     * committed manifest whose name appears in another committed
     * manifest's `supersedes` set is dead — its entries are excluded
     * from the read contract, which is what makes a data-rewriting
@@ -1064,20 +1088,23 @@ object IdempotentSink {
   private[ocsf] final case class ManifestData(entries: Seq[(String, Long)],
                                               supersedes: Set[String],
                                               maxBatch: Option[Long] = None,
-                                              layout: Option[String] = None)
+                                              layout: Option[String] = None,
+                                              stats: Map[String, StatsIndex.FileStats] = Map.empty)
 
   /** Manifest body: a count header, an optional `#supersedes` line, an
     * optional `#maxbatch` line, an optional `#layout` line (the
     * physical clustering a data rewrite produced, e.g.
     * `zorder:time,severity` — what lets the maintenance loop no-op
     * ONLY when the requested layout is already in place), one
-    * `path<TAB>length` line per staged data file, and a `#end`
-    * trailer. The trailer makes the format SELF-TERMINATING: a prefix
-    * cut anywhere — including inside the last entry's length digits,
-    * where the count still matches and every line still parses — is
-    * detectably torn, because `#end` is the final bytes written and
-    * survives no truncation. */
+    * `path<TAB>length` line per staged data file, followed by
+    * `<TAB>stats` ([[StatsIndex.encode]]) when `stats` holds the file's
+    * final relative path, and a `#end` trailer. The trailer makes the
+    * format SELF-TERMINATING: a prefix cut anywhere — including inside
+    * the last entry's length digits or stats, where the count still
+    * matches and every line still parses — is detectably torn, because
+    * `#end` is the final bytes written and survives no truncation. */
   private def manifestBody(entries: Seq[(String, Long)],
+                           stats: Map[String, StatsIndex.FileStats],
                            supersedes: Set[String] = Set.empty,
                            maxBatch: Option[Long] = None,
                            layout: Option[String] = None): String = {
@@ -1088,7 +1115,10 @@ object IdempotentSink {
     val layoutLine = layout.map(l => s"$LayoutHeader$l").toSeq
     (s"$ManifestHeader${entries.size}" +:
       (supersLine ++ maxLine ++ layoutLine ++
-        entries.map { case (rel, len) => s"$rel\t$len" }) :+
+        entries.map { case (rel, len) =>
+          (Seq(rel, len.toString) ++ stats.get(finalRelPath(rel)).map(StatsIndex.encode))
+            .mkString("\t")
+        }) :+
       ManifestTrailer).mkString("\n")
   }
 
@@ -1119,15 +1149,21 @@ object IdempotentSink {
             (Some(l.stripPrefix(LayoutHeader)), rest)
           case rest => (None, rest)
         }
+        // an entry's stats field is optional: manifests written before
+        // per-file stats have none, and an unreadable one only costs
+        // pruning for that file
         val parsed = body.map { l =>
           l.split('\t') match {
-            case Array(rel, len) => len.toLongOption.map(rel -> _)
+            case Array(rel, len) => len.toLongOption.map(n => (rel, n, None))
+            case Array(rel, len, st) => len.toLongOption.map(n => (rel, n, StatsIndex.decode(st)))
             case _ => None
           }
         }
-        if (expected.contains(parsed.size) && parsed.forall(_.isDefined))
-          Some(ManifestData(parsed.flatten, supersedes, maxBatch, layout))
-        else None
+        if (expected.contains(parsed.size) && parsed.forall(_.isDefined)) {
+          val es = parsed.flatten
+          Some(ManifestData(es.map(e => (e._1, e._2)), supersedes, maxBatch, layout,
+            es.collect { case (rel, _, Some(st)) => finalRelPath(rel) -> st }.toMap))
+        } else None
       case _ => None // torn, zero-byte, or unknown format: never trusted
     }
   }

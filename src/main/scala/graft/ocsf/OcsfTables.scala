@@ -113,8 +113,8 @@ object OcsfTables {
 
   /** The one reader of a lake table's data files: resolves ONE schema
     * over `files` (non-empty) and returns a reader of any subset of
-    * them under it, `basePath`-anchored at `tableDir`. Every table read,
-    * both data rewrites and the stats build open files through it.
+    * them under it, `basePath`-anchored at `tableDir`. Every table read
+    * and both data rewrites open files through it.
     *
     * The data columns: by default the schema Spark wrote under
     * [[SparkSchemaKey]] in the first file's footer, read on the driver
@@ -158,11 +158,15 @@ object OcsfTables {
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
         HadoopReadOptions.builder(conf, file)
           .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-      val json =
-        try reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-        finally reader.close()
-      Option(json).map(DataType.fromJson).collect { case s: StructType => s }
+      try sparkSchema(reader.getFileMetaData.getKeyValueMetaData)
+      finally reader.close()
     } catch { case NonFatal(_) => None }
+
+  /** The Spark schema under [[SparkSchemaKey]] in a footer's key-value
+    * metadata; None when absent or unparseable. */
+  private[ocsf] def sparkSchema(kv: java.util.Map[String, String]): Option[StructType] =
+    try Option(kv.get(SparkSchemaKey)).map(DataType.fromJson).collect { case s: StructType => s }
+    catch { case NonFatal(_) => None }
 
   /** Time travel: the table AS OF `asOfBatch` — exactly the rows the
     * batches with id <= `asOfBatch` committed. Backed by the commit
@@ -194,30 +198,32 @@ object OcsfTables {
     dfFor(spark, fs, tableDir, log, log.filesSince(afterBatch))
   }
 
-  /** Build or refresh the file-skipping stats index for `route` on
-    * `cols` (see [[StatsIndex]]). Incremental: returns the number of
-    * newly indexed files. Run after ingest/compaction, like
-    * [[compactAll]]. */
+  /** A no-op kept for callers of the retired stats index: every
+    * committed file's stats now ride in the manifest entry that names
+    * it, written with the file ([[StatsIndex]]), so there is nothing to
+    * build and [[loadWhere]] prunes a batch the moment it commits.
+    * Returns 0, the number of files it scanned. A lake whose manifests
+    * predate the stats gets them back from
+    * [[IdempotentSink.compactDataFiles]]. */
   def buildStats(spark: SparkSession, baseDir: String, route: String,
-                 cols: Seq[String]): Int = {
-    val (_, tableDir) = tableFs(spark, baseDir, route)
-    StatsIndex.build(spark, tableDir, cols)
-  }
+                 cols: Seq[String]): Int = 0
 
   /** [[load]] restricted to SQL predicate `cond`, opening only the
     * committed files whose stats say the predicate could match
-    * ([[StatsIndex]] file skipping; files the index doesn't cover are
-    * always read). The exact predicate is re-applied to the surviving
-    * rows, so the result equals `load(...).filter(cond)` whether or
-    * not an index exists — the index only changes how many files are
-    * opened ([[prunedFiles]]). The mixed-table stray guard is [[load]]'s
+    * ([[StatsIndex]] file skipping over the stats the commit log's
+    * manifests carry; a file without stats for a column is always
+    * read). The exact predicate is re-applied to the surviving rows, so
+    * the result equals `load(...).filter(cond)`: the stats only change
+    * how many files are opened ([[prunedFiles]]). The prune runs on the
+    * driver over the one log scan the read makes anyway, and starts no
+    * Spark job. The mixed-table stray guard is [[load]]'s
     * misconfiguration detector, not repeated here (it would relist
     * every data file and defeat the point of skipping). */
   def loadWhere(spark: SparkSession, baseDir: String, route: String,
                 cond: String): DataFrame = {
     val (fs, tableDir, log) = committedLog(spark, baseDir, route, "stats-pruned")
     dfFor(spark, fs, tableDir, log,
-      StatsIndex.prune(spark, fs, tableDir, log.files, cond)).filter(cond)
+      StatsIndex.prune(spark, log.files, log.stats, cond)).filter(cond)
   }
 
   /** Row-level erasure for `route`: permanently delete every row
@@ -233,15 +239,15 @@ object OcsfTables {
   }
 
   /** The file list [[loadWhere]] would open — exposed for maintenance
-    * jobs and tests to observe skipping. The committed list is parsed
-    * on the driver ([[IdempotentSink.committedFiles]], the same read
-    * [[load]] makes) and pruned by [[StatsIndex.prune]]: one join of
-    * that list against the stats index, which collects only the
-    * survivors. */
+    * jobs and tests to observe skipping. One [[IdempotentSink.scanPairs]]
+    * (the same read [[load]] makes) names the committed files and their
+    * recorded stats, and [[StatsIndex.prune]] drops the files those
+    * stats exclude, on the driver, with no Spark job. */
   def prunedFiles(spark: SparkSession, fs: FileSystem, tableDir: Path,
-                  cond: String): Seq[Path] =
-    StatsIndex.prune(spark, fs, tableDir,
-      IdempotentSink.committedFiles(fs, tableDir), cond)
+                  cond: String): Seq[Path] = {
+    val log = IdempotentSink.scanPairs(fs, tableDir)
+    StatsIndex.prune(spark, log.files, log.stats, cond)
+  }
 
   private def tableFs(spark: SparkSession, baseDir: String,
                       route: String): (FileSystem, Path) = {

@@ -1,188 +1,255 @@
 package graft.ocsf
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import java.net.{URLDecoder, URLEncoder}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.time.{Instant, LocalDate}
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, expr, input_file_name, lit, max, min, sum}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types._
 
-/** File-skipping stats index for commit-log tables: per-data-file
-  * min/max/null-count on caller-chosen columns, consulted at read time
-  * to open only the files a predicate could match. The engine-side
+/** Per-file stats in the commit log, and file skipping over them: a
+  * committed file's rows plus min/max/null count of its top-level
+  * integral, date, timestamp, boolean and string columns ride in the
+  * manifest entry that names the file, and a read with a predicate
+  * opens only the files those stats say could match. The engine-side
   * complement of the Z-order layout ([[graft.operators.Zorder]] makes
-  * per-file stats NARROW; this index makes the reader USE them before
-  * any file is opened). The reference leaves pruning to Athena's
-  * partition projection over `region/accountId/eventDay`
-  * (/root/reference/README.md:44-48), which only cuts on partition
-  * keys — this index prunes on DATA columns (event time, severity, id
-  * ranges) the way Delta/Iceberg file statistics do, which is what
-  * turns a 100 TB table scan with a narrow time filter into a few-file
-  * read: the planner never opens (or even HEADs) a file the predicate
-  * cannot match.
+  * per-file stats NARROW; this makes the reader USE them before any
+  * file is opened). The reference leaves pruning to Athena's partition
+  * projection over `region/accountId/eventDay` (the reference README's
+  * Athena section), which only cuts on partition keys; this prunes on
+  * DATA columns (event time, severity, id ranges) the way Delta Lake's
+  * log does (Armbrust et al., VLDB 2020: the commit that adds a file
+  * records its stats).
+  *
+  * A writer reads each file it staged once, on the driver
+  * ([[footerStats]]: the parquet footer only, no data page), and
+  * publishes the stats inside the manifest, so they commit atomically
+  * with the file and are never stale. A reader already holds them: the
+  * [[IdempotentSink.LogScan]] every read parses carries them, and
+  * [[prune]] evaluates the relaxed predicate over them on the driver
+  * without a Spark job.
   *
   * Predicates arrive as ANSI SQL strings (the engine's native query
   * surface) and are parsed with Spark's own parser, so the pruning
   * derivation sees exactly the tree the filter will execute.
   *
-  * Correctness is never at stake — pruning is strictly advisory:
-  *   - a file with no stats row is always KEPT (new batches since the
-  *     last [[build]], torn index part-files skipped via
-  *     `ignoreCorruptFiles`, or no index at all → full file list);
-  *   - a stats row whose file is no longer committed (compacted away)
-  *     matches nothing — stale rows self-clean at read time and cost
-  *     only index bytes until the next rebuild;
+  * Correctness is never at stake; pruning is strictly advisory:
+  *   - a file whose entry records no stats for a column (a manifest
+  *     written before stats existed, an INT96 timestamp, a string
+  *     bound over [[MaxStringStat]] characters, a float or double
+  *     column) is KEPT by every condition on that column;
   *   - the derived pruning condition is a RELAXATION of the caller's
   *     predicate (interval arithmetic over min/max; any subtree it
   *     cannot reason about contributes "keep"), and
   *     [[OcsfTables.loadWhere]] re-applies the exact predicate to the
   *     surviving rows anyway.
   *
-  * Scale shape: [[build]] is incremental — it scans only committed
-  * files not yet indexed (one column-pruned distributed scan grouped
-  * by `input_file_name`, through [[OcsfTables.committedReader]], so
-  * partition columns index as STRING) and APPENDS their rows; existing index rows
-  * are never rewritten, so the steady-state cost tracks the ingest
-  * delta, not the table size. The committed file list is the one
-  * [[IdempotentSink.committedFiles]] parses on the driver, the same
-  * list every committed read opens; the index itself is a parquet
-  * relation, read and joined against that list distributed: the
-  * not-yet-indexed delta is a left-anti join (only the DELTA's names
-  * come back), and [[prune]] is a join that collects only the
-  * SURVIVORS, so the index rows never reach the driver. The index
-  * schema comes from one part-file's footer read on the driver, so
-  * opening it runs no inference job. The swap-free append design
-  * means a crash anywhere leaves at worst a torn part-file, which
-  * readers skip: an index can lose acceleration, never rows.
-  */
+  * Float and double columns get no stats: parquet's min/max skip NaN,
+  * while Spark orders NaN above every number, so `x > 1e9` matches a
+  * NaN row a max-based prune would have dropped. The partition columns
+  * prune from each file's path (min = max = the directory value). */
 object StatsIndex {
 
-  private[ocsf] def indexDir(tableDir: Path): Path =
-    new Path(tableDir, "_stats/index")
+  /** One column of one file: min/max in the external [[Row]] type of
+    * `dataType` (both None when the column holds only nulls) and the
+    * null count. */
+  private[ocsf] final case class ColStats(dataType: DataType, min: Option[Any],
+                                          max: Option[Any], nulls: Long)
 
-  /** Reserved index column names; stats columns are `min_<c>`,
-    * `max_<c>`, `nulls_<c>`. */
-  private val Reserved = Set("file", "cnt")
+  /** One file's recorded stats: its rows and its stats columns. */
+  private[ocsf] final case class FileStats(rows: Long, cols: Map[String, ColStats])
 
-  /** Build or incrementally refresh the index for `cols` (top-level
-    * data or partition columns of the table). If the existing index
-    * covers a DIFFERENT column set it is dropped and rebuilt — stats
-    * rows are only comparable under one schema. Returns the number of
-    * files newly scanned (0 = index already current). */
-  def build(spark: SparkSession, tableDir: Path, cols: Seq[String]): Int = {
-    require(cols.nonEmpty, "need at least one column to index")
-    require(cols.forall(c => !Reserved(c)), s"column names $Reserved are reserved")
-    require(cols.forall(c => !c.contains(".")),
-      "stats columns must be top-level (nested fields not supported)")
-    val fs = tableDir.getFileSystem(spark.sessionState.newHadoopConf())
-    val committed = IdempotentSink.committedFiles(fs, tableDir)
-    if (committed.isEmpty) return 0
-    val idxDir = indexDir(tableDir)
-    import spark.implicits._
-    // not-yet-indexed delta as a DISTRIBUTED anti-join: only the delta's
-    // names come back to the driver, never the full indexed-file list
-    val newFiles: Seq[Path] = indexDf(spark, fs, tableDir) match {
-      case Some(df) if indexedCols(df).toSet == cols.toSet =>
-        val cdf = committed.map(p => normalize(fs, p)).toDF("c_file")
-        val newKeys = cdf.join(df.select(col("file")),
-            cdf("c_file") === col("file"), "left_anti")
-          .as[String].collect().toSet
-        committed.filter(p => newKeys(normalize(fs, p)))
-      case Some(_) => // column set changed: rebuild from scratch
-        fs.delete(idxDir, true)
-        committed
-      case None => committed
-    }
-    if (newFiles.isEmpty) return 0
-    val aggs = count(lit(1)).as("cnt") +: cols.flatMap { c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c"),
-        sum(col(c).isNull.cast("long")).as(s"nulls_$c"))
-    }
-    // store the CANONICAL file key (normalizePath form), attached via a
-    // broadcast map from the predicted `input_file_name()` rendering
-    // (qualified-path URI) — so prune's join needs no per-row driver
-    // normalization. A raw URI the prediction missed falls back to
-    // itself, which only costs acceleration (the file reads as
-    // unindexed), never rows.
-    val rawToCanon = newFiles
-      .map(p => (fs.makeQualified(p).toUri.toString, normalize(fs, p)))
-      .toDF("raw_uri", "file_key")
-    // mergeSchemas: the delta may straddle an additive schema-evolution
-    // boundary (SchemaEvolution) — an indexed column added later must
-    // read as null from pre-evolution files, not lose the whole build
-    // to whichever file wins schema inference
-    OcsfTables.committedReader(spark, fs, tableDir, newFiles, mergeSchemas = true)(newFiles)
-      .groupBy(input_file_name().as("file_raw"))
-      .agg(aggs.head, aggs.tail: _*)
-      .join(broadcast(rawToCanon), col("file_raw") === col("raw_uri"),
-        "left_outer")
-      .withColumn("file", coalesce(col("file_key"), col("file_raw")))
-      .drop("file_raw", "raw_uri", "file_key")
-      .write.mode("append").parquet(idxDir.toString)
-    newFiles.size
-  }
+  /** A string bound longer than this many characters drops the
+    * column's stats for the file: manifests stay small, and a free-text
+    * column prunes nothing anyway. */
+  private val MaxStringStat = 64
 
-  /** The committed files a read with SQL predicate `cond` must open:
-    * every committed file EXCEPT those whose stats prove no row can
-    * match. Files without a stats row are kept, and so is everything
-    * when there is no index or nothing in `cond` is prunable. A file
-    * survives the join when it has NO stats row or ANY of its rows
-    * passes the relaxed predicate; only the survivors are collected. */
-  def prune(spark: SparkSession, fs: FileSystem, tableDir: Path,
-            committed: Seq[Path], cond: String): Seq[Path] = {
-    import spark.implicits._
-    val joinOn = indexDf(spark, fs, tableDir).flatMap { idx =>
-      val statTypes: Map[String, DataType] =
-        idx.schema.fields.collect {
-          case f if f.name.startsWith("min_") =>
-            f.name.stripPrefix("min_") -> f.dataType
-        }.toMap
-      val parsed = spark.sessionState.sqlParser.parseExpression(cond)
-      pruningFor(parsed, statTypes).map(idx -> _)
-    }
-    joinOn match {
-      case None => committed
-      case Some((idx, pruning)) =>
-        val cdf = committed.map(p => normalize(fs, p)).toDF("c_file")
-        val survivors = cdf.join(idx, cdf("c_file") === idx("file"), "left_outer")
-          .filter(idx("file").isNull || pruning)
-          .select("c_file").distinct()
-          .as[String].collect().toSet
-        committed.filter(p => survivors(normalize(fs, p)))
-    }
-  }
+  /** The column types with stats, by their manifest name. */
+  private val Types: Map[String, DataType] = Map("byte" -> ByteType,
+    "short" -> ShortType, "int" -> IntegerType, "long" -> LongType,
+    "date" -> DateType, "timestamp" -> TimestampType,
+    "boolean" -> BooleanType, "string" -> StringType)
+  private val TypeNames: Map[DataType, String] = Types.map(_.swap)
 
-  /** The index relation, or None when absent. Torn part-files from a
-    * crashed append are skipped, not fatal — their files simply read
-    * as unindexed. Every part-file has the schema of one [[build]]
-    * (a column-set change rebuilds from scratch), so the schema comes
-    * from one part-file's footer read on the driver instead of Spark's
-    * inference job; a torn or unreadable first part-file falls back to
-    * inference. */
-  private def indexDf(spark: SparkSession, fs: FileSystem,
-                      tableDir: Path): Option[DataFrame] = {
-    val d = indexDir(tableDir)
-    if (!fs.exists(d)) None
+  /** The stats of the parquet file `file` of length `len`, from its
+    * footer, read on the driver with one open; None when the footer
+    * cannot be read or carries no Spark schema. A column is left out
+    * when any row group lacks its min/max while holding non-null
+    * values, which covers INT96 timestamps: parquet keeps their null
+    * count but no bounds. */
+  private[ocsf] def footerStats(conf: Configuration, file: Path, len: Long): Option[FileStats] =
+    try {
+      val status = new FileStatus(len, false, 1, 0L, 0L, file)
+      // read options over `conf`: the default ones build a fresh Hadoop
+      // Configuration per file, ~10 ms apiece
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf),
+        HadoopReadOptions.builder(conf, file).build())
+      try {
+        val footer = reader.getFooter
+        OcsfTables.sparkSchema(footer.getFileMetaData.getKeyValueMetaData).map { schema =>
+          val blocks = footer.getBlocks.asScala.toSeq
+          val chunks = blocks.flatMap(_.getColumns.asScala)
+            .filter(_.getPath.size == 1).groupBy(_.getPath.toArray.head)
+          FileStats(blocks.map(_.getRowCount).sum, schema.fields.toSeq.flatMap { f =>
+            val cs = chunks.getOrElse(f.name, Nil)
+            Option.when(TypeNames.contains(f.dataType) && cs.size == blocks.size)(
+              cs.map(c => (c.getPrimitiveType, c.getStatistics, c.getValueCount)))
+              .flatMap(colStats(f.dataType, _)).map(f.name -> _)
+          }.toMap)
+        }
+      } finally reader.close()
+    } catch { case NonFatal(_) => None }
+
+  /** One column's stats over its row groups' (type, stats, values). */
+  private def colStats(t: DataType,
+                       groups: Seq[(PrimitiveType, Statistics[_], Long)]): Option[ColStats] =
+    if (groups.isEmpty) Some(ColStats(t, None, None, 0L))
+    else if (groups.exists { case (_, s, n) =>
+        s == null || !s.isNumNullsSet || (!s.hasNonNullValue && s.getNumNulls != n) })
+      None
     else {
-      val reader = spark.read.option("ignoreCorruptFiles", "true")
-      val part = fs.listStatus(d).iterator.map(_.getPath)
-        .find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      val df = part.flatMap(OcsfTables.footerSchema(fs.getConf, _))
-        .fold(reader)(s => reader.schema(s)).parquet(d.toString)
-      if (df.columns.contains("file")) Some(df) else None
+      val merged: Statistics[_] = Statistics.createStats(groups.head._1)
+      groups.foreach(g => merged.mergeStatistics(g._2))
+      if (!merged.hasNonNullValue) Some(ColStats(t, None, None, merged.getNumNulls))
+      else for {
+        min <- value(t, groups.head._1, merged.genericGetMin)
+        max <- value(t, groups.head._1, merged.genericGetMax)
+      } yield ColStats(t, Some(min), Some(max), merged.getNumNulls)
+    }
+
+  /** A parquet statistic as the external value of Spark type `t`. */
+  private def value(t: DataType, p: PrimitiveType, v: Any): Option[Any] = (t, v) match {
+    case (ByteType, i: Integer) => Some(i.toByte)
+    case (ShortType, i: Integer) => Some(i.toShort)
+    case (IntegerType, i: Integer) => Some(i.intValue)
+    case (LongType, l: java.lang.Long) => Some(l.longValue)
+    case (DateType, i: Integer) => Some(LocalDate.ofEpochDay(i.toLong))
+    case (TimestampType, l: java.lang.Long) => p.getLogicalTypeAnnotation match {
+      case ts: TimestampLogicalTypeAnnotation if ts.getUnit == TimeUnit.MICROS =>
+        Some(DateTimeUtils.microsToInstant(l))
+      case ts: TimestampLogicalTypeAnnotation if ts.getUnit == TimeUnit.MILLIS =>
+        Some(Instant.ofEpochMilli(l))
+      case _ => None
+    }
+    case (BooleanType, b: java.lang.Boolean) => Some(b.booleanValue)
+    case (StringType, b: Binary) =>
+      Some(b.toStringUsingUTF8).filter(_.length <= MaxStringStat)
+    case _ => None
+  }
+
+  /** A file's stats as one manifest field: `rows`, then per column
+    * `;name:type:nulls`, plus `:min:max` unless the column is all null.
+    * Names and string values are URL-encoded, so the field holds no
+    * tab, newline, `;` or `:`. */
+  private[ocsf] def encode(s: FileStats): String =
+    (s.rows.toString +: s.cols.toSeq.sortBy(_._1).map { case (n, c) =>
+      (Seq(enc(n), TypeNames(c.dataType), c.nulls.toString) ++
+        c.min.zip(c.max).toSeq.flatMap { case (lo, hi) =>
+          Seq(show(c.dataType, lo), show(c.dataType, hi))
+        }).mkString(":")
+    }).mkString(";")
+
+  /** [[encode]]'s inverse; None for a field it cannot read. A column of
+    * a type this version does not know is dropped (its files are kept
+    * by any condition on it). */
+  private[ocsf] def decode(field: String): Option[FileStats] =
+    try {
+      val parts = field.split(";", -1)
+      Some(FileStats(parts.head.toLong, parts.tail.toSeq.flatMap { p =>
+        val f = p.split(":", -1)
+        Types.get(f(1)).map { t =>
+          val bound = Option.when(f.length == 5)((parse(t, f(3)), parse(t, f(4))))
+          URLDecoder.decode(f(0), UTF_8) ->
+            ColStats(t, bound.map(_._1), bound.map(_._2), f(2).toLong)
+        }
+      }.toMap))
+    } catch { case NonFatal(_) => None }
+
+  private def enc(s: String): String = URLEncoder.encode(s, UTF_8)
+
+  private def show(t: DataType, v: Any): String = (t, v) match {
+    case (DateType, d: LocalDate) => d.toEpochDay.toString
+    case (TimestampType, i: Instant) => DateTimeUtils.instantToMicros(i).toString
+    case (StringType, s: String) => enc(s)
+    case _ => v.toString
+  }
+
+  private def parse(t: DataType, s: String): Any = t match {
+    case ByteType => s.toByte
+    case ShortType => s.toShort
+    case IntegerType => s.toInt
+    case LongType => s.toLong
+    case DateType => LocalDate.ofEpochDay(s.toLong)
+    case TimestampType => DateTimeUtils.microsToInstant(s.toLong)
+    case BooleanType => s.toBoolean
+    case _ => URLDecoder.decode(s, UTF_8)
+  }
+
+  /** The files of `files` a read with SQL predicate `cond` must open:
+    * every file EXCEPT those whose stats prove no row can match. `stats`
+    * holds the recorded stats by file (a file without any is kept by
+    * every data-column condition); the partition columns are read from
+    * each file's path. The relaxed condition ([[pruningFor]]) runs over
+    * a local relation of one row per file, which Spark's optimizer
+    * evaluates while planning it: no Spark job starts. */
+  def prune(spark: SparkSession, files: Seq[Path], stats: Map[Path, FileStats],
+            cond: String): Seq[Path] = {
+    val recorded = files.map(stats.get)
+    // a column prunes only when every file that records it agrees on its type
+    val types = recorded.flatten.flatMap(_.cols.map { case (c, s) => c -> s.dataType })
+      .distinct.groupBy(_._1).collect { case (c, Seq((_, t))) => c -> t } ++
+      OcsfSink.PartitionCols.map(_ -> (StringType: DataType))
+    pruningFor(spark.sessionState.sqlParser.parseExpression(cond), types) match {
+      case None => files
+      case Some(pruning) =>
+        val cols = types.toSeq.sortBy(_._1)
+        val schema = StructType(StructField("i", IntegerType) +: cols.flatMap {
+          case (c, t) => Seq(StructField(s"known_$c", BooleanType),
+            StructField(s"min_$c", t), StructField(s"max_$c", t),
+            StructField(s"nulls_$c", LongType))
+        })
+        val rows = files.zip(recorded).zipWithIndex.map { case ((f, rec), i) =>
+          val parts = partitionValues(f)
+          Row.fromSeq(i +: cols.flatMap { case (c, t) =>
+            parts.get(c).map(v => ColStats(t, v, v, if (v.isEmpty) 1L else 0L))
+              .orElse(rec.flatMap(_.cols.get(c)).filter(_.dataType == t)) match {
+              case Some(s) => Seq(true, s.min.orNull, s.max.orNull, s.nulls)
+              case None => Seq(false, null, null, null)
+            }
+          })
+        }
+        val kept = spark.createDataFrame(rows.asJava, schema).where(pruning)
+          .select("i").collect().map(_.getInt(0)).toSet
+        files.zipWithIndex.collect { case (f, i) if kept(i) => f }
     }
   }
 
-  private def indexedCols(idx: DataFrame): Seq[String] =
-    idx.columns.toSeq.collect {
-      case c if c.startsWith("min_") => c.stripPrefix("min_")
-    }
-
-  /** One canonical string per physical file — delegated to
-    * [[IdempotentSink.normalizePath]] so the `input_file_name()`-vs-
-    * manifest-Path key rule lives in exactly one place. */
-  private def normalize(fs: FileSystem, p: Path): String =
-    IdempotentSink.normalizePath(fs, p)
+  /** The `region`/`accountId`/`eventDay` directory values above `file`
+    * (None for Hive's null partition). */
+  private def partitionValues(file: Path): Map[String, Option[String]] =
+    Iterator.iterate(file.getParent)(_.getParent).takeWhile(_ != null)
+      .map(_.getName.split("=", 2)).takeWhile(_.length == 2)
+      .collect { case Array(k, v) if OcsfSink.PartitionCols.contains(k) =>
+        val value = ExternalCatalogUtils.unescapePathName(v)
+        k -> Option.when(value != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)(value)
+      }.toMap
 
   // ---- predicate → file-level pruning condition -------------------
 
@@ -207,19 +274,44 @@ object StatsIndex {
     * to a numeric literal makes Spark cast the COLUMN, and a file's
     * string-ordered min/max says nothing about its numeric range —
     * pruning there would silently drop matching rows, so such nodes
-    * contribute "keep" instead. */
+    * contribute "keep" instead.
+    *
+    * Every comparison is guarded by `known_<c>`: a file that records no
+    * stats for the column passes it. */
   private[ocsf] def pruningFor(e: Expression,
-                               stats: Map[String, DataType]): Option[Column] = {
-    def c(ex: Expression): Column = expr(ex.sql)
-    def minC(n: String) = col(s"min_$n")
-    def maxC(n: String) = col(s"max_$n")
-    def attrAny(ex: Expression): Option[String] = ex match {
+                               stats: Map[String, DataType]): Option[Column] =
+    e match {
+      case And(l, r) => (pruningFor(l, stats), pruningFor(r, stats)) match {
+        case (Some(a), Some(b)) => Some(a && b)
+        case (a, b) => a.orElse(b)
+      }
+      case Or(l, r) =>
+        for { a <- pruningFor(l, stats); b <- pruningFor(r, stats) }
+          yield a || b
+      case _ => leaf(e, stats).map { c =>
+        // a leaf bounds exactly one column, its only attribute
+        val n = e.collectFirst(Function.unlift(statName(_, stats))).get
+        !col(s"known_$n") || c
+      }
+    }
+
+  /** The stats column `ex` names, if it is one. */
+  private def statName(ex: Expression, stats: Map[String, DataType]): Option[String] =
+    ex match {
       case a: UnresolvedAttribute
         if a.nameParts.size == 1 && stats.contains(a.nameParts.head) =>
         Some(a.nameParts.head)
       case a: AttributeReference if stats.contains(a.name) => Some(a.name)
       case _ => None
     }
+
+  /** The relaxed condition of one comparison over one stats column;
+    * None when `e` is not a prunable comparison. */
+  private def leaf(e: Expression, stats: Map[String, DataType]): Option[Column] = {
+    def c(ex: Expression): Column = expr(ex.sql)
+    def minC(n: String) = col(s"min_$n")
+    def maxC(n: String) = col(s"max_$n")
+    def attrAny(ex: Expression): Option[String] = statName(ex, stats)
     def orderCompatible(statT: DataType, litT: DataType): Boolean =
       statT == litT || ((statT, litT) match {
         case (_: NumericType, _: NumericType) => true
@@ -242,13 +334,6 @@ object StatsIndex {
     }
     def isStringStat(n: String): Boolean = stats(n).isInstanceOf[StringType]
     e match {
-      case And(l, r) => (pruningFor(l, stats), pruningFor(r, stats)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (a, b) => a.orElse(b)
-      }
-      case Or(l, r) =>
-        for { a <- pruningFor(l, stats); b <- pruningFor(r, stats) }
-          yield a || b
       // a > v ⇒ the file's max must exceed v (plus flipped forms)
       case GreaterThan(a, v) if attr(a, v).isDefined =>
         Some(maxC(attr(a, v).get) > c(v))

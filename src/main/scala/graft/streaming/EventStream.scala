@@ -148,13 +148,9 @@ object EventStream {
     * defers cleanup, so it must never fail the batch — it is logged
     * and retried at the next interval.
     *
-    * `statsCols` non-empty additionally refreshes each route's
-    * file-skipping stats index ([[graft.ocsf.StatsIndex]]) on the same
-    * maintenance cadence — incremental, so each refresh scans only the
-    * files landed since the last one, and the ingest path keeps
-    * [[graft.ocsf.OcsfTables.loadWhere]] pruning current without an
-    * external job. Same failure contract as compaction: the index is
-    * advisory, so a failed refresh is logged, never a batch failure.
+    * Every batch's files land with their stats in its manifest
+    * ([[graft.ocsf.StatsIndex]]), so [[graft.ocsf.OcsfTables.loadWhere]]
+    * prunes a batch as soon as it commits, with no refresh to schedule.
     *
     * `filesPerDay` is the writer-parallelism lever (writer tasks per
     * (route, day)) of every route's write in the fan-out. The
@@ -178,7 +174,6 @@ object EventStream {
             trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
             batchTimeout: Duration = 10.minutes,
             compactEvery: Int = 100,
-            statsCols: Seq[String] = Nil,
             discovery: Discovery = Listing,
             filesPerDay: Int = 0): StreamingQuery = {
     import graft.ocsf.OcsfSink
@@ -239,15 +234,6 @@ object EventStream {
                 System.err.println(
                   s"[graft] compactCommits($route) failed at batch $batchId: ${e.getMessage}")
               }
-              if (statsCols.nonEmpty)
-                // incremental: scans only files landed since the last
-                // refresh; advisory index — a failure costs pruning,
-                // never rows, so it must never fail the batch either
-                try { graft.ocsf.StatsIndex.build(spark, table, statsCols); () }
-                catch { case e: Exception =>
-                  System.err.println(
-                    s"[graft] statsIndex($route) failed at batch $batchId: ${e.getMessage}")
-                }
             }
           }
           ()

@@ -104,13 +104,20 @@ class DeleteWhereSpec extends SparkSpec {
       == pairsBefore)
   }
 
-  test("stats-index pre-prune composes: delete stays exact with an index built") {
+  test("manifest-stats pre-prune composes: delete stays exact and its output prunes at once") {
     val base = mkBase()
     writeBatches(base, 3)
-    assert(OcsfTables.buildStats(spark, base, route, Seq("severity")) == 3)
     val all = uids(base)
     assert(OcsfTables.deleteWhere(spark, base, route, "severity = 205") == 1L)
     assert(uids(base) == all.filterNot(_ == "u2-5"))
+    // the restaged file records fresh stats, the carried ones keep theirs
+    val (fs, tableDir) = fsOf(base)
+    Seq("severity > 250" -> "u2-", "severity < 50" -> "u0-").foreach { case (c, batch) =>
+      val kept = OcsfTables.prunedFiles(spark, fs, tableDir, c)
+      assert(kept.size == 1, s"$c kept $kept")
+      assert(spark.read.parquet(kept.map(_.toString): _*).select("metadata.uid")
+        .collect().forall(_.getString(0).startsWith(batch)), c)
+    }
   }
 
   test("crash mid-promote: erased rows stay until commit, replay lands exactly-once") {

@@ -25,7 +25,10 @@ import org.apache.hadoop.util.Progressable
   * reader racing the crash is a separate, already-specced concern),
   * but the commit-log reads — each LIST of a `_committed_batches` dir
   * and each open of a `*.manifest` — are logged for
-  * [[CommitLogReadsSpec]].
+  * [[CommitLogReadsSpec]], and every call, metadata reads (`exists`,
+  * `getFileStatus`, `listStatus`, `open`), `setPermission` and the
+  * one-argument `mkdirs` beside the counted mutations, for
+  * [[CommitCallsSpec]].
   *
   * The counter is JVM-global on purpose: in local mode the driver and
   * every executor thread share it, so a budget of k crashes the
@@ -39,6 +42,7 @@ class FaultFs extends RawLocalFileSystem {
   // which rejects any scheme but file: — return eager statuses instead
   // (the NonAtomicRenameFs workaround)
   override def listStatus(f: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    FaultFs.call("listStatus", f)
     if (f.getName == "_committed_batches") FaultFs.read("list", f)
     super.listStatus(f).map { s =>
       new org.apache.hadoop.fs.FileStatus(s.getLen, s.isDirectory,
@@ -49,8 +53,34 @@ class FaultFs extends RawLocalFileSystem {
   }
 
   override def open(f: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    FaultFs.call("open", f)
     if (f.getName.endsWith(".manifest")) FaultFs.read("open", f)
     super.open(f, bufferSize)
+  }
+
+  // one logged call each: `exists` probes through the parent's
+  // getFileStatus, not this class's, so it is not counted twice
+  override def exists(f: Path): Boolean = {
+    FaultFs.call("exists", f)
+    try { super.getFileStatus(f); true }
+    catch { case _: java.io.FileNotFoundException => false }
+  }
+
+  override def getFileStatus(f: Path): org.apache.hadoop.fs.FileStatus = {
+    FaultFs.call("getFileStatus", f)
+    super.getFileStatus(f)
+  }
+
+  // logged, not ticked: the crash matrix's cut points stay the
+  // mutations above (a local-filesystem permission call forks a chmod)
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    FaultFs.call("setPermission", p)
+    super.setPermission(p, permission)
+  }
+
+  override def mkdirs(f: Path): Boolean = {
+    FaultFs.call("mkdirs", f)
+    super.mkdirs(f)
   }
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
@@ -109,11 +139,16 @@ object FaultFs {
     java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
   private val readLog =
     java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+  private val callLog =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
 
   private[ocsf] def read(op: String, p: Path): Unit = { readLog.add(s"$op $p"); () }
 
+  private[ocsf] def call(op: String, p: Path): Unit = { callLog.add(s"$op $p"); () }
+
   private[ocsf] def tick(op: String, p: Path): Unit = {
     val n = opCount.incrementAndGet()
+    call(op, p)
     log.add(s"$op $p")
     if (n > budget)
       throw new InjectedCrash(
@@ -122,12 +157,12 @@ object FaultFs {
 
   /** Allow exactly `allowedOps` mutations, then fail every further one. */
   def arm(allowedOps: Long): Unit = {
-    opCount.set(0L); log.clear(); readLog.clear(); budget = allowedOps
+    opCount.set(0L); log.clear(); readLog.clear(); callLog.clear(); budget = allowedOps
   }
 
   /** Count without failing (for measuring an operation's op total). */
   def disarm(): Unit = {
-    budget = Long.MaxValue; opCount.set(0L); log.clear(); readLog.clear()
+    budget = Long.MaxValue; opCount.set(0L); log.clear(); readLog.clear(); callLog.clear()
   }
 
   def ops: Long = opCount.get()
@@ -145,6 +180,14 @@ object FaultFs {
   def reads: Seq[String] = {
     import scala.jdk.CollectionConverters._
     readLog.synchronized(readLog.asScala.toList)
+  }
+
+  /** Every call since the last arm/disarm, in order, as `<op> <path>`:
+    * the mutations of [[trace]] plus each `exists`, `getFileStatus`,
+    * `listStatus` and `open`. */
+  def calls: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    callLog.synchronized(callLog.asScala.toList)
   }
 
   /** True if any cause in the chain is an injected crash. Spark wraps

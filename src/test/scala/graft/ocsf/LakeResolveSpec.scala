@@ -2,13 +2,9 @@ package graft.ocsf
 
 import java.io.{BufferedWriter, FileOutputStream, OutputStreamWriter}
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.zip.GZIPOutputStream
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -53,30 +49,6 @@ class LakeResolveSpec extends SparkSpec {
       } finally { cached.unpersist(); () }
     }
     out
-  }
-
-  /** Ids of the Spark jobs `body` started. A sentinel job run after it
-    * flushes the listener bus: its start arrives after every earlier
-    * job's. */
-  private def jobsIn(body: => Unit): Seq[Int] = {
-    val sc = spark.sparkContext
-    val ids = new ConcurrentLinkedQueue[Integer]()
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.spec.sentinel") != null))
-          sentinel.countDown()
-        else ids.add(e.jobId)
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("graft.spec.sentinel", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.spec.sentinel", null)
-      assert(sentinel.await(60, TimeUnit.SECONDS), "listener bus never delivered the sentinel")
-      ids.asScala.map(_.intValue).toSeq
-    } finally sc.removeSparkListener(listener)
   }
 
   private def tableDir(route: String): Path =

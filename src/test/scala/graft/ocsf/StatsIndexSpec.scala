@@ -5,14 +5,16 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.SparkSpec
 
 /** File-skipping contract of [[StatsIndex]] / [[OcsfTables.loadWhere]]:
   * pruning must never change results (rows equal the full-scan filter
-  * under every predicate shape, indexed or not), must actually skip
-  * files whose stats exclude the predicate, and must degrade to
-  * keep-everything for unindexed files (new batches, post-compaction
-  * rewrites) and opaque predicates. */
+  * under every predicate shape, with or without stats), must actually
+  * skip files whose stats exclude the predicate from the moment they
+  * commit (batches, compactions, erasures), must run no Spark job, and
+  * must degrade to keep-everything for files without stats (manifests
+  * written before stats existed) and opaque predicates. */
 class StatsIndexSpec extends SparkSpec {
 
   private val region = "us-east-1"
@@ -58,16 +60,30 @@ class StatsIndexSpec extends SparkSpec {
     OcsfTables.prunedFiles(spark, fs, tableDir, cond).size
   }
 
-  test("incremental build; range/IN/LIKE/OR predicates skip files, rows exact") {
+  /** Rewrites every manifest of `base`'s table without its entries'
+    * stats field: the log a lake written before per-file stats holds. */
+  private def stripStats(base: String): Unit = {
+    val cb = new Path(s"$base/dns_activity/_committed_batches")
+    val fs = cb.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(cb).map(_.getPath).filter(_.getName.endsWith(".manifest")).foreach { m =>
+      val in = fs.open(m)
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+      finally in.close()
+      val os = fs.create(m, true)
+      try os.write(lines.map(_.split('\t').take(2).mkString("\t")).mkString("\n")
+        .getBytes("UTF-8"))
+      finally os.close()
+    }
+  }
+
+  test("commit-time stats; range/IN/LIKE/OR predicates skip files, rows exact") {
     val base = mkBase()
     writeBatches(base, 3)
     val (fs, tableDir) = fsOf(base)
     val total = IdempotentSink.committedFiles(fs, tableDir).size
     assert(total == 3)
     assert(OcsfTables.buildStats(spark, base, route,
-      Seq("severity", "host")) == 3)
-    assert(OcsfTables.buildStats(spark, base, route,
-      Seq("severity", "host")) == 0, "second build must be a no-op")
+      Seq("severity", "host")) == 0, "buildStats is a no-op")
 
     // range: only batch 2's file can hold severity > 250
     assert(keptCount(base, "severity > 250") == 1)
@@ -96,7 +112,6 @@ class StatsIndexSpec extends SparkSpec {
   test("opaque predicates and opaque OR sides keep everything; AND keeps its prunable side") {
     val base = mkBase()
     writeBatches(base, 3)
-    assert(OcsfTables.buildStats(spark, base, route, Seq("severity")) == 3)
     // whole predicate opaque → no pruning, still correct
     assert(keptCount(base, "pmod(severity, 7) = 3") == 3)
     assertExact(base, "pmod(severity, 7) = 3")
@@ -106,42 +121,86 @@ class StatsIndexSpec extends SparkSpec {
     // AND with one opaque side prunes on the understood side
     assert(keptCount(base, "severity > 250 AND pmod(severity, 7) = 3") == 1)
     assertExact(base, "severity > 250 AND pmod(severity, 7) = 3")
-    // unindexed column (host has no stats under this build) → opaque
-    assert(keptCount(base, "host LIKE 'h1%'") == 3)
-    assertExact(base, "host LIKE 'h1%'")
+    // a column without stats (nested: only top-level columns get them) → opaque
+    assert(keptCount(base, "metadata.uid LIKE 'u1%'") == 3)
+    assertExact(base, "metadata.uid LIKE 'u1%'")
   }
 
-  test("unindexed new batches are always read; compaction rewrites read as unindexed until rebuilt") {
+  test("a batch committed after maintenance prunes at once; so do compaction and erasure output") {
     val base = mkBase()
     writeBatches(base, 2)
-    assert(OcsfTables.buildStats(spark, base, route, Seq("severity")) == 2)
-    // a batch landing AFTER the build has no stats row — must be kept
+    val (fs, tableDir) = fsOf(base)
+    // the last maintenance: batches 0 and 1 fold into one file
+    assert(IdempotentSink.compactDataFiles(spark, tableDir) == 2)
+    // a batch landing AFTER it carries its stats from its own commit
     IdempotentSink.writeBatch(batchDf(9), base, route, region, acct,
       batchId = 9L, filesPerDay = 1)
+    assert(IdempotentSink.committedFiles(fs, tableDir).size == 2)
     assert(keptCount(base, "severity > 800") == 1, "only the new file matches")
-    assert(keptCount(base, "severity < 50") == 2,
-      "batch 0 by stats, batch 9 as unindexed")
+    assert(keptCount(base, "severity < 50") == 1, "the new file is pruned at once")
     assertExact(base, "severity > 800")
-    // incremental refresh indexes exactly the delta
-    assert(OcsfTables.buildStats(spark, base, route, Seq("severity")) == 1)
-    assert(keptCount(base, "severity < 50") == 1)
-    // compaction replaces every file; stale stats rows must not hide
-    // the rewritten (unindexed) files. Z-ordering the rewrite on
-    // severity re-clusters the ranges the hash split would interleave,
-    // so a rebuilt index can prune again — the layout op and the stats
-    // index composing is the point of both.
-    val (fs, tableDir) = fsOf(base)
+    assertExact(base, "severity < 50")
+    // a data rewrite's files carry fresh stats: z-ordering on severity
+    // re-clusters the ranges the hash split would interleave, so the
+    // rewritten files prune at once — the layout op and the stats
+    // composing is the point of both
     assert(IdempotentSink.compactDataFiles(spark, tableDir,
       filesPerDay = 2, zorderCols = Seq("severity")) > 0)
     val total = IdempotentSink.committedFiles(fs, tableDir).size
     assert(total > 1, "compaction must keep multiple files for this test")
-    assert(keptCount(base, "severity > 800") == total,
-      "rewritten files are unindexed — all kept")
+    assert(keptCount(base, "severity > 800") < total, "rewritten files prune at once")
     assertExact(base, "severity > 800")
-    val rescanned = OcsfTables.buildStats(spark, base, route, Seq("severity"))
-    assert(rescanned == total)
-    assert(keptCount(base, "severity > 800") < total, "pruning works again")
+    // an erasure restages the affected file with fresh stats and
+    // carries the rest with theirs
+    assert(OcsfTables.deleteWhere(spark, base, route, "severity = 905") == 1L)
+    val erased = IdempotentSink.committedFiles(fs, tableDir).size
+    assert(keptCount(base, "severity > 800") < erased, "erasure output prunes at once")
     assertExact(base, "severity > 800")
+    // and a control-file merge carries every file's stats
+    IdempotentSink.writeBatch(batchDf(7), base, route, region, acct,
+      batchId = 10L, filesPerDay = 1)
+    assert(IdempotentSink.compactCommits(fs, tableDir) == 2)
+    assert(IdempotentSink.committedFiles(fs, tableDir).size == erased + 1)
+    assert(keptCount(base, "severity < 50") == 1, "merged entries keep their stats")
+    assertExact(base, "severity < 50")
+  }
+
+  test("a manifest without stats keeps its files; compactDataFiles gives them stats back") {
+    val base = mkBase()
+    writeBatches(base, 3)
+    stripStats(base)
+    val (fs, tableDir) = fsOf(base)
+    assert(keptCount(base, "severity > 250") == 3, "files without stats are kept")
+    assertExact(base, "severity > 250")
+    // a partition predicate still prunes: the values come from the paths
+    assert(keptCount(base, "eventDay = '20231115'") == 0)
+    assert(IdempotentSink.compactDataFiles(spark, tableDir,
+      filesPerDay = 2, zorderCols = Seq("severity")) == 3)
+    val total = IdempotentSink.committedFiles(fs, tableDir).size
+    assert(total > 1)
+    assert(keptCount(base, "severity > 250") < total, "the rewrite recorded stats")
+    assertExact(base, "severity > 250")
+  }
+
+  test("pruning starts no Spark job; loadWhere runs only its scan's jobs") {
+    val base = mkBase()
+    writeBatches(base, 3)
+    val (fs, tableDir) = fsOf(base)
+    val cond = "severity > 250"
+    var kept: Seq[Path] = Nil
+    val pruneJobs = jobsIn { kept = OcsfTables.prunedFiles(spark, fs, tableDir, cond) }
+    assert(pruneJobs.isEmpty, s"prunedFiles started jobs $pruneJobs")
+    assert(kept.size == 1)
+    var pruned: DataFrame = null
+    val planJobs = jobsIn { pruned = OcsfTables.loadWhere(spark, base, route, cond) }
+    assert(planJobs.isEmpty, s"loadWhere started jobs before its scan: $planJobs")
+    var n = 0L
+    val scanJobs = jobsIn { n = pruned.count() }
+    var m = 0L
+    val fullJobs = jobsIn { m = OcsfTables.load(spark, base, route).filter(cond).count() }
+    assert(n == m && n == 13L)
+    assert(scanJobs.size == fullJobs.size,
+      s"loadWhere(...).count() ran ${scanJobs.size} jobs, the unpruned scan ${fullJobs.size}")
   }
 
   test("type guard: column-coercing comparisons never prune (string stats vs numeric literal)") {
@@ -158,7 +217,6 @@ class StatsIndexSpec extends SparkSpec {
       region, acct, batchId = 0L, filesPerDay = 1)
     IdempotentSink.writeBatch(digitBatch(1, Seq("7", "9")), base, route,
       region, acct, batchId = 1L, filesPerDay = 1)
-    assert(OcsfTables.buildStats(spark, base, route, Seq("code")) == 2)
     // numeric literal coerces the COLUMN: pruning must opt out (keep
     // both files) and the result must still be exact — "05" matches 5
     assert(keptCount(base, "code = 5") == 2)
@@ -171,7 +229,6 @@ class StatsIndexSpec extends SparkSpec {
     // LIKE over a NON-string column: opt out, stay exact
     val base2 = mkBase()
     writeBatches(base2, 2)
-    assert(OcsfTables.buildStats(spark, base2, route, Seq("severity")) == 2)
     assert(keptCount(base2, "severity LIKE '1%'") == 2)
     assertExact(base2, "severity LIKE '1%'")
   }
@@ -188,7 +245,6 @@ class StatsIndexSpec extends SparkSpec {
       batchId = 0L, filesPerDay = 1)
     IdempotentSink.writeBatch(batchDf(1), base, route, region, acct,
       batchId = 1L, filesPerDay = 1)
-    assert(OcsfTables.buildStats(spark, base, route, Seq("severity")) == 2)
     // all-null file excluded from any comparison
     assert(keptCount(base, "severity >= 0") == 1)
     assertExact(base, "severity >= 0")
@@ -197,52 +253,57 @@ class StatsIndexSpec extends SparkSpec {
     assertExact(base, "severity IS NULL")
     assert(keptCount(base, "severity IS NOT NULL") == 1)
     assertExact(base, "severity IS NOT NULL")
-    // changing the indexed column set forces a rebuild
-    assert(OcsfTables.buildStats(spark, base, route,
-      Seq("severity", "host")) == 2)
   }
 
-  test("100k-file manifest: prune is a distributed join, driver holds only survivors") {
+  /** A manifest entry line for final path `rel` carrying `severity`
+    * stats [lo, hi] over one row. */
+  private def statsEntry(rel: String, lo: Int, hi: Int): String =
+    s"g0/$rel\t100\t" + StatsIndex.encode(StatsIndex.FileStats(1L,
+      Map("severity" -> StatsIndex.ColStats(IntegerType, Some(lo), Some(hi), 0L))))
+
+  private def put(fs: org.apache.hadoop.fs.FileSystem, p: Path, body: String): Unit = {
+    val os = fs.create(p, true)
+    try os.write(body.getBytes("UTF-8")) finally os.close()
+  }
+
+  test("100k-entry manifest with stats: prune runs on the driver with no job, keeps the entry without stats") {
     // Synthetic metadata-scale case (no data files needed — prune never
-    // opens one): a 100k-row stats index and a 100k-entry committed
-    // list. The pruning join must complete and materialize ONLY the
-    // surviving handful on the driver — the shape that holds when the
-    // committed list is a month of a 100 TB feed.
-    import spark.implicits._
+    // opens one): one committed manifest of 100k entries carrying
+    // stats, plus one entry without. The prune must keep exactly the
+    // surviving handful and the stats-less entry, without a Spark job
+    // — the shape that holds when the committed list is a month of a
+    // 100 TB feed.
     val n = 100000
     val base = Files.createTempDirectory("statsidx-scale").toString
     val tableDir = new Path(s"file:$base/t")
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cb = new Path(tableDir, "_committed_batches")
     // per-file disjoint severity ranges [i*10, i*10+9]
-    spark.range(n).select(
-      // canonical normalizePath form: scheme + "://" + empty authority
-      concat(lit(s"file://$base/t/f"), lpad(col("id").cast("string"), 6, "0"))
-        .as("file"),
-      lit(64L).as("cnt"),
-      (col("id") * 10).cast("int").as("min_severity"),
-      (col("id") * 10 + 9).cast("int").as("max_severity"),
-      lit(0L).as("nulls_severity"))
-      .write.parquet(s"$base/t/_stats/index")
-    val committed = (0 until n).map(i => new Path(f"file:$base/t/f$i%06d")) :+
-      new Path(s"file:$base/t/unindexed-extra") // no stats row → always kept
+    val entries = (0 until n).map(i => statsEntry(f"f$i%06d", i * 10, i * 10 + 9)) :+
+      "g0/unindexed-extra\t100" // no stats → always kept
+    put(fs, new Path(cb, "0.manifest"),
+      (s"#graft-manifest files=${n + 1}" +: entries :+ "#end").mkString("\n"))
+    put(fs, new Path(cb, "0.committed"), "")
+    val committed = IdempotentSink.committedFiles(fs, tableDir)
+    assert(committed.size == n + 1)
     // predicate touches the top 3 files' ranges only
     val lo = (n - 3) * 10
-    val kept = StatsIndex.prune(spark, fs, tableDir, committed,
-      s"severity >= $lo")
+    var kept: Seq[Path] = Nil
+    val jobs = jobsIn { kept = OcsfTables.prunedFiles(spark, fs, tableDir, s"severity >= $lo") }
+    assert(jobs.isEmpty, s"the prune started jobs $jobs")
     assert(kept.map(_.getName).toSet ==
       Set(f"f${n - 3}%06d", f"f${n - 2}%06d", f"f${n - 1}%06d",
         "unindexed-extra"),
-      s"expected 3 surviving indexed files + the unindexed one, got " +
+      s"expected 3 surviving files with stats + the one without, got " +
         s"${kept.size}: ${kept.take(8).mkString(", ")}")
     // and an unprunable predicate still keeps everything (no silent drop)
-    assert(StatsIndex.prune(spark, fs, tableDir, committed,
+    assert(OcsfTables.prunedFiles(spark, fs, tableDir,
       s"pmod(severity, 7) = 3").size == committed.size)
   }
 
   test("prunedFiles is sound: every file with a matching row survives the prune") {
     val base = mkBase()
     writeBatches(base, 3)
-    assert(OcsfTables.buildStats(spark, base, route, Seq("severity", "host")) == 3)
     val (fs, tableDir) = fsOf(base)
     val conds = Seq("severity > 250", "severity >= 90 AND severity < 140",
       "severity IN (5, 105)", "host LIKE 'h1%'", "severity < 50 OR severity > 250",
@@ -288,26 +349,27 @@ class StatsIndexSpec extends SparkSpec {
 
   test("a 120k-entry commit log resolves and prunes on the driver") {
     // metadata-scale case: the file universe exists ONLY in manifests
-    // (no physical data files needed for the metadata path); the
-    // driver parses every manifest, excludes the superseded pair, and
-    // the prune join collects only the survivors; compactCommits then
-    // folds the same log
+    // (no physical data files needed for the metadata path), every
+    // entry carrying its stats; the driver parses every manifest,
+    // excludes the superseded pair, and the prune keeps only the
+    // survivors; compactCommits then folds the same log, stats included
     val started = System.nanoTime()
     val base = Files.createTempDirectory("dlist").toString
     val tableDir = new Path(s"file:$base/t")
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cb = new Path(tableDir, "_committed_batches")
     fs.mkdirs(cb)
-    def put(p: Path, body: String): Unit = {
-      val os = fs.create(p, true)
-      try os.write(body.getBytes("UTF-8")) finally os.close()
-    }
+    def put(p: Path, body: String): Unit = StatsIndexSpec.this.put(fs, p, body)
     val nManifests = 12
     val per = 10000
     def rel(m: Int, i: Int) =
       f"eventDay=2023-11-${m + 1}%02d/part-$m-$i%05d.parquet"
+    // per-file disjoint severity points; the fold's files sit at severity -1
+    var entryBytes, statsBytes = 0L
     (0 until nManifests).foreach { m =>
-      val entries = (0 until per).map(i => s"g0/${rel(m, i)}\t100")
+      val entries = (0 until per).map(i => statsEntry(rel(m, i), m * per + i, m * per + i))
+      entryBytes += entries.map(_.split('\t').take(2).mkString("\t").length + 1).sum
+      statsBytes += entries.map(_.length + 1).sum
       put(new Path(cb, s"$m.manifest"),
         (s"#graft-manifest files=$per" +: entries :+ "#end").mkString("\n"))
       put(new Path(cb, s"$m.committed"), "")
@@ -318,7 +380,7 @@ class StatsIndexSpec extends SparkSpec {
     put(new Path(cb, "50.manifest"),
       ("#graft-manifest files=500" +: oldEntries :+ "#end").mkString("\n"))
     put(new Path(cb, "50.committed"), "")
-    val foldEntries = (0 until 100).map(i => s"c/fold/f$i.parquet\t1")
+    val foldEntries = (0 until 100).map(i => statsEntry(s"fold/f$i.parquet", -1, -1))
     put(new Path(cb, "compact-0.manifest"),
       (Seq("#graft-manifest files=100", "#supersedes 50") ++
         foldEntries :+ "#end").mkString("\n"))
@@ -327,25 +389,6 @@ class StatsIndexSpec extends SparkSpec {
     assert(committed.size == nManifests * per + 100)
     assert(!committed.exists(_.toString.contains("/dead/")),
       "superseded pair's entries leaked into the contract")
-    // hand-written stats index covering EVERY file: per-file disjoint
-    // severity points; the fold's files sit at severity -1
-    val baseKey = IdempotentSink.normalizePath(fs, tableDir)
-    import spark.implicits._
-    val idxMain = spark.range(nManifests.toLong * per).select(
-      concat(lit(baseKey + "/"),
-        expr(s"printf('eventDay=2023-11-%02d/part-%d-%05d.parquet', " +
-          s"CAST(id / $per AS INT) + 1, CAST(id / $per AS INT), " +
-          s"CAST(id % $per AS INT))")).as("file"),
-      lit(1L).as("cnt"),
-      col("id").cast("int").as("min_severity"),
-      col("id").cast("int").as("max_severity"),
-      lit(0L).as("nulls_severity"))
-    val idxFold = spark.range(100).select(
-      concat(lit(baseKey + "/fold/f"), col("id").cast("string"),
-        lit(".parquet")).as("file"),
-      lit(1L).as("cnt"), lit(-1).as("min_severity"),
-      lit(-1).as("max_severity"), lit(0L).as("nulls_severity"))
-    idxMain.union(idxFold).write.parquet(s"$base/t/_stats/index")
     val lo = nManifests * per - 2 // top 2 files only
     val survivors = OcsfTables.prunedFiles(spark, fs, tableDir, s"severity >= $lo")
     assert(survivors.size == 2,
@@ -364,7 +407,12 @@ class StatsIndexSpec extends SparkSpec {
     assert(folded.size == committed.size && folded.toSet == committed.toSet)
     assert(!folded.exists(_.toString.contains("/dead/")),
       "superseded pair's entries leaked into the folded contract")
+    // the fold carried every entry's stats
+    assert(OcsfTables.prunedFiles(spark, fs, tableDir, s"severity >= $lo").toSet ==
+      survivors.toSet)
     info(f"120k-entry log: written, resolved, pruned and folded in " +
-      f"${(System.nanoTime() - started) / 1e9}%.1f s")
+      f"${(System.nanoTime() - started) / 1e9}%.1f s; manifest bytes per entry " +
+      f"${entryBytes.toDouble / (nManifests * per)}%.1f without stats, " +
+      f"${statsBytes.toDouble / (nManifests * per)}%.1f with severity stats")
   }
 }

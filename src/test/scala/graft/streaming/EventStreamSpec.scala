@@ -138,7 +138,7 @@ class EventStreamSpec extends SparkSpec {
     assert(rows == Seq("e0", "e1", "e2"))
   }
 
-  test("streaming maintenance keeps the stats index current; loadWhere stays exact") {
+  test("every streamed batch prunes as soon as it commits; loadWhere stays exact") {
     val landing = Files.createTempDirectory("stream-stats")
     val out     = Files.createTempDirectory("stream-stats-out")
     val ckpt    = Files.createTempDirectory("stream-stats-ckpt")
@@ -152,18 +152,22 @@ class EventStreamSpec extends SparkSpec {
           1700000000000L + b * 3600000L + i * 1000L)))
       val q = EventStream.start(spark, landing.toString, out.toString,
         ckpt.toString, "us-east-1", "123456789012", routes,
-        Trigger.AvailableNow(), compactEvery = 2,
-        statsCols = Seq("time"))
+        Trigger.AvailableNow(), compactEvery = 2)
       q.awaitTermination(180000)
     }
-    // the maintenance slot fired at batch 2 and indexed what was
-    // committed then; files landed after stay unindexed (and readable)
+    // the maintenance slot folded batches 0-1 at batch 2; every file,
+    // the folded ones and batch 2's, carries its time stats
     val tableDir = new org.apache.hadoop.fs.Path(
       out.toString + "/dns_activity")
     val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(tableDir, "_stats/index")),
-      "in-stream maintenance must have built the index")
-    // exactness under the streamed index: loadWhere == load().filter
+    val total = graft.ocsf.IdempotentSink.committedFiles(fs, tableDir).size
+    def kept(c: String) = graft.ocsf.OcsfTables.prunedFiles(spark, fs, tableDir, c).size
+    assert(total == 3, s"$total committed files")
+    assert(kept("time < timestamp'2020-01-01 00:00:00'") == 0,
+      "every file must prune on its commit-time stats")
+    assert(kept("time >= timestamp'2020-01-01 00:00:00'") == total)
+    assert(kept("time < timestamp'2023-11-14 22:45:00'") < total)
+    // exactness under the streamed stats: loadWhere == load().filter
     // for a none-matching, a some-matching, and an all-matching range
     // (counts left to the filter itself — session-timezone-agnostic)
     def uidsWhere(c: String) =
@@ -179,11 +183,6 @@ class EventStreamSpec extends SparkSpec {
       assert(uidsWhere(c) == uidsFull(c), s"loadWhere($c) diverged")
     }
     assert(uidsWhere("time IS NOT NULL").size == 12, "all rows reachable")
-    // a follow-up incremental refresh indexes only the straggler files
-    val scanned = graft.ocsf.StatsIndex.build(spark, tableDir, Seq("time"))
-    val total = graft.ocsf.IdempotentSink.committedFiles(fs, tableDir).size
-    assert(scanned < total && scanned >= 0,
-      s"refresh must be incremental (scanned=$scanned of $total)")
   }
 
   test("fan-out replays a crashed batch without duplicating committed routes") {
