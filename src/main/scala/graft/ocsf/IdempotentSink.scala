@@ -22,7 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     a process-wide generation counter per (table, batch), so a
   *     replayed attempt in the same JVM never shares a staging path
   *     with a timed-out attempt it superseded — the two bulk writes
-  *     cannot interleave on the same files.
+  *     cannot interleave on the same files. The write leaves no
+  *     `_SUCCESS` marker: the manifest below is the commit.
   *  2. MANIFEST — atomically publish the staged file list WITH SIZES
   *     and each file's stats, read from its footer ([[StatsIndex]]: they
   *     commit with the file, so a reader's prune is never stale)
@@ -270,59 +271,93 @@ object IdempotentSink {
           "by a newer replay of the same batch; aborting without publishing")
   }
 
+  /** A batch pair on disk, as [[runAttempt]] probes it. */
+  private sealed trait PairState
+  private case object Absent extends PairState
+  private case object Torn extends PairState
+  private final case class Published(entries: Seq[(String, Long)]) extends PairState
+  private case object Committed extends PairState
+
   /** The body of one attempt at a fixed generation. Package-private
-    * for the superseded-attempt spec. */
+    * for the superseded-attempt spec. Unlocked, it returns at once if
+    * the pair is committed, and stages the route's frame ([[stage]])
+    * unless a valid manifest is already on disk. Then ONE lock section
+    * runs: the fence, a fresh probe of the pair (the committed-marker
+    * check), adopt the manifest on disk or publish its own, promote,
+    * mark ([[commit]]), evict. What it promotes is what it holds in
+    * memory: the manifest it publishes is never read back. */
   private[ocsf] def runAttempt(df: DataFrame, fs: FileSystem, tableDir: Path,
                                route: String, region: String,
                                accountId: String, pair: String,
                                filesPerDay: Int, gen: Long): Unit = {
     val key = attemptKey(fs, tableDir, pair)
-    val committed = new Path(tableDir, s"_committed_batches/$pair.committed")
     val manifest = new Path(tableDir, s"_committed_batches/$pair.manifest")
     val batchStaging = new Path(tableDir, s"_staging/batch_$pair")
-    def currentManifest(): Option[Seq[(String, Long)]] =
-      if (fs.exists(manifest)) readManifestFull(fs, manifest).map(_.entries) else None
-    if (fs.exists(committed)) {
-      // already done: sweep any staging dir a pre-commit crash (or a
-      // straggling superseded attempt) orphaned, then no-op
-      fs.delete(batchStaging, true)
-      evict(key)
-      return
-    }
-    if (currentManifest().isEmpty) {
-      val genDir = new Path(batchStaging, s"g$gen")
-      OcsfSink.partitionedFrame(df, region, accountId, filesPerDay).write
-        .mode("overwrite")
-        .partitionBy(OcsfSink.PartitionCols: _*)
-        .parquet(genDir.toString)
-      val entries = listRelative(fs, genDir)
-        .map { case (rel, len) => (s"g$gen/$rel", len) }
-      val stats = stagedStats(fs, batchStaging, entries)
-      lockFor(key).synchronized {
-        checkCurrent(key, gen, route, pair)
-        if (currentManifest().isEmpty) {
-          // a torn manifest from a crashed non-atomic publish blocks
-          // the write-once rename: discard it before republishing
-          if (fs.exists(manifest)) fs.delete(manifest, false)
-          writeAtomic(fs, manifest, manifestBody(entries, stats))
-        }
-      }
-    }
+    // a marker is only ever published after its manifest
+    def probe(): PairState =
+      if (!fs.exists(manifest)) Absent
+      else if (fs.exists(new Path(tableDir, s"_committed_batches/$pair.committed"))) Committed
+      else readManifestFull(fs, manifest).fold[PairState](Torn)(md => Published(md.entries))
+    val seen = probe()
+    // already done: sweep any staging dir a pre-commit crash (or a
+    // straggling superseded attempt) orphaned, then no-op
+    if (seen == Committed) { fs.delete(batchStaging, true); evict(key); return }
+    val staged = Option.unless(seen.isInstanceOf[Published])(stage(fs,
+      OcsfSink.partitionedFrame(df, region, accountId, filesPerDay), batchStaging, s"g$gen"))
     lockFor(key).synchronized {
       checkCurrent(key, gen, route, pair)
-      if (fs.exists(committed)) {
-        fs.delete(batchStaging, true); evict(key); return
+      // probe again: the attempt this one superseded may have
+      // published or committed since, and a manifest is write-once
+      probe() match {
+        case Committed => fs.delete(batchStaging, true)
+        case Published(entries) => commit(fs, tableDir, pair, route, entries, None, Some(batchStaging))
+        case state =>
+          val (entries, stats) = staged.getOrElse(throw new IllegalStateException(
+            s"manifest gone before commit: $manifest (route=$route batch=$pair)"))
+          // a torn manifest from a crashed non-atomic publish blocks
+          // the write-once rename: discard it before republishing
+          if (state == Torn) fs.delete(manifest, false)
+          commit(fs, tableDir, pair, route, entries, Some(manifestBody(entries, stats)),
+            Some(batchStaging))
       }
-      val entries = currentManifest().getOrElse(throw new IllegalStateException(
-        s"manifest unreadable after publish: $manifest (route=$route batch=$pair)"))
-      entries.foreach { case (rel, len) =>
-        promoteOne(fs, batchStaging, tableDir, rel, len, route, pair)
-      }
-      writeAtomic(fs, committed, "")
-      fs.delete(batchStaging, true)
       evict(key)
     }
-    ()
+  }
+
+  /** Writes `rows` under `root/<attempt>/` partitioned by region,
+    * accountId and eventDay, lists it once and reads each file's footer
+    * stats once: the entries relative to `root`, and their stats by
+    * final relative path (none for an unreadable footer). No `_SUCCESS`:
+    * the dir is private to one attempt, and the manifest, published only
+    * after the job succeeded, is the commit. Algorithm 1 is pinned: on
+    * Hadoop 3.4 algorithm 2's task commit merges file by file, which
+    * cost a route commit 60 + 24·F filesystem calls against 58 + 16·F. */
+  private def stage(fs: FileSystem, rows: DataFrame, root: Path, attempt: String)
+      : (Seq[(String, Long)], Map[String, StatsIndex.FileStats]) = {
+    val dir = new Path(root, attempt)
+    rows.write.mode("overwrite")
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "1")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy(OcsfSink.PartitionCols: _*)
+      .parquet(dir.toString)
+    val entries = listRelative(fs, dir).map { case (rel, len) => (s"$attempt/$rel", len) }
+    (entries, entries.flatMap { case (rel, len) =>
+      StatsIndex.footerStats(fs.getConf, new Path(root, rel), len).map(finalRelPath(rel) -> _)
+    }.toMap)
+  }
+
+  /** The commit of a batch and of a fold: publish `manifest` (None: a
+    * valid one on disk names `staged`), promote `staged` from `staging`,
+    * publish the marker, drop `staging` (None: nothing was staged). */
+  private def commit(fs: FileSystem, tableDir: Path, pair: String, route: String,
+                     staged: Seq[(String, Long)], manifest: Option[String],
+                     staging: Option[Path]): Unit = {
+    val cb = new Path(tableDir, "_committed_batches")
+    manifest.foreach(writeAtomic(fs, new Path(cb, s"$pair.manifest"), _))
+    for (dir <- staging; (rel, len) <- staged)
+      promoteOne(fs, dir, tableDir, rel, len, route, pair)
+    writeAtomic(fs, new Path(cb, s"$pair.committed"), "")
+    staging.foreach(fs.delete(_, true))
   }
 
   /** Move one staged file to its final path and VERIFY the landed
@@ -334,26 +369,33 @@ object IdempotentSink {
     * check runs BEFORE any destination delete: if the length
     * mismatches and staging is gone too, the landed bytes are the only
     * copy left — preserve them and fail loudly rather than deleting
-    * the evidence and wedging every replay on "staged file lost". */
-  private def promoteOne(fs: FileSystem, batchStaging: Path, tableDir: Path,
+    * the evidence and wedging every replay on "staged file lost". One
+    * `getFileStatus` probes the destination before the rename and one
+    * after (FileNotFound = absent); the source is probed only before
+    * deleting a torn destination or after a failed rename (a rename of
+    * a missing source fails by FileNotFound on the local filesystem). */
+  private def promoteOne(fs: FileSystem, staging: Path, tableDir: Path,
                          rel: String, len: Long, route: String,
                          batch: String): Unit = {
-    val src = new Path(batchStaging, rel)
+    val src = new Path(staging, rel)
     // drop the g<gen>/ attempt component: files land at the same
     // table-relative path whichever generation staged them
     val dst = new Path(tableDir, finalRelPath(rel))
-    def dstComplete: Boolean =
-      fs.exists(dst) && fs.getFileStatus(dst).getLen == len
-    if (dstComplete) return
-    if (!fs.exists(src))
-      throw new IllegalStateException(
-        s"staged file lost before promote: $rel (route=$route batch=$batch)" +
-          (if (fs.exists(dst)) s"; incomplete destination $dst PRESERVED for inspection"
-           else ""))
-    if (fs.exists(dst)) fs.delete(dst, false) // torn copy residue
+    def landed: Option[Long] =
+      try Some(fs.getFileStatus(dst).getLen)
+      catch { case _: java.io.FileNotFoundException => None }
+    def lost(detail: String) = new IllegalStateException(
+      s"staged file lost before promote: $rel (route=$route batch=$batch)$detail")
+    val before = landed
+    if (before.contains(len)) return
+    if (before.isDefined) { // torn copy residue
+      if (!fs.exists(src)) throw lost(s"; incomplete destination $dst PRESERVED for inspection")
+      fs.delete(dst, false)
+    }
     fs.mkdirs(dst.getParent)
-    fs.rename(src, dst)
-    if (!dstComplete)
+    val moved = try fs.rename(src, dst) catch { case _: java.io.FileNotFoundException => false }
+    if (!moved && !fs.exists(src)) throw lost("")
+    if (!landed.contains(len))
       throw new IllegalStateException(
         s"promote failed or landed incomplete: $src -> $dst " +
           s"(route=$route batch=$batch)")
@@ -664,9 +706,11 @@ object IdempotentSink {
     * committed pairs of the settled view `log`) by one fresh pair
     * `<prefix>-<k>` naming `restaged`'s rows, written under
     * `_staging/<prefix>_<k>/`, plus the `carried` files, which stay
-    * where they are. In order, each step atomic or idempotent:
+    * where they are. Steps 1 to 4 are a batch's own [[stage]] and
+    * [[commit]]. In order, each step atomic or idempotent:
     *  1. STAGE `restaged` partitioned by region/accountId/eventDay, and
-    *     read each staged file's footer stats.
+    *     read each staged file's footer stats. The dir is private to
+    *     this fold: [[settle]] dropped any a crashed fold left.
     *  2. MANIFEST: publish the staged files with their stats and the
     *     carried files with the stats their input entries recorded,
     *     `#supersedes` = the inputs (the settled view holds no ghost to
@@ -689,27 +733,19 @@ object IdempotentSink {
                    inputs: Seq[(String, ManifestData)],
                    restaged: Option[DataFrame], carried: Seq[(String, Long)],
                    layout: Option[String] = None): Unit = {
-    val cb = new Path(tableDir, "_committed_batches")
     val k = log.nextK(prefix)
     val stagingRoot = new Path(tableDir, s"_staging/${prefix}_$k")
-    val staged = restaged.toSeq.flatMap { rows =>
-      rows.write.mode("overwrite").partitionBy(OcsfSink.PartitionCols: _*)
-        .parquet(new Path(stagingRoot, "c").toString)
-      listRelative(fs, stagingRoot)
-    }
-    // re-anchor under a dummy attempt component so finalRelPath holds
+    val (staged, stagedStats) = restaged.map(stage(fs, _, stagingRoot, "c"))
+      .getOrElse((Nil, Map.empty[String, StatsIndex.FileStats]))
+    // re-anchor under the staged files' attempt component so finalRelPath holds
     val entries = staged ++ carried
       .map { case (rel, len) => (s"c/${finalRelPath(rel)}", len) }.distinct
-    val stats = inputs.flatMap(_._2.stats).toMap ++ stagedStats(fs, stagingRoot, staged)
+    val stats = inputs.flatMap(_._2.stats).toMap ++ stagedStats
     val maxBatch = inputs.flatMap { case (n, md) => n.toLongOption ++ md.maxBatch }
       .maxOption
-    writeAtomic(fs, new Path(cb, s"$prefix-$k.manifest"),
-      manifestBody(entries, stats, inputs.map(_._1).toSet, maxBatch, layout))
-    staged.foreach { case (rel, len) =>
-      promoteOne(fs, stagingRoot, tableDir, rel, len, prefix, k.toString)
-    }
-    writeAtomic(fs, new Path(cb, s"$prefix-$k.committed"), "")
-    if (restaged.isDefined) fs.delete(stagingRoot, true)
+    commit(fs, tableDir, s"$prefix-$k", prefix, staged,
+      Some(manifestBody(entries, stats, inputs.map(_._1).toSet, maxBatch, layout)),
+      restaged.map(_ => stagingRoot))
     val keep = entries.map { case (rel, _) =>
       fs.makeQualified(new Path(tableDir, finalRelPath(rel)))
     }.toSet
@@ -1040,18 +1076,8 @@ object IdempotentSink {
   private[ocsf] def normalizePath(fs: FileSystem, s: String): String =
     normalizePath(fs, new Path(new java.net.URI(s)))
 
-  /** The footer stats of `staged` files (paths relative to `root`,
-    * under one attempt component), keyed by final relative path: one
-    * driver open per file. A file whose footer cannot be read gets no
-    * stats; its entry is kept by every prune. */
-  private def stagedStats(fs: FileSystem, root: Path,
-                          staged: Seq[(String, Long)]): Map[String, StatsIndex.FileStats] =
-    staged.flatMap { case (rel, len) =>
-      StatsIndex.footerStats(fs.getConf, new Path(root, rel), len).map(finalRelPath(rel) -> _)
-    }.toMap
-
   /** Data files under `root` with their lengths, as `/`-relative
-    * paths, skipping Spark's `_SUCCESS`/hidden bookkeeping files. */
+    * paths, skipping `_`- and `.`-prefixed bookkeeping files. */
   private def listRelative(fs: FileSystem, root: Path): Seq[(String, Long)] = {
     val rootUri = fs.makeQualified(root).toUri
     val it = fs.listFiles(root, true)
@@ -1171,7 +1197,7 @@ object IdempotentSink {
   /** Publish a small control file atomically: existence implies
     * complete content (write to a dot-temp sibling, then rename). */
   private def writeAtomic(fs: FileSystem, dst: Path, content: String): Unit = {
-    fs.mkdirs(dst.getParent)
+    // `create` makes the missing parent dirs itself
     val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
     val os = fs.create(tmp, true)
     try os.write(content.getBytes(StandardCharsets.UTF_8)) finally os.close()

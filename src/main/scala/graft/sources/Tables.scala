@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
@@ -53,18 +54,19 @@ object Tables {
       val conf = spark.sessionState.newHadoopConf()
       val p = new Path(path)
       val fs = p.getFileSystem(conf)
-      val file: Option[Path] =
-        if (fs.getFileStatus(p).isDirectory) {
+      val status = fs.getFileStatus(p)
+      val file: Option[FileStatus] =
+        if (!status.isDirectory) Some(status)
+        else {
           val it = fs.listFiles(p, true)
-          var found: Option[Path] = None
-          while (found.isEmpty && it.hasNext) {
-            val f = it.next().getPath
-            if (f.getName.endsWith(".parquet")) found = Some(f)
-          }
-          found
-        } else Some(p)
+          Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+            .find(_.getPath.getName.endsWith(".parquet"))
+        }
       file.exists { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        // read options over `conf`: the default ones build a fresh
+        // Hadoop Configuration per open
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+          HadoopReadOptions.builder(conf, f.getPath).build())
         try {
           val schema = reader.getFooter.getFileMetaData.getSchema
           schema.containsField("ts") && {

@@ -26,9 +26,8 @@ import org.apache.hadoop.util.Progressable
   * but the commit-log reads — each LIST of a `_committed_batches` dir
   * and each open of a `*.manifest` — are logged for
   * [[CommitLogReadsSpec]], and every call, metadata reads (`exists`,
-  * `getFileStatus`, `listStatus`, `open`), `setPermission` and the
-  * one-argument `mkdirs` beside the counted mutations, for
-  * [[CommitCallsSpec]].
+  * `getFileStatus`, `listStatus`, `open`) and `setPermission` beside
+  * the counted mutations, for [[CommitCallsSpec]].
   *
   * The counter is JVM-global on purpose: in local mode the driver and
   * every executor thread share it, so a budget of k crashes the
@@ -78,8 +77,11 @@ class FaultFs extends RawLocalFileSystem {
     super.setPermission(p, permission)
   }
 
+  // RawLocalFileSystem implements this overload DIRECTLY too (it does
+  // not funnel through the FsPermission variant below) and it is the
+  // one the sink's promote and every local `create` take
   override def mkdirs(f: Path): Boolean = {
-    FaultFs.call("mkdirs", f)
+    FaultFs.tick("mkdirs", f)
     super.mkdirs(f)
   }
 

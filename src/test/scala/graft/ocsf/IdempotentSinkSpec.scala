@@ -154,6 +154,27 @@ class IdempotentSinkSpec extends SparkSpec {
     assert(tableUids(base) == Seq("e1", "e2"))
   }
 
+  test("a published, unmarked pair whose staged file is gone fails the replay loudly") {
+    val base = Files.createTempDirectory("idem-lost")
+    IdempotentSink.writeBatch(df("e1" -> "2023-11-14", "e2" -> "2023-11-15"), base.toString,
+      "DNS Activity", region, acct, batchId = 0L)
+    // the pair is published but unmarked, one file never landed, and
+    // its staging is gone: nothing is left to promote it from
+    val table = base.resolve("dns_activity")
+    val marker = table.resolve("_committed_batches/0.committed")
+    Files.delete(marker)
+    val landed = Files.walk(table).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
+    assert(landed.size == 2)
+    Files.delete(landed.last)
+    val e = intercept[IllegalStateException] {
+      IdempotentSink.writeBatch(df("e1" -> "2023-11-14", "e2" -> "2023-11-15"), base.toString,
+        "DNS Activity", region, acct, batchId = 0L)
+    }
+    assert(e.getMessage.contains("staged file lost before promote"), e.getMessage)
+    assert(!Files.exists(marker), "a pair missing a file must not be marked committed")
+  }
+
   test("commit evicts bookkeeping: the generation/lock maps do not grow across batches") {
     val base = Files.createTempDirectory("idem-evict")
     (0L until 6L).foreach { b =>

@@ -98,6 +98,7 @@ class SinkCrashMatrixSpec extends SparkSpec {
       IdempotentSink.writeBatch(df(rows: _*), freshBase(), route,
         region, acct, batchId = 0L)
     }
+    info(s"$n cut points")
     assert(n >= 8, s"expected a rich mutation sequence, got $n ops: $trace")
     // the matrix must reach INSIDE the stage write: executor-side
     // parquet creates under _staging are counted mutations too
@@ -154,6 +155,7 @@ class SinkCrashMatrixSpec extends SparkSpec {
       assert(IdempotentSink.compactCommits(fs,
         new Path(s"$c/dns_activity")) == 3)
     }
+    info(s"$n cut points")
     assert(n >= 4, s"expected several control mutations, got $n")
     (0L until n).foreach { k =>
       val c = copyOf(proto)
@@ -197,6 +199,7 @@ class SinkCrashMatrixSpec extends SparkSpec {
       val c = copyOf(proto)
       assert(OcsfTables.deleteWhere(spark, c, route, cond) == 2L)
     }
+    info(s"$n cut points")
     assert(n >= 6, s"expected a real rewrite sequence, got $n")
     (0L until n).foreach { k =>
       val c = copyOf(proto)
@@ -230,6 +233,7 @@ class SinkCrashMatrixSpec extends SparkSpec {
       IdempotentSink.compactDataFiles(spark,
         new Path(s"$c/dns_activity"), filesPerDay = 1)
     }
+    info(s"$n cut points")
     assert(n >= 6, s"expected a real data rewrite, got $n")
     (0L until n).foreach { k =>
       val c = copyOf(proto)
@@ -268,6 +272,7 @@ class SinkCrashMatrixSpec extends SparkSpec {
       assert(IdempotentSink.compactDataFiles(spark,
         new Path(s"${copyOf(proto)}/dns_activity")) == 1)
     }
+    info(s"$n cut points")
     (0L until n).foreach { k =>
       val c = copyOf(proto)
       val td = new Path(s"$c/dns_activity")
@@ -325,6 +330,7 @@ class SinkCrashMatrixSpec extends SparkSpec {
       assert(IdempotentSink.vacuum(spark,
         new Path(s"${copyOf(proto)}/dns_activity")) == (1, 1))
     }
+    info(s"$n cut points")
     assert(n >= 5, s"expected settle, sweep and tmp deletes, got $n")
     (0L until n).foreach { k =>
       val c = copyOf(proto)
@@ -384,6 +390,7 @@ class SinkCrashMatrixSpec extends SparkSpec {
     // direction 2: the backfill crashes, the stream lands, the
     // backfill replays — namespacing must isolate identically
     val (n2, _) = measure(backfillWrite(freshBase()))
+    info(s"$n1 + $n2 cut points")
     (0L until n2).foreach { k =>
       val base = freshBase()
       crashAt(k, "backfill-then-stream")(backfillWrite(base))
